@@ -45,6 +45,7 @@ from .codec import varbyte_decode
 from .reader import (
     BATCH_RESULT_SCHEMA,
     RESULT_SCHEMA,
+    TOPK_SCHEMA,
     CompressedIndex,
     Tombstones,
     _batch_term_sets,
@@ -656,11 +657,8 @@ class MultiIndex:
             )
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_group_kernel(
@@ -727,11 +725,8 @@ class MultiIndex:
             )
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_collapse_kernel(
@@ -820,9 +815,8 @@ class MultiIndex:
 
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], "conv_id string, turn_idx int")
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], "conv_id string, turn_idx int")
         fetch_terms = _fetch_terms(spec)
         idf = self.idf_map(spec.score_terms)
         kernel = _make_matches_kernel(
@@ -862,11 +856,8 @@ class MultiIndex:
 
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_scored_matches_kernel(
@@ -915,9 +906,8 @@ class MultiIndex:
 
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         excl = self._effective_exclude(tombstones)
         for i in reversed(range(len(self.segments))):
@@ -937,7 +927,7 @@ class MultiIndex:
                     self.spark, rows, self.idf_map(spec.score_terms),
                     self.df_map(spec.score_terms), spec, self.avgdl,
                 )
-        return empty
+        return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
 
     def facet_counts(
         self,
@@ -984,11 +974,10 @@ class MultiIndex:
             (i, self._resolve_spec(sp), kk)
             for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
         ]
-        empty = self.spark.createDataFrame(
-            [], "query_id int, conv_id string, turn_idx int, score double"
-        )
         if not specs:
-            return empty
+            return self.spark.createDataFrame(
+                [], "query_id int, conv_id string, turn_idx int, score double"
+            )
         fetch_terms, score_terms = _batch_term_sets(specs)
         merged_idf = self.idf_map(sorted(score_terms))
         # per-query maps carry that query's boosts (plists stay built

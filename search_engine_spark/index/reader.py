@@ -16,6 +16,19 @@ Bucket pruning is the Spark analog of the reference's B-tree index seek
 touches only ``pmod(xxhash64(term), NB)`` partitions, never the full
 postings table.  Every stage is a DataFrame op; per-group kernels are the
 only Python, Arrow-batched.
+
+Driver-local branch (``topk``, ``match_count``, ``idf_map``)::
+
+    if no scope and Σ bytes(query's postings bucket files) ≤ LOCAL_BUDGET_BYTES:
+        pyarrow read of those files (term in fetch_terms)
+        pandas groupby(group) → the SAME kernel closure, per group
+        ≤ G·k candidates ⋈ their conv_rank rows of convs (pyarrow, filtered)
+        sort (score desc, conv_id, turn_idx), cut at k
+        createDataFrame(pandas, schema)   # Arrow local relation: 0 jobs
+
+The reader lists its postings/idf/convs files once, on first use.  The
+budget is a module constant; over-budget and scoped queries (and dense
+doc-id indexes) keep the Spark plan above unchanged.
 """
 
 from __future__ import annotations
@@ -64,7 +77,19 @@ from .kernels import (
 from .xxhash import term_bucket
 
 RESULT_SCHEMA = "doc_id long, score double"
+TOPK_SCHEMA = "conv_id string, turn_idx int, score double"
 RESULT_CACHE_SIZE = 500  # SearchController.java:35
+# Driver-local budget: a topk/match_count/idf_map whose pruned bucket
+# files total at most this many bytes runs in-process (pyarrow read +
+# the same group kernel, one thread) with zero Spark jobs; larger ones
+# take the Spark plan.  Measured on the md fixture, local[4] on 4 vCPUs (BASELINE.md
+# "Driver-local top-k"): the local path grows from 0.12 s at 1.5 MB to
+# 0.49 s at 8.4 MB and 2.2 s at 19 MB, while the Spark path pays ~0.9 s
+# of job overhead and spreads the kernels over the cores; they cross
+# between 19 and 22 MB.  More cores move that point down, so the budget
+# sits well below it, where the local path is still ~2x ahead at
+# local[4]; it also bounds what one query pulls through the driver.
+LOCAL_BUDGET_BYTES = 8 << 20
 
 
 
@@ -500,6 +525,49 @@ def _lru_topk(index, query_text: str, mode: str, k: int, algo: str) -> list:
     return rows
 
 
+def _data_files(table_dir: str) -> list[tuple[str, int]]:
+    """(path, bytes) of one directory's parquet files — Spark's hidden
+    ``_``/``.`` files (``_SUCCESS``, ``.crc``) skipped, as its reader
+    skips them."""
+    return [
+        (f.path, f.stat().st_size)
+        for f in os.scandir(table_dir)
+        if f.is_file() and not f.name.startswith(("_", "."))
+    ]
+
+
+def _bucket_files(table_dir: str) -> dict[int, list[tuple[str, int]]]:
+    """``bucket=N`` partition dirs of a postings/idf table → {N: files}."""
+    return {
+        int(d.name[len("bucket="):]): _data_files(d.path)
+        for d in os.scandir(table_dir)
+        if d.is_dir() and d.name.startswith("bucket=")
+    }
+
+
+def _topk_frame(spark: SparkSession, out: pd.DataFrame | None) -> DataFrame:
+    """A driver-held top-k (None: no rows) → DataFrame built from Arrow,
+    which Spark holds as a local relation: collecting it launches no job,
+    where rows from a Python list would launch one.  An EMPTY pandas
+    frame takes Spark's RDD fallback (one job) too, so no rows is a
+    one-row frame cut to zero."""
+    if out is None:
+        one = pd.DataFrame({"conv_id": [""], "turn_idx": pd.array([0], dtype="int32"),
+                            "score": [0.0]})
+        return spark.createDataFrame(one, TOPK_SCHEMA).limit(0)
+    return spark.createDataFrame(out, TOPK_SCHEMA)
+
+
+def _read_local(files: list[str], columns: list[str] | None, key: str, values: list) -> pd.DataFrame:
+    """Rows whose ``key`` is in ``values``, read from the given parquet
+    files on the driver (row groups pruned by their key statistics)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(
+        files, columns=columns, filters=[(key, "in", list(values))]
+    ).to_pandas()
+
+
 class CompressedIndex:
     """Reader over an index directory produced by :class:`IndexBuilder`."""
 
@@ -566,6 +634,10 @@ class CompressedIndex:
         self._idf = spark.read.schema("term string, df long, idf double, bucket int").parquet(
             self.paths.idf
         )
+        # the driver-local path's file listing, built on first use
+        # (:meth:`_local_files`) so opens — MultiIndex's per segment
+        # included — never pay for it
+        self._listing: dict | None = None
 
     def warm(self) -> None:
         """Materialize the lookup caches (convs/docmap).
@@ -603,8 +675,70 @@ class CompressedIndex:
         # no job launch (parity pinned by tests/test_xxhash.py)
         return sorted({term_bucket(t, self.num_buckets) for t in terms})
 
+    # -- driver-local execution --------------------------------------
+
+    def _local_files(self, table: str, terms: list[str]) -> list[str] | None:
+        """Files of ``table``'s (postings/idf) buckets holding ``terms``
+        when they total at most :data:`LOCAL_BUDGET_BYTES`, else None —
+        the query then takes the Spark plan.  Only conv_rank indexes on
+        the local filesystem run locally; the postings, idf and convs
+        dirs are listed once."""
+        if self._listing is None:
+            dirs = (self.paths.postings, self.paths.idf, self.paths.convs)
+            local = self.scheme == "conv_rank" and all(map(os.path.isdir, dirs))
+            self._listing = {
+                "postings": _bucket_files(self.paths.postings),
+                "idf": _bucket_files(self.paths.idf),
+                "convs": [p for p, _ in _data_files(self.paths.convs)],
+            } if local else {}
+        if not self._listing:
+            return None
+        files = [
+            f for b in self._buckets(terms) for f in self._listing[table].get(b, ())
+        ]
+        if sum(n for _, n in files) > LOCAL_BUDGET_BYTES:
+            return None
+        return [p for p, _ in files]
+
+    def _local_groups(self, fetch_terms: list[str], kernel) -> list[pd.DataFrame] | None:
+        """Driver-local executor: read the pruned postings with pyarrow,
+        group them by ``group`` in pandas and hand each group to the very
+        ``kernel`` closure ``applyInPandas`` would run.  Returns the
+        per-group outputs, or None when the query is over budget."""
+        files = self._local_files("postings", fetch_terms)
+        if not files:
+            return None if files is None else []
+        post = _read_local(files, None, "term", fetch_terms)
+        return [
+            kernel((g,), gdf.reset_index(drop=True))
+            for g, gdf in post.groupby("group", sort=True)
+        ]
+
+    def _topk_local(self, frames: list[pd.DataFrame], k: int) -> DataFrame:
+        """Local kernel outputs (≤ G·k candidates) → the labelled top-k.
+        Only the candidates' ``conv_rank`` rows of convs are read."""
+        cand = pd.concat(frames, ignore_index=True) if frames else None
+        if cand is None or cand.empty:
+            return _topk_frame(self.spark, None)
+        docs = cand["doc_id"].to_numpy(dtype=np.int64)
+        cand = cand.assign(
+            conv_rank=docs >> self.turn_bits,
+            turn_idx=(docs & ((1 << self.turn_bits) - 1)).astype(np.int32),
+        )
+        convs = _read_local(
+            self._listing["convs"], ["conv_id", "conv_rank"],
+            "conv_rank", np.unique(cand["conv_rank"]).tolist(),
+        )
+        return _topk_frame(self.spark, (
+            cand.merge(convs, on="conv_rank")
+            .sort_values(["score", "conv_id", "turn_idx"], ascending=[False, True, True])
+            .head(k)[["conv_id", "turn_idx", "score"]]
+        ))
+
     def idf_map(self, terms: list[str]) -> dict[str, float]:
-        """Bucket-pruned idf lookup; absent terms get df=0 idf (oracle parity)."""
+        """Bucket-pruned idf lookup; absent terms get df=0 idf (oracle
+        parity).  Within the driver-local budget the idf files are read
+        on the driver, with no Spark job."""
         import math
 
         uniq = sorted(set(terms))
@@ -612,14 +746,20 @@ class CompressedIndex:
             return {}
         missing = [t for t in uniq if t not in self._idf_cache]
         if missing:
-            buckets = self._buckets(missing)
-            rows = (
-                self._idf.filter(
-                    F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+            files = self._local_files("idf", missing)
+            if files is None:
+                rows = (
+                    self._idf.filter(
+                        F.col("bucket").isin(self._buckets(missing))
+                        & F.col("term").isin(missing)
+                    )
+                    .select("term", "idf", "df")
+                    .collect()
                 )
-                .select("term", "idf", "df")
-                .collect()
-            )
+            elif files:
+                rows = _read_local(files, ["term", "idf", "df"], "term", missing).to_dict("records")
+            else:
+                rows = []
             found = {r["term"]: (float(r["idf"]), int(r["df"])) for r in rows}
             absent = math.log((1.0 + self.n_docs) / 1.0) + 1.0
             for t in missing:
@@ -1008,9 +1148,8 @@ class CompressedIndex:
             )
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], "conv_id string, turn_idx int, score double")
         if spec is None:
-            return empty
+            return _topk_frame(self.spark, None)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         avgdl = self.avgdl
@@ -1025,6 +1164,10 @@ class CompressedIndex:
             scoped=scope is not None,
             after=self._resolve_after(search_after),
         )
+        if scope is None:
+            frames = self._local_groups(fetch_terms, kernel)
+            if frames is not None:
+                return self._topk_local(frames, k)
         post = self.postings_df(fetch_terms)
         # v5: single-sided grouped kernel — the only exchange carries the
         # bucket-pruned postings; doclens are inline in the blocks (the
@@ -1078,11 +1221,8 @@ class CompressedIndex:
             )
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_collapse_kernel(
@@ -1132,6 +1272,10 @@ class CompressedIndex:
             turn_bits=getattr(self, "turn_bits", TURN_BITS),
             scoped=scope is not None,
         )
+        if scope is None:
+            frames = self._local_groups(fetch_terms, kernel)
+            if frames is not None:
+                return sum(int(f["n"].sum()) for f in frames)
         post = self.postings_df(fetch_terms)
         if scope is not None:
             grouped = post.groupBy("group").cogroup(
@@ -1161,9 +1305,8 @@ class CompressedIndex:
         faceting and metadata joins.  Output is O(matches)."""
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], "conv_id string, turn_idx int")
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], "conv_id string, turn_idx int")
         fetch_terms = _fetch_terms(spec)
         idf = self.idf_map(spec.score_terms)
         kernel = _make_matches_kernel(
@@ -1198,11 +1341,8 @@ class CompressedIndex:
         is the same O(postings) class as :meth:`match_count`."""
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_scored_matches_kernel(
@@ -1297,18 +1437,17 @@ class CompressedIndex:
         so the kernel work is 1/num_groups of a full query's."""
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         if spec is None:
-            return empty
+            return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         coords = self._doc_coords(conv_id, turn_idx)
         if coords is None:
-            return empty
+            return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         group, doc_id = coords
         tomb = self._resolve_tomb(tombstones)
         if tomb is not None and not tomb.keep_mask(
             np.asarray([doc_id], dtype=np.int64), self.turn_bits
         )[0]:
-            return empty
+            return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         rows = self._explain_rows(spec, idf, self.avgdl, group, doc_id)
         return _assemble_explain(
@@ -1374,11 +1513,10 @@ class CompressedIndex:
             (i, self._resolve_spec(sp), kk)
             for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
         ]
-        empty = self.spark.createDataFrame(
-            [], "query_id int, conv_id string, turn_idx int, score double"
-        )
         if not specs:
-            return empty
+            return self.spark.createDataFrame(
+                [], "query_id int, conv_id string, turn_idx int, score double"
+            )
         fetch_terms, score_terms = _batch_term_sets(specs)
         merged_idf = self.idf_map(sorted(score_terms))
         # per-query maps carry that query's boosts (plists stay built

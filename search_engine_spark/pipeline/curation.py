@@ -412,9 +412,20 @@ def _global_offsets(
     #partitions rows), turn them into literal prefix offsets, then run a
     per-partition cumulative window.  Every stage is many-task; the only
     driver state is one long per partition.
+
+    The (row → ``_pid``) assignment is pinned the way
+    ``index.build.conv_ranks`` pins it: an explicit partition count (so
+    AQE cannot coalesce the range partitions differently per job) and a
+    local checkpoint before the totals collect, so the totals job and
+    the window job read ONE materialized assignment instead of
+    re-running the range sampling.  Offsets then depend only on the
+    data, not on shuffle-partition settings, AQE or re-execution.
     """
-    part = df.repartitionByRange(F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
+    p = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    part = (
+        df.repartitionByRange(p, F.col(order_col))
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
     )
     totals = {
         r["_pid"]: r["s"]

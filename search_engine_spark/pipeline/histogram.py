@@ -89,9 +89,10 @@ def date_histogram_pipeline(
 
     Scale shape: everything up to the histogram is the distributed
     match-set aggregation, and it runs EXACTLY ONCE — the bucket rows
-    are materialized (|buckets| is bounded by time-span / interval, a
-    chart-sized number, not a data volume) so the grid join and the
-    window pass run over a literal local frame instead of re-executing
+    are materialized by a local checkpoint (|buckets| is bounded by
+    time-span / interval, a chart-sized number, not a data volume) so
+    the grid join and the window pass read the checkpointed rows —
+    no driver round-trip — instead of re-executing
     the match-kernel lineage per branch (the naive lazy composition
     recomputes the full match scan for the min/max branch AND the join
     branch — visible in .explain as two FlatMapGroupsInPandas
@@ -105,8 +106,7 @@ def date_histogram_pipeline(
         index, transcripts, query_text, mode, interval,
         tombstones=tombstones, scope=scope, analyzed=analyzed, spec=spec,
     ).filter(F.col("bucket").isNotNull())
-    spark = transcripts.sparkSession
-    hist = spark.createDataFrame(base.collect(), schema=base.schema)
+    hist = base.localCheckpoint()
     if min_doc_count == 0:
         grid = (
             hist.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
@@ -207,8 +207,7 @@ def date_histogram_buckets(
         index, transcripts, query_text, mode, interval,
         tombstones=tombstones, scope=scope, analyzed=analyzed, spec=spec,
     ).filter(F.col("bucket").isNotNull())
-    spark = transcripts.sparkSession
-    hist = spark.createDataFrame(base.collect(), schema=base.schema)
+    hist = base.localCheckpoint()
     if min_doc_count == 0:
         grid = (
             hist.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))

@@ -49,3 +49,15 @@ def sm_oracle(sm_corpus):
     from search_engine_spark.oracle import build_oracle_index
 
     return build_oracle_index(sm_corpus)
+
+
+@pytest.fixture(scope="session")
+def sm_index_dir(spark, sm_parquet, tmp_path_factory):
+    """The sm index (4 groups), built once per session and shared by
+    every module that reads it as built; tests must not modify it."""
+    from search_engine_spark.config import BuildConfig
+    from search_engine_spark.index.build import build_index
+
+    out = str(tmp_path_factory.mktemp("sm_index") / "sm")
+    build_index(spark, spark.read.parquet(sm_parquet), out, BuildConfig(num_groups=4))
+    return out

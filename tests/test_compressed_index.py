@@ -13,18 +13,15 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.config import BuildConfig
 from search_engine_spark.corpus import REFERENCE_QUERIES
-from search_engine_spark.index.build import IndexBuilder, build_index
+from search_engine_spark.index.build import IndexBuilder
 from search_engine_spark.index.codec import varbyte_decode
 from search_engine_spark.index.reader import CompressedIndex
 from search_engine_spark.oracle import oracle_topk
 
 
 @pytest.fixture(scope="module")
-def built(spark, sm_parquet, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("index") / "sm")
-    transcripts = spark.read.parquet(sm_parquet)
-    paths = build_index(spark, transcripts, out, BuildConfig(num_groups=4))
-    return CompressedIndex(spark, out)
+def built(spark, sm_index_dir):
+    return CompressedIndex(spark, sm_index_dir)
 
 
 def _docmap(index):
@@ -102,13 +99,12 @@ def test_wand_equals_exact(built, qid):
         assert a["score"] == pytest.approx(b["score"], abs=1e-12)
 
 
-def test_resume_produces_identical_index(spark, sm_parquet, tmp_path_factory, sm_oracle):
+def test_resume_produces_identical_index(spark, sm_parquet, sm_index_dir, tmp_path_factory, sm_oracle):
     """Kill-after-2-groups + resume ≡ uninterrupted build (§5.2 item 4)."""
     transcripts = spark.read.parquet(sm_parquet)
     cfg = BuildConfig(num_groups=4)
 
-    full_dir = str(tmp_path_factory.mktemp("idx") / "full")
-    build_index(spark, transcripts, full_dir, cfg)
+    full_dir = sm_index_dir  # the uninterrupted build, same config
 
     part_dir = str(tmp_path_factory.mktemp("idx") / "part")
     b = IndexBuilder(spark, part_dir, cfg)

@@ -240,6 +240,45 @@ def test_sft_pack(spark):
         curation.sft_pack(tdf, 0)
 
 
+def test_pack_offsets_identical_across_shuffle_partitions_and_aqe(spark):
+    """The two-level prefix sum behind the pack_sequences and
+    sft_pack_spans contract entries gives the same rows whatever the
+    shuffle-partition count and whether AQE is on: the range partitions
+    are pinned before the totals collect, so the totals job and the
+    window job see one (row → partition) assignment."""
+    import random
+
+    rng = random.Random(7)
+    words = ["alpha", "beta", "gamma", "delta", "spark", "shuffle"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choices(words, k=rng.randint(0, 30)))) for i in range(3000)],
+        "doc_id long, text string",
+    )
+    turns = docs.selectExpr(
+        "doc_id div 4 AS conv_id", "doc_id % 4 AS turn_idx",
+        "CASE doc_id % 4 WHEN 2 THEN 'assistant' ELSE 'user' END AS role", "text",
+    )
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
+    runs = []
+    try:
+        for parts, aqe in ((7, "true"), (200, "true"), (7, "false"), (200, "false")):
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+            conf.set("spark.sql.adaptive.enabled", aqe)
+            runs.append((
+                sorted(tuple(r) for r in curation.pack_mapping(docs, 512).collect()),
+                sorted(tuple(r) for r in curation.sft_pack(turns, 64).collect()),
+            ))
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+    assert all(r == runs[0] for r in runs[1:])
+    cum = 0
+    for _doc, n, tok_start, *_ in runs[0][0]:
+        assert tok_start == cum
+        cum += n
+
+
 def test_chunk_documents(spark, docs_df):
     CK, OV = 4, 1
     stride = CK - OV

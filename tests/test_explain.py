@@ -36,12 +36,8 @@ _QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def built(spark, sm_parquet, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("explain_idx") / "sm")
-    build_index(
-        spark, spark.read.parquet(sm_parquet), out, BuildConfig(num_groups=4)
-    )
-    return CompressedIndex(spark, out)
+def built(spark, sm_index_dir):
+    return CompressedIndex(spark, sm_index_dir)
 
 
 def _erows(df):
