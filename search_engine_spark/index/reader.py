@@ -17,16 +17,21 @@ touches only ``pmod(xxhash64(term), NB)`` partitions, never the full
 postings table.  Every stage is a DataFrame op; per-group kernels are the
 only Python, Arrow-batched.
 
-Driver-local branch (``topk``, ``match_count``, ``idf_map``)::
+Driver-local branch (``topk``, ``topk_batch``, ``match_count``,
+``idf_map``)::
 
     if no scope and Σ bytes(query's postings bucket files) ≤ LOCAL_BUDGET_BYTES:
         pyarrow read of those files (term in fetch_terms)
         pandas groupby(group) → the SAME kernel closure, per group
         ≤ G·k candidates ⋈ their conv_rank rows of convs (pyarrow, filtered)
-        sort (score desc, conv_id, turn_idx), cut at k
+        sort (score desc, conv_id, turn_idx), cut at k (per query in a batch)
         createDataFrame(pandas, schema)   # Arrow local relation: 0 jobs
 
-The reader lists its postings/idf/convs files once, on first use.  The
+The did-you-mean lookup (``_fuzzy_rows``) reads its sidecar buckets, or
+without a sidecar the whole idf table, on the driver under the same
+budget, and :func:`local_rows` does the same for a small bare parquet
+table (``service.search`` reads its snippet rows through it).  The
+reader lists its postings/idf/convs files once, on first use.  The
 budget is a module constant; over-budget and scoped queries (and dense
 doc-id indexes) keep the Spark plan above unchanged.
 """
@@ -78,12 +83,14 @@ from .xxhash import term_bucket
 
 RESULT_SCHEMA = "doc_id long, score double"
 TOPK_SCHEMA = "conv_id string, turn_idx int, score double"
+BATCH_TOPK_SCHEMA = "query_id int, conv_id string, turn_idx int, score double"
 RESULT_CACHE_SIZE = 500  # SearchController.java:35
-# Driver-local budget: a topk/match_count/idf_map whose pruned bucket
-# files total at most this many bytes runs in-process (pyarrow read +
-# the same group kernel, one thread) with zero Spark jobs; larger ones
-# take the Spark plan.  Measured on the md fixture, local[4] on 4 vCPUs (BASELINE.md
-# "Driver-local top-k"): the local path grows from 0.12 s at 1.5 MB to
+# Driver-local budget: a topk/topk_batch/match_count/idf_map whose pruned
+# bucket files total at most this many bytes runs in-process (pyarrow read
+# + the same group kernel, one thread) with zero Spark jobs; larger ones
+# take the Spark plan.  The did-you-mean lookup and ``local_rows`` read on
+# the driver under the same byte rule.  Measured on the md fixture,
+# local[4] on 4 vCPUs (BASELINE.md "Driver-local top-k"): the local path grows from 0.12 s at 1.5 MB to
 # 0.49 s at 8.4 MB and 2.2 s at 19 MB, while the Spark path pays ~0.9 s
 # of job overhead and spreads the kernels over the cores; they cross
 # between 19 and 22 MB.  More cores move that point down, so the budget
@@ -536,26 +543,28 @@ def _data_files(table_dir: str) -> list[tuple[str, int]]:
     ]
 
 
-def _bucket_files(table_dir: str) -> dict[int, list[tuple[str, int]]]:
-    """``bucket=N`` partition dirs of a postings/idf table → {N: files}."""
+def _bucket_files(table_dir: str, col: str = "bucket") -> dict[int, list[tuple[str, int]]]:
+    """``{col}=N`` partition dirs of a bucketed table → {N: files}."""
+    prefix = f"{col}="
     return {
-        int(d.name[len("bucket="):]): _data_files(d.path)
+        int(d.name[len(prefix):]): _data_files(d.path)
         for d in os.scandir(table_dir)
-        if d.is_dir() and d.name.startswith("bucket=")
+        if d.is_dir() and d.name.startswith(prefix)
     }
 
 
-def _topk_frame(spark: SparkSession, out: pd.DataFrame | None) -> DataFrame:
+def _topk_frame(spark: SparkSession, out: pd.DataFrame | None, schema: str = TOPK_SCHEMA) -> DataFrame:
     """A driver-held top-k (None: no rows) → DataFrame built from Arrow,
     which Spark holds as a local relation: collecting it launches no job,
     where rows from a Python list would launch one.  An EMPTY pandas
     frame takes Spark's RDD fallback (one job) too, so no rows is a
     one-row frame cut to zero."""
     if out is None:
-        one = pd.DataFrame({"conv_id": [""], "turn_idx": pd.array([0], dtype="int32"),
-                            "score": [0.0]})
-        return spark.createDataFrame(one, TOPK_SCHEMA).limit(0)
-    return spark.createDataFrame(out, TOPK_SCHEMA)
+        one = pd.DataFrame({"query_id": pd.array([0], dtype="int32"), "conv_id": [""],
+                            "turn_idx": pd.array([0], dtype="int32"), "score": [0.0]})
+        cols = [f.split()[0] for f in schema.split(",")]
+        return spark.createDataFrame(one[cols], schema).limit(0)
+    return spark.createDataFrame(out, schema)
 
 
 def _read_local(files: list[str], columns: list[str] | None, key: str, values: list) -> pd.DataFrame:
@@ -566,6 +575,41 @@ def _read_local(files: list[str], columns: list[str] | None, key: str, values: l
     return pq.read_table(
         files, columns=columns, filters=[(key, "in", list(values))]
     ).to_pandas()
+
+
+def local_rows(df: DataFrame, columns: list[str], key: str, values: list) -> DataFrame | None:
+    """``df``'s rows whose ``key`` is in ``values``, read with pyarrow on
+    the driver and returned as an Arrow-built local relation, so the
+    expressions a caller applies to it and its collect launch no job.
+    Only when ``df`` is a bare scan of unpartitioned local parquet files
+    totalling at most :data:`LOCAL_BUDGET_BYTES`; otherwise None."""
+    from pyspark.sql.types import StructType
+    from urllib.parse import unquote, urlparse
+
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None or not set(columns) <= set(df.schema.fieldNames()):
+        return None
+    plan = jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().shortName() != "parquet"
+        or rel.partitionSchema().length() > 0
+    ):
+        return None
+    uris = [urlparse(f) for f in df.inputFiles()]
+    if not uris or any(u.scheme != "file" for u in uris):
+        return None
+    files = [unquote(u.path) for u in uris]
+    if sum(map(os.path.getsize, files)) > LOCAL_BUDGET_BYTES:
+        return None
+    rows = _read_local(files, columns, key, values)
+    if rows.empty:
+        return None  # an empty pandas frame would take Spark's RDD fallback
+    schema = StructType([df.schema[c] for c in columns])
+    return df.sparkSession.createDataFrame(rows[columns], schema)
 
 
 class CompressedIndex:
@@ -677,12 +721,9 @@ class CompressedIndex:
 
     # -- driver-local execution --------------------------------------
 
-    def _local_files(self, table: str, terms: list[str]) -> list[str] | None:
-        """Files of ``table``'s (postings/idf) buckets holding ``terms``
-        when they total at most :data:`LOCAL_BUDGET_BYTES`, else None —
-        the query then takes the Spark plan.  Only conv_rank indexes on
-        the local filesystem run locally; the postings, idf and convs
-        dirs are listed once."""
+    def _local_listing(self) -> dict:
+        """The postings/idf bucket files and the convs files, listed on
+        first use; empty when the index cannot run locally."""
         if self._listing is None:
             dirs = (self.paths.postings, self.paths.idf, self.paths.convs)
             local = self.scheme == "conv_rank" and all(map(os.path.isdir, dirs))
@@ -691,11 +732,18 @@ class CompressedIndex:
                 "idf": _bucket_files(self.paths.idf),
                 "convs": [p for p, _ in _data_files(self.paths.convs)],
             } if local else {}
-        if not self._listing:
+        return self._listing
+
+    def _local_files(self, table: str, terms: list[str]) -> list[str] | None:
+        """Files of ``table``'s (postings/idf) buckets holding ``terms``
+        when they total at most :data:`LOCAL_BUDGET_BYTES`, else None —
+        the query then takes the Spark plan.  Only conv_rank indexes on
+        the local filesystem run locally; the postings, idf and convs
+        dirs are listed once."""
+        listing = self._local_listing()
+        if not listing:
             return None
-        files = [
-            f for b in self._buckets(terms) for f in self._listing[table].get(b, ())
-        ]
+        files = [f for b in self._buckets(terms) for f in listing[table].get(b, ())]
         if sum(n for _, n in files) > LOCAL_BUDGET_BYTES:
             return None
         return [p for p, _ in files]
@@ -714,12 +762,13 @@ class CompressedIndex:
             for g, gdf in post.groupby("group", sort=True)
         ]
 
-    def _topk_local(self, frames: list[pd.DataFrame], k: int) -> DataFrame:
-        """Local kernel outputs (≤ G·k candidates) → the labelled top-k.
-        Only the candidates' ``conv_rank`` rows of convs are read."""
+    def _label_local(self, frames: list[pd.DataFrame]) -> pd.DataFrame | None:
+        """Local kernel outputs (doc_id, score[, query_id]) → the same rows
+        with conv_id and turn_idx, or None when there are none.  Only the
+        candidates' ``conv_rank`` rows of convs are read."""
         cand = pd.concat(frames, ignore_index=True) if frames else None
         if cand is None or cand.empty:
-            return _topk_frame(self.spark, None)
+            return None
         docs = cand["doc_id"].to_numpy(dtype=np.int64)
         cand = cand.assign(
             conv_rank=docs >> self.turn_bits,
@@ -729,11 +778,36 @@ class CompressedIndex:
             self._listing["convs"], ["conv_id", "conv_rank"],
             "conv_rank", np.unique(cand["conv_rank"]).tolist(),
         )
+        return cand.merge(convs, on="conv_rank")
+
+    def _topk_local(self, frames: list[pd.DataFrame], k: int) -> DataFrame:
+        """Local kernel outputs (≤ G·k candidates) → the labelled top-k."""
+        cand = self._label_local(frames)
+        if cand is None:
+            return _topk_frame(self.spark, None)
         return _topk_frame(self.spark, (
-            cand.merge(convs, on="conv_rank")
-            .sort_values(["score", "conv_id", "turn_idx"], ascending=[False, True, True])
+            cand.sort_values(["score", "conv_id", "turn_idx"], ascending=[False, True, True])
             .head(k)[["conv_id", "turn_idx", "score"]]
         ))
+
+    def _batch_local(self, frames: list[pd.DataFrame], specs: list[tuple[int, QuerySpec, int]]) -> DataFrame:
+        """Local batch-kernel outputs → each query's labelled top-k, the
+        rows :func:`_rank_per_query` keeps: row number ≤ that query's k
+        in (score desc, conv_id, turn_idx) order, with the kernel's
+        position mapped back to the caller's list index."""
+        cand = self._label_local(frames)
+        if cand is None:
+            return _topk_frame(self.spark, None, BATCH_TOPK_SCHEMA)
+        ranked = cand.sort_values(
+            ["query_id", "score", "conv_id", "turn_idx"], ascending=[True, False, True, True]
+        )
+        pos = ranked["query_id"].to_numpy()
+        ks = np.array([kk for _, _, kk in specs], dtype=np.int64)
+        keep = ranked.groupby("query_id").cumcount().to_numpy() < ks[pos]
+        ids = np.array([i for i, _, _ in specs], dtype=np.int32)
+        out = ranked[keep].assign(query_id=ids[pos[keep]])
+        return _topk_frame(self.spark, out[["query_id", "conv_id", "turn_idx", "score"]],
+                           BATCH_TOPK_SCHEMA)
 
     def idf_map(self, terms: list[str]) -> dict[str, float]:
         """Bucket-pruned idf lookup; absent terms get df=0 idf (oracle
@@ -874,30 +948,14 @@ class CompressedIndex:
         the exact ed≤1 check).  One bucket-pruned scan of the persisted
         sidecar when present (``index/fuzzy.py``); otherwise variants
         derive from the idf table per query — a full vocabulary scan,
-        documented as the small-index fallback only."""
+        documented as the small-index fallback only.  Within the
+        driver-local budget either read runs on the driver."""
         per_term = {t: set(deletions1(t)) | {t} for t in terms}
         all_vars = sorted(set().union(*per_term.values()))
         fuzzy_dir = os.path.join(self.paths.root, "fuzzy")
-        if os.path.isdir(fuzzy_dir):
-            from .fuzzy import FUZZY_SCHEMA
-
-            vb = sorted({term_bucket(v, self.num_buckets) for v in all_vars})
-            rows = (
-                self.spark.read.schema(FUZZY_SCHEMA).parquet(fuzzy_dir)
-                .filter(F.col("vbucket").isin(vb) & F.col("variant").isin(all_vars))
-                .select("variant", "term", "df")
-                .collect()
-            )
-        else:
-            from .fuzzy import VARIANTS_EXPR
-
-            rows = (
-                self._idf.select("term", "df")
-                .withColumn("variant", F.explode(F.expr(VARIANTS_EXPR)))
-                .filter(F.col("variant").isin(all_vars))
-                .select("variant", "term", "df")
-                .collect()
-            )
+        rows = self._fuzzy_rows_local(fuzzy_dir, all_vars)
+        if rows is None:
+            rows = self._fuzzy_rows_spark(fuzzy_dir, all_vars)
         by_var: dict[str, list[tuple[str, int]]] = {}
         for r in rows:
             by_var.setdefault(r["variant"], []).append((r["term"], int(r["df"])))
@@ -908,6 +966,70 @@ class CompressedIndex:
                 seen.update(by_var.get(v, ()))
             out[t] = list(seen.items())
         return out
+
+    def _fuzzy_rows_spark(self, fuzzy_dir: str, all_vars: list[str]) -> list:
+        """The (variant, term, df) rows of :meth:`_fuzzy_rows` through a
+        Spark scan of the sidecar, or of the idf table without one."""
+        if os.path.isdir(fuzzy_dir):
+            from .fuzzy import FUZZY_SCHEMA
+
+            vb = sorted({term_bucket(v, self.num_buckets) for v in all_vars})
+            return (
+                self.spark.read.schema(FUZZY_SCHEMA).parquet(fuzzy_dir)
+                .filter(F.col("vbucket").isin(vb) & F.col("variant").isin(all_vars))
+                .select("variant", "term", "df")
+                .collect()
+            )
+        from .fuzzy import VARIANTS_EXPR
+
+        return (
+            self._idf.select("term", "df")
+            .withColumn("variant", F.explode(F.expr(VARIANTS_EXPR)))
+            .filter(F.col("variant").isin(all_vars))
+            .select("variant", "term", "df")
+            .collect()
+        )
+
+    def _fuzzy_rows_local(self, fuzzy_dir: str, all_vars: list[str]) -> list[dict] | None:
+        """The (variant, term, df) rows of :meth:`_fuzzy_rows` read on the
+        driver when the files they come from fit :data:`LOCAL_BUDGET_BYTES`:
+        the sidecar buckets of ``all_vars``, or without a sidecar the whole
+        idf table, whose variants are derived here as ``VARIANTS_EXPR``
+        derives them (the term itself and its single-character
+        deletions).  None when the Spark scan must run instead."""
+        listing = self._local_listing()
+        if not listing:
+            return None
+        if os.path.isdir(fuzzy_dir):
+            sidecar = _bucket_files(fuzzy_dir, "vbucket")
+            files = [
+                f for b in sorted({term_bucket(v, self.num_buckets) for v in all_vars})
+                for f in sidecar.get(b, ())
+            ]
+            if sum(n for _, n in files) > LOCAL_BUDGET_BYTES:
+                return None
+            if not files:
+                return []
+            return _read_local(
+                [p for p, _ in files], ["variant", "term", "df"], "variant", all_vars
+            ).to_dict("records")
+        files = [f for fs in listing["idf"].values() for f in fs]
+        if sum(n for _, n in files) > LOCAL_BUDGET_BYTES:
+            return None
+        if not files:
+            return []
+        import pyarrow.parquet as pq
+
+        vocab = pq.read_table([p for p, _ in files], columns=["term", "df"]).to_pandas()
+        wanted = set(all_vars)
+        # a term matches a variant of its own length or one shorter
+        lengths = {len(v) for v in wanted} | {len(v) + 1 for v in wanted}
+        near = vocab[vocab["term"].str.len().isin(lengths)]
+        return [
+            {"variant": v, "term": t, "df": df}
+            for t, df in zip(near["term"], near["df"])
+            for v in {t, *deletions1(t)} & wanted
+        ]
 
     def expand_fuzzy(self, query_text: str, limit: int = FUZZY_CAP) -> str:
         """Rewrite trailing-``~`` tokens into their edit-distance-≤1
@@ -1537,6 +1659,10 @@ class CompressedIndex:
             turn_bits=getattr(self, "turn_bits", TURN_BITS),
             scoped=scope is not None,
         )
+        if scope is None:
+            frames = self._local_groups(sorted(fetch_terms), kernel)
+            if frames is not None:
+                return self._batch_local(frames, specs)
         post = self.postings_df(sorted(fetch_terms))
         if scope is not None:
             cand = (

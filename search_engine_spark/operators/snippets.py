@@ -9,21 +9,27 @@ ellipses.  Deterministic and cross-engine (DuckDB twin in the contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 WIDTH = 60  # characters on each side of the first hit
 
 
-def first_hit(terms: list[str]):
-    """1-based position of the earliest query-term occurrence (0 = none)."""
-    lowered = F.lower(F.col("text"))
-    hits = [F.locate(t, lowered) for t in sorted(set(terms))]
+def _sql_string(s: str) -> str:
+    """A Spark SQL string literal (backslash escapes are on by default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def first_hit_sql(terms: list[str]) -> str:
+    """1-based position of the earliest query-term occurrence (0 = none),
+    as one Spark SQL expression over ``text``."""
+    big = 1 << 30
     # min over non-zero positions: replace 0 (miss) with a sentinel
-    big = F.lit(1 << 30)
-    pos = F.least(*[F.when(h == 0, big).otherwise(h) for h in hits]) if len(hits) > 1 else (
-        F.when(hits[0] == 0, big).otherwise(hits[0])
-    )
-    return F.when(pos == big, F.lit(0)).otherwise(pos)
+    hits = [
+        f"CASE WHEN locate({q}, lower(text)) = 0 THEN {big} ELSE locate({q}, lower(text)) END"
+        for q in map(_sql_string, sorted(set(terms)))
+    ]
+    pos = f"least({', '.join(hits)})" if len(hits) > 1 else hits[0]
+    return f"CASE WHEN {pos} = {big} THEN 0 ELSE {pos} END"
 
 
 def snippets(
@@ -36,22 +42,20 @@ def snippets(
 
     snippet = text[max(1, pos-width) : pos+width] with '...' markers when
     truncated on either side.  ``key_cols`` lets callers keyed by
-    (conv_id, turn_idx) reuse the same expressions.
+    (conv_id, turn_idx) reuse the same expressions.  The expressions are
+    written as SQL text, so building them takes about 20 calls into the
+    JVM where one call per column operation took about 400.
     """
-    pos = first_hit(terms)
-    d = docs.select(*key_cols, "text", pos.alias("hit_pos")).filter(
-        F.col("hit_pos") > 0
-    )
-    start = F.greatest(F.col("hit_pos") - width, F.lit(1))
-    frag = F.substring(F.col("text"), start, 2 * width)
-    lead = F.when(start > 1, F.lit("...")).otherwise(F.lit(""))
-    tail = F.when(
-        (start + 2 * width - 1) < F.length("text"), F.lit("...")
-    ).otherwise(F.lit(""))
-    return d.select(
-        *key_cols,
+    keys = ["`" + c.replace("`", "``") + "`" for c in key_cols]
+    width = int(width)
+    d = docs.selectExpr(*keys, "text", f"{first_hit_sql(terms)} AS hit_pos").filter("hit_pos > 0")
+    start = f"greatest(hit_pos - {width}, 1)"
+    return d.selectExpr(
+        *keys,
         "hit_pos",
-        F.concat(lead, frag, tail).alias("snippet"),
+        f"concat(CASE WHEN {start} > 1 THEN '...' ELSE '' END, "
+        f"substring(text, {start}, {2 * width}), "
+        f"CASE WHEN ({start} + {2 * width} - 1) < length(text) THEN '...' ELSE '' END) AS snippet",
     )
 
 

@@ -13,7 +13,11 @@ slice — the reference paginates the same ranked list), then one
 broadcast-key join back to the transcripts table for text — the scan is
 pruned by a pushed ``conv_id IN (...)`` filter over at most ``page*k``
 conversations, never a full-corpus read — with the snippet window
-computed by built-in expressions during that same job.  Suggestions are
+computed by built-in expressions during that same job.  Small inputs
+take no job at all: the index answers within its driver-local budget,
+and a bare local parquet transcripts table within the same budget is
+read on the driver (``index.reader.local_rows``), the snippet
+expressions then running on that local relation.  Suggestions are
 driver-side over the ≤5 top snippets (the reference uses result titles;
 transcript turns have none, so the leading words of each top result
 stand in, documented divergence).
@@ -342,8 +346,15 @@ def search(
     convs = sorted({r.conv_id for r in rows})
     keys = sorted({f"{r.conv_id}\x1f{r.turn_idx}" for r in rows})
     # conv_id IN (...) reaches the parquet scan (pushed filter); the
-    # exact (conv, turn) pair match runs on the pruned rows
-    hits = transcripts.filter(F.col("conv_id").isin(convs)).filter(
+    # exact (conv, turn) pair match runs on the pruned rows.  A small
+    # local parquet table is read on the driver instead, and the same
+    # expressions then run on that local relation with no job.
+    from .index.reader import local_rows
+
+    conv_rows = local_rows(transcripts, ["conv_id", "turn_idx", "text"], "conv_id", convs)
+    if conv_rows is None:
+        conv_rows = transcripts.filter(F.col("conv_id").isin(convs))
+    hits = conv_rows.filter(
         F.concat_ws("\x1f", F.col("conv_id"), F.col("turn_idx")).isin(keys)
     )
     # highlight=True tags every in-window query-term occurrence with

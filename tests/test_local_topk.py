@@ -10,11 +10,13 @@ below any file total with monkeypatch.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark import service
 from search_engine_spark.corpus import REFERENCE_QUERIES
 from search_engine_spark.index import reader
 from search_engine_spark.index.reader import CompressedIndex
@@ -119,6 +121,32 @@ def test_tombstones_and_search_after_match_spark_plan(local_ix, spark_ix, spark_
     assert got == [tuple(r) for r in page[5:10]]
 
 
+def test_batch_matches_spark_plan(spark, local_ix, spark_ix, spark_plan):
+    """topk_batch over all 30 reference queries (their own k), plus a
+    boosted, an absent-term and an unparseable query: the local batch
+    returns the Spark plan's rows, caller indexes included, with zero
+    jobs; tombstones hold on both sides."""
+    queries = [(q["query_text"], q["mode"], q["k"]) for q in REFERENCE_QUERIES]
+    queries += [("term0001^3 term0002", "disjunctive"), ("zzzznotacorpusword", "disjunctive"),
+                ("", "disjunctive"), ("term0000 term0001", "disjunctive", 3)]
+
+    def key(rows):
+        return sorted(rows, key=lambda r: (r[0], -r[3], r[1], r[2]))
+
+    got, jobs = _jobs(spark, lambda: _rows(local_ix.topk_batch(queries, k=10)))
+    assert jobs == 0
+    assert key(got) == key(spark_plan(lambda: _rows(spark_ix.topk_batch(queries, k=10))))
+    assert {r[0] for r in got} <= set(range(len(queries)))
+    dead = [got[0][1]]
+    got = _rows(local_ix.topk_batch(queries, k=10, tombstones=dead))
+    assert dead[0] not in {r[1] for r in got}
+    assert key(got) == key(spark_plan(
+        lambda: _rows(spark_ix.topk_batch(queries, k=10, tombstones=dead))
+    ))
+    none, jobs = _jobs(spark, lambda: _rows(local_ix.topk_batch([("zzzznotacorpusword", "disjunctive")])))
+    assert none == [] and jobs == 0
+
+
 def test_over_budget_query_takes_spark_plan(spark, local_ix, monkeypatch):
     q = "term0000 term0001 term0002"
     want, jobs = _jobs(spark, lambda: _rows(local_ix.topk(q, k=10)))
@@ -144,3 +172,46 @@ def test_scoped_query_takes_spark_plan(spark, local_ix, sm_parquet):
     n, jobs = _jobs(spark, lambda: local_ix.match_count(q, scope=scope))
     assert jobs > 0
     assert 0 < n <= local_ix.match_count(q)
+
+
+_FUZZY_TERMS = ["termm0003", "term001", "pony", "term0002", "zzzzqqq"]
+
+
+def test_fuzzy_rows_match_spark_scan(spark, local_ix, spark_ix, spark_plan, sm_index_dir, tmp_path):
+    """Did-you-mean's delete-1 lookup: the local read gives the Spark
+    scan's candidates, without a sidecar (whole idf table) and with one
+    (its pruned buckets), with zero jobs."""
+    from search_engine_spark.index.fuzzy import build_fuzzy_sidecar
+
+    def cands(ix):
+        return {t: sorted(c) for t, c in ix._fuzzy_rows(_FUZZY_TERMS).items()}
+
+    got, jobs = _jobs(spark, lambda: cands(local_ix))
+    assert jobs == 0
+    assert got == spark_plan(lambda: cands(spark_ix))
+    assert any(got.values())
+    root = str(tmp_path / "sm")
+    shutil.copytree(sm_index_dir, root)
+    build_fuzzy_sidecar(spark, root)
+    with_sidecar = CompressedIndex(spark, root)
+    got_sc, jobs = _jobs(spark, lambda: cands(with_sidecar))
+    assert jobs == 0
+    assert got_sc == got
+    assert got_sc == spark_plan(lambda: cands(with_sidecar))
+
+
+def test_search_page_matches_spark_plan(spark, local_ix, spark_ix, spark_plan, sm_parquet):
+    """service.search on a bare local parquet table: snippets come from a
+    driver-read local relation, so a page launches no job, and equals
+    the Spark plan's page, did-you-mean included."""
+    turns = spark.read.parquet(sm_parquet)
+    pages = {}
+    for q in ("term0000 term0001", "termm0003", '"term0000 term0001"'):
+        mode = "phrase" if q.startswith('"') else "disjunctive"
+        pages[q], jobs = _jobs(spark, lambda: service.search(local_ix, turns, q, mode, k=10))
+        assert jobs == 0, q
+        assert pages[q] == spark_plan(lambda: service.search(spark_ix, turns, q, mode, k=10)), q
+    assert "did_you_mean" in pages["termm0003"]
+    for page in (pages["term0000 term0001"], pages['"term0000 term0001"']):
+        assert page["results"] and all(r["snippet"] for r in page["results"])
+    assert reader.local_rows(turns.filter(F.col("role") == "user"), ["conv_id"], "conv_id", ["x"]) is None
