@@ -733,14 +733,14 @@ def shadows_path(root: str) -> str:
 def read_shadow_keys(spark: SparkSession, root: str) -> list[tuple[str, int]]:
     """(conv_id, turn_idx) keys this segment SUPERSEDES in earlier
     segments, or [] when the segment has no sidecar.  Shadow lists are
-    update-batch-sized, so a driver-side collect is the right scale."""
-    p = shadows_path(root)
-    if not os.path.exists(p):
+    update-batch-sized, so the sidecar is read with pyarrow on the
+    driver (no Spark job)."""
+    from .reader import _read_table
+
+    t = _read_table(shadows_path(root), ["conv_id", "turn_idx"])
+    if t is None:
         return []
-    return [
-        (r.conv_id, int(r.turn_idx))
-        for r in spark.read.parquet(p).select("conv_id", "turn_idx").collect()
-    ]
+    return list(zip(t.column("conv_id").to_pylist(), map(int, t.column("turn_idx").to_pylist())))
 
 
 def ingest_update_segment(

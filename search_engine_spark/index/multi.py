@@ -20,7 +20,20 @@ rebuilding the table):
     root when the segment count grows; queries regain the single-index
     fast path (WAND, exact-cut kernels).
 
-Physical plan per query: each segment's bucket-pruned postings scan is
+Physical plan per query.  Driver-local branch (``topk``, ``topk_batch``,
+``match_count``, ``idf_map``/``df_map``): when the query is unscoped and
+its pruned postings bucket files, summed over ALL segments, total at
+most ``reader.LOCAL_BUDGET_BYTES``, the single reader's local executor
+runs over the (seg, CompressedIndex) pairs — each segment's files read
+with pyarrow, each (seg, group) handed to ``_with_seg(kernel)``, the
+candidates labelled from their own segment's convs files, then sorted
+on (score desc, conv_id, turn_idx) and cut at k — with zero Spark jobs.
+idf sums the locally read per-segment df, and the shadow df correction
+decodes the locally read postings of the shadowed groups.  Opening a
+``MultiIndex`` launches no job either: N/Σdl come from the per-segment
+``doclen`` tables and ``shadows`` sidecars read with pyarrow.
+
+Spark plan (over-budget or scoped queries): each segment's bucket-pruned postings scan is
 unioned with a ``seg`` literal; ONE grouped kernel pass scores every
 (seg, group) partition against the broadcast global idf/avgdl (format
 v5 blocks carry per-posting doclens inline, so no segment-local state
@@ -35,7 +48,7 @@ more reason compaction exists).
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
@@ -44,38 +57,34 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .codec import varbyte_decode
 from .reader import (
     BATCH_RESULT_SCHEMA,
+    BATCH_TOPK_SCHEMA,
     RESULT_SCHEMA,
     TOPK_SCHEMA,
     CompressedIndex,
     Tombstones,
+    _batch_local,
     _batch_term_sets,
     _fetch_terms,
-    _lru_topk,
+    _local_groups,
     _make_batch_kernel,
     _make_group_kernel,
     _parse_batch,
+    _pruned_files,
     _rank_per_query,
+    _read_local,
+    _read_table,
+    _topk_frame,
+    _topk_local,
     _weighted_idf,
+    _with_seg,
     parse_query,
-    resolve_tombstones,
 )
 
 
-def _with_seg(inner, n_cols_before: int = 0):
-    """Wrap a grouped kernel so its output carries the segment id from
-    the group key — the kernel itself is the tested single-index one."""
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = inner(key[1:], pdf)
-        out.insert(0, "seg", np.full(len(out), key[0], dtype="int32"))
-        return out
-
-    return kernel
-
-
 def _with_seg_scoped(inner):
-    """Cogroup counterpart of :func:`_with_seg` for scoped kernels —
-    (key, postings, allow) with the (seg, group) composite key."""
+    """Cogroup counterpart of :func:`reader._with_seg` for scoped
+    kernels — (key, postings, allow) with the (seg, group) composite
+    key."""
 
     def kernel(key: tuple, pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
         out = inner(key[1:], pdf, allow_pdf)
@@ -83,6 +92,28 @@ def _with_seg_scoped(inner):
         return out
 
     return kernel
+
+
+def _column_sums(table_dir: str, columns: list[str]) -> list[int]:
+    """Exact integer sums of ``columns`` over a small local parquet table
+    (0 for an absent or empty one), read with pyarrow on the driver."""
+    t = _read_table(table_dir, columns)
+    if t is None:
+        return [0] * len(columns)
+    return [sum(v for v in t.column(c).to_pylist() if v is not None) for c in columns]
+
+
+def _shadow_hits(pdf: pd.DataFrame, ids: np.ndarray) -> pd.DataFrame:
+    """Postings rows (term, doc_blob) → (term, c): per row, how many of
+    the sorted shadowed doc ``ids`` its block holds."""
+    ts, cs = [], []
+    for term, blob in zip(pdf["term"], pdf["doc_blob"]):
+        docs = np.cumsum(varbyte_decode(blob).astype(np.int64))
+        j = np.searchsorted(ids, docs)
+        hit = (j < ids.size) & (ids[np.minimum(j, ids.size - 1)] == docs)
+        ts.append(term)
+        cs.append(int(hit.sum()))
+    return pd.DataFrame({"term": ts, "c": cs})
 
 
 class MultiIndex:
@@ -132,16 +163,12 @@ class MultiIndex:
         self.turn_bits = int(s0.turn_bits)
         self.num_buckets = int(s0.num_buckets)
         # exact global stats from the per-group doclen tables (G rows per
-        # segment — one tiny job, not a corpus scan); summing the integer
+        # segment, read with pyarrow — no Spark job); summing the integer
         # totals reproduces the single-index avgdl bit-for-bit
-        doclen = reduce(
-            DataFrame.unionByName,
-            [spark.read.parquet(seg.paths.doclen).select("n_docs", "sum_dl")
-             for seg in self.segments],
-        )
-        r = doclen.agg(
-            F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("tok")
-        ).collect()[0]
+        n_all = tok_all = 0
+        for seg in self.segments:
+            n, tok = _column_sums(seg.paths.doclen, ["n_docs", "sum_dl"])
+            n_all, tok_all = n_all + n, tok_all + tok
         # shadow sidecars (update segments): keys a later segment
         # supersedes in earlier ones — applied as per-segment exclusion
         # sets, with exact N/Σdl corrections from the sidecar totals
@@ -156,106 +183,71 @@ class MultiIndex:
             self._shadow_for.append(sorted(s))
         self._shadow_resolved: dict[int, tuple] | None = None
         n_excl = dl_excl = 0
-        import os as _os
+        for r in roots:
+            n, dl = _column_sums(shadows_path(r), ["n_prev", "dl_prev"])
+            n_excl, dl_excl = n_excl + n, dl_excl + dl
+        self.n_docs = n_all - n_excl
+        self.avgdl = (tok_all - dl_excl) / self.n_docs if self.n_docs else 0.0
+        self._idf_cache: dict[str, float] = {}
+        self._df_cache: dict[str, int] = {}
 
-        sidecars = [
-            spark.read.parquet(shadows_path(r))
-            for r in roots
-            if _os.path.exists(shadows_path(r))
-        ]
-        if sidecars:
-            sc = (
-                reduce(DataFrame.unionByName, sidecars)
-                .agg(F.sum("n_prev").alias("n"), F.sum("dl_prev").alias("dl"))
-                .collect()[0]
-            )
-            n_excl, dl_excl = int(sc["n"] or 0), int(sc["dl"] or 0)
-        self.n_docs = int(r["n"] or 0) - n_excl
-        self.avgdl = (
-            (int(r["tok"] or 0) - dl_excl) / self.n_docs if self.n_docs else 0.0
-        )
+    # Spark-plan handles, built on first use (an open whose queries all
+    # run on the driver never builds them)
+
+    @cached_property
+    def _df_all(self) -> DataFrame:
         # segments hold disjoint docs, so per-term document frequencies
         # ADD; idf is recomputed from the summed df at the global N
-        self._df_all = reduce(
+        return reduce(
             DataFrame.unionByName,
             [seg._idf.select("term", "df", "bucket") for seg in self.segments],
         )
+
+    @cached_property
+    def _convs(self) -> DataFrame:
         # conversation map: doc ids are segment-local conv ranks, so the
         # label join is on (seg, conv_rank); one conversation may appear
         # in several segments (new turns in a later delta) — each row
         # maps only its own segment's candidates
-        self._convs = reduce(
+        return reduce(
             DataFrame.unionByName,
             [
                 seg._convs.select("conv_id", "conv_rank").withColumn("seg", F.lit(i))
                 for i, seg in enumerate(self.segments)
             ],
         ).cache()
-        self._idf_cache: dict[str, float] = {}
-        self._df_cache: dict[str, int] = {}
-        self._tomb_memo: dict[tuple, dict] = {}
-        self._after_memo: dict[tuple, dict] = {}
-        from collections import OrderedDict
-
-        self._results: "OrderedDict[tuple, list]" = OrderedDict()
 
     def warm(self) -> None:
         self._convs.count()
-
-    def topk_cached(
-        self, query_text: str, mode: str = "disjunctive", k: int = 10, algo: str = "auto"
-    ) -> list:
-        """Collected top-k through the shared LRU result cache — committed
-        segments are immutable, so entries never go stale."""
-        return _lru_topk(self, query_text, mode, k, algo)
 
     # -- global statistics -------------------------------------------
 
     def _resolve_tomb(self, tombstones) -> dict | None:
         """Tombstone items → one resolved set per segment (doc ids are
         segment-local rank encodings); kernels pick their segment's set
-        from the batch's ``seg`` column.  Memoized per distinct item
-        list — resolution costs one small collect job PER SEGMENT, and
-        service.search would otherwise pay it twice per request (topk +
-        match_count)."""
+        from the batch's ``seg`` column.  Each segment resolves and
+        memoizes through :meth:`CompressedIndex._resolve_tomb` — a convs
+        lookup on the driver within the local budget."""
         if not tombstones:
             return None
-        from .reader import _tomb_key
-
-        key = _tomb_key(tombstones)
-        hit = self._tomb_memo.get(key)
-        if hit is None:
-            hit = {
-                i: resolve_tombstones(seg._convs, tombstones)
-                for i, seg in enumerate(self.segments)
-            }
-            self._tomb_memo[key] = hit
-        return hit
+        return {i: seg._resolve_tomb(tombstones) for i, seg in enumerate(self.segments)}
 
     def _resolve_after(self, search_after) -> dict | None:
         """(score, conv_id, turn_idx) cursor → one (score, cursor_doc_id)
-        per SEGMENT (doc ids are segment-local rank encodings), memoized
-        per distinct cursor.  Each segment resolves independently via
+        per SEGMENT (doc ids are segment-local rank encodings).  Each
+        segment resolves independently, memoized per distinct cursor, via
         :meth:`CompressedIndex._resolve_after` — a segment not holding
         the cursor conversation cuts through its boundary rank, so the
         filter stays exact even when the cursor doc lives elsewhere."""
         if search_after is None:
             return None
-        score, conv_id, turn_idx = search_after
-        key = (str(conv_id), int(turn_idx))
-        hit = self._after_memo.get(key)
-        if hit is None:
-            hit = {
-                i: seg._resolve_after((0.0, conv_id, turn_idx))[1]
-                for i, seg in enumerate(self.segments)
-            }
-            self._after_memo[key] = hit
-        return {i: (float(score), cdoc) for i, cdoc in hit.items()}
+        return {i: seg._resolve_after(search_after) for i, seg in enumerate(self.segments)}
 
     def _shadow_exclude(self) -> dict | None:
         """Per-segment (Tombstones, affected-groups) for shadowed docs,
         resolved once per instance — sidecar lists are update-batch
-        sized, so the rank lookup is one small collect per segment."""
+        sized, so the rank lookup is one small convs lookup per segment
+        (on the driver within the local budget)."""
         if not any(self._shadow_for):
             return None
         if self._shadow_resolved is None:
@@ -264,13 +256,7 @@ class MultiIndex:
                 items = self._shadow_for[i]
                 if not items:
                     continue
-                need = sorted({c for c, _ in items})
-                rows = (
-                    seg._convs.filter(F.col("conv_id").isin(need))
-                    .select("conv_id", "conv_rank", "group")
-                    .collect()
-                )
-                rank = {r.conv_id: (int(r.conv_rank), int(r.group)) for r in rows}
+                rank = seg._conv_lookup(sorted({c for c, _ in items}))
                 ids, groups = [], set()
                 for c, t in items:
                     if c in rank:
@@ -312,47 +298,44 @@ class MultiIndex:
         """For each term: how many SHADOWED docs contain it, summed over
         segments — the exact df correction.  One bucket+group-pruned
         scan of the shadowed docs' posting blocks per segment that has
-        any (results land in the idf cache, so each term pays once)."""
+        any (results land in the idf cache, so each term pays once); the
+        blocks are read with pyarrow on the driver when their files fit
+        the local budget, else by a Spark scan."""
         out = {t: 0 for t in terms}
         sh = self._shadow_exclude()
         if sh is None or not terms:
             return out
-        for i, seg in enumerate(self.segments):
-            if i not in sh:
-                continue
+        segs = sorted(sh)
+        files = _pruned_files([self.segments[i] for i in segs], "postings", terms)
+        for n, i in enumerate(segs):
             tomb, groups = sh[i]
             ids = np.sort(tomb.doc_ids)
-
-            def cnt(batches, _ids=ids):
-                for pdf in batches:
-                    ts, cs = [], []
-                    for term, blob in zip(pdf["term"], pdf["doc_blob"]):
-                        docs = np.cumsum(varbyte_decode(blob).astype(np.int64))
-                        j = np.searchsorted(_ids, docs)
-                        hit = (j < _ids.size) & (
-                            _ids[np.minimum(j, _ids.size - 1)] == docs
-                        )
-                        ts.append(term)
-                        cs.append(int(hit.sum()))
-                    yield pd.DataFrame({"term": ts, "c": cs})
-
-            rows = (
-                seg.postings_df(terms)
-                .filter(F.col("group").isin(groups))
-                .select("term", "doc_blob")
-                .mapInPandas(cnt, schema="term string, c long")
-                .groupBy("term")
-                .agg(F.sum("c").alias("c"))
-                .collect()
-            )
-            for r in rows:
-                out[r["term"]] += int(r["c"])
+            if files is not None:
+                if not files[n]:
+                    continue
+                post = _read_local(files[n], ["term", "doc_blob", "group"], "term", terms)
+                rows = _shadow_hits(post[post["group"].isin(groups)], ids).groupby("term")["c"].sum().items()
+            else:
+                rows = (
+                    self.segments[i].postings_df(terms)
+                    .filter(F.col("group").isin(groups))
+                    .select("term", "doc_blob")
+                    .mapInPandas(lambda it, _ids=ids: (_shadow_hits(p, _ids) for p in it),
+                                 schema="term string, c long")
+                    .groupBy("term")
+                    .agg(F.sum("c").alias("c"))
+                    .collect()
+                )
+            for term, c in rows:
+                out[term] += int(c)
         return out
 
     def idf_map(self, terms: list[str]) -> dict[str, float]:
         """Global idf: df summed across segments, the build formula
         ``ln((1+N)/(1+df)) + 1`` (IndexerService.java:966) applied at
-        the global N.  Bucket-pruned on every segment's idf table."""
+        the global N.  Bucket-pruned on every segment's idf table; read
+        with pyarrow on the driver when the idf files of all segments
+        fit the local budget."""
         import math
 
         uniq = sorted(set(terms))
@@ -360,16 +343,21 @@ class MultiIndex:
             return {}
         missing = [t for t in uniq if t not in self._idf_cache]
         if missing:
-            buckets = self.segments[0]._buckets(missing)
-            rows = (
-                self._df_all.filter(
-                    F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+            files = _pruned_files(self.segments, "idf", missing)
+            if files is None:
+                buckets = self.segments[0]._buckets(missing)
+                rows = (
+                    self._df_all.filter(
+                        F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+                    )
+                    .groupBy("term")
+                    .agg(F.sum("df").alias("df"))
+                    .collect()
                 )
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
+            else:
+                parts = [_read_local(fs, ["term", "df"], "term", missing) for fs in files if fs]
+                rows = pd.concat(parts).groupby("term")["df"].sum().items() if parts else []
+            found = {t: int(df) for t, df in rows}
             corr = self._shadow_df_counts(missing)
             for t in missing:
                 df = found.get(t, 0) - corr.get(t, 0)
@@ -658,7 +646,7 @@ class MultiIndex:
         if spec is None:
             spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
         if spec is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _topk_frame(self.spark, None)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_group_kernel(
@@ -667,6 +655,10 @@ class MultiIndex:
             scoped=scope is not None,
             after=self._resolve_after(search_after),
         )
+        if scope is None:
+            frames = _local_groups(self.segments, fetch_terms, kernel)
+            if frames is not None:
+                return _topk_local(self.segments, frames, k)
         post = self._postings(fetch_terms)
         if scope is not None:
             cand = (
@@ -784,6 +776,10 @@ class MultiIndex:
             spec, idf, self.avgdl, exclude=self._effective_exclude(tombstones),
             turn_bits=self.turn_bits, scoped=scope is not None,
         )
+        if scope is None:
+            frames = _local_groups(self.segments, fetch_terms, kernel)
+            if frames is not None:
+                return sum(int(f["n"].sum()) for f in frames)
         post = self._postings(fetch_terms)
         if scope is not None:
             counted = (
@@ -975,9 +971,7 @@ class MultiIndex:
             for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
         ]
         if not specs:
-            return self.spark.createDataFrame(
-                [], "query_id int, conv_id string, turn_idx int, score double"
-            )
+            return _topk_frame(self.spark, None, BATCH_TOPK_SCHEMA)
         fetch_terms, score_terms = _batch_term_sets(specs)
         merged_idf = self.idf_map(sorted(score_terms))
         # per-query maps carry that query's boosts (plists stay built
@@ -998,6 +992,10 @@ class MultiIndex:
             turn_bits=self.turn_bits,
             scoped=scope is not None,
         )
+        if scope is None:
+            frames = _local_groups(self.segments, sorted(fetch_terms), kernel)
+            if frames is not None:
+                return _batch_local(self.segments, frames, specs)
         post = self._postings(sorted(fetch_terms))
         if scope is not None:
             cand = (

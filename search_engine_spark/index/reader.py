@@ -18,12 +18,16 @@ postings table.  Every stage is a DataFrame op; per-group kernels are the
 only Python, Arrow-batched.
 
 Driver-local branch (``topk``, ``topk_batch``, ``match_count``,
-``idf_map``)::
+``idf_map``), shared by both readers: it walks N ≥ 1 (seg,
+CompressedIndex) pairs, so a single index is the 1-segment case of the
+``MultiIndex`` live view::
 
-    if no scope and Σ bytes(query's postings bucket files) ≤ LOCAL_BUDGET_BYTES:
-        pyarrow read of those files (term in fetch_terms)
-        pandas groupby(group) → the SAME kernel closure, per group
-        ≤ G·k candidates ⋈ their conv_rank rows of convs (pyarrow, filtered)
+    if no scope and Σ over segments of bytes(query's postings bucket
+            files) ≤ LOCAL_BUDGET_BYTES:
+        per segment: pyarrow read of those files (term in fetch_terms),
+            pandas groupby(group) → _with_seg(the SAME kernel closure)
+        ≤ S·G·k candidates ⋈ their conv_rank rows of their own
+            segment's convs (pyarrow, filtered)
         sort (score desc, conv_id, turn_idx), cut at k (per query in a batch)
         createDataFrame(pandas, schema)   # Arrow local relation: 0 jobs
 
@@ -31,9 +35,12 @@ The did-you-mean lookup (``_fuzzy_rows``) reads its sidecar buckets, or
 without a sidecar the whole idf table, on the driver under the same
 budget, and :func:`local_rows` does the same for a small bare parquet
 table (``service.search`` reads its snippet rows through it).  The
-reader lists its postings/idf/convs files once, on first use.  The
-budget is a module constant; over-budget and scoped queries (and dense
-doc-id indexes) keep the Spark plan above unchanged.
+tombstone, search_after and shadow lookups read the convs files on the
+driver when those fit the budget.  The reader lists its
+postings/idf/convs files once, on first use, and builds its Spark
+DataFrame handles on first use too, so opening an index launches no
+job.  The budget is a module constant; over-budget and scoped queries
+(and dense doc-id indexes) keep the Spark plan above unchanged.
 """
 
 from __future__ import annotations
@@ -41,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -84,7 +92,6 @@ from .xxhash import term_bucket
 RESULT_SCHEMA = "doc_id long, score double"
 TOPK_SCHEMA = "conv_id string, turn_idx int, score double"
 BATCH_TOPK_SCHEMA = "query_id int, conv_id string, turn_idx int, score double"
-RESULT_CACHE_SIZE = 500  # SearchController.java:35
 # Driver-local budget: a topk/topk_batch/match_count/idf_map whose pruned
 # bucket files total at most this many bytes runs in-process (pyarrow read
 # + the same group kernel, one thread) with zero Spark jobs; larger ones
@@ -97,7 +104,6 @@ RESULT_CACHE_SIZE = 500  # SearchController.java:35
 # sits well below it, where the local path is still ~2x ahead at
 # local[4]; it also bounds what one query pulls through the driver.
 LOCAL_BUDGET_BYTES = 8 << 20
-
 
 
 @dataclass
@@ -241,27 +247,13 @@ class Tombstones:
         return docs[self.keep_mask(docs, turn_bits)]
 
 
-def resolve_tombstones(convs_df: DataFrame, items: list) -> Tombstones:
-    """Tombstone items → this index's doc-id space.
-
-    ``items`` mixes bare ``conv_id`` strings (delete the whole
-    conversation) and ``(conv_id, turn_idx)`` pairs (delete one turn).
-    Deletion sets are small (removal requests), so the rank lookup is a
-    driver-side collect over the pruned conv table; items naming
-    unknown conversations are no-ops (already absent)."""
-    from .build import TURN_BITS
-
+def _tombstones(items: list, lookup) -> Tombstones:
+    """Tombstone items → this index's doc-id space, given ``lookup``:
+    conv_ids → {conv_id: conv_rank} of those present in the index."""
     conv_only = [it for it in items if isinstance(it, str)]
     pairs = [tuple(it) for it in items if not isinstance(it, str)]
     need = sorted(set(conv_only) | {c for c, _ in pairs})
-    if not need:
-        return Tombstones(np.empty(0, np.int64), np.empty(0, np.int64))
-    rows = (
-        convs_df.filter(F.col("conv_id").isin(need))
-        .select("conv_id", "conv_rank")
-        .collect()
-    )
-    rank = {r.conv_id: int(r.conv_rank) for r in rows}
+    rank = lookup(need) if need else {}
     ranks = [rank[c] for c in conv_only if c in rank]
     doc_ids = [
         (rank[c] << TURN_BITS) | int(t) for c, t in pairs if c in rank
@@ -269,6 +261,24 @@ def resolve_tombstones(convs_df: DataFrame, items: list) -> Tombstones:
     return Tombstones(
         np.asarray(doc_ids, dtype=np.int64), np.asarray(ranks, dtype=np.int64)
     )
+
+
+def resolve_tombstones(convs_df: DataFrame, items: list) -> Tombstones:
+    """Tombstone items → this index's doc-id space.
+
+    ``items`` mixes bare ``conv_id`` strings (delete the whole
+    conversation) and ``(conv_id, turn_idx)`` pairs (delete one turn).
+    Deletion sets are small (removal requests), so the rank lookup is a
+    driver-side collect over the pruned conv table; items naming
+    unknown conversations are no-ops (already absent).  The readers
+    resolve through :meth:`CompressedIndex._conv_lookup` instead, which
+    reads the convs files on the driver within the local budget."""
+
+    def lookup(need: list[str]) -> dict[str, int]:
+        rows = convs_df.filter(F.col("conv_id").isin(need)).select("conv_id", "conv_rank").collect()
+        return {r.conv_id: int(r.conv_rank) for r in rows}
+
+    return _tombstones(items, lookup)
 
 
 def _tomb_key(items: list) -> tuple:
@@ -516,22 +526,6 @@ def _rank_per_query(labeled: DataFrame, specs: list[tuple[int, QuerySpec, int]])
     )
 
 
-def _lru_topk(index, query_text: str, mode: str, k: int, algo: str) -> list:
-    """Collected top-k through the index's 500-entry LRU result cache
-    (SearchController.java:33-36 analog, minus the TTL — indexes and
-    committed segments are immutable)."""
-    key = (query_text, mode, k, algo)
-    hit = index._results.get(key)
-    if hit is not None:
-        index._results.move_to_end(key)
-        return hit
-    rows = index.topk(query_text, mode, k, algo).collect()
-    index._results[key] = rows
-    if len(index._results) > RESULT_CACHE_SIZE:
-        index._results.popitem(last=False)
-    return rows
-
-
 def _data_files(table_dir: str) -> list[tuple[str, int]]:
     """(path, bytes) of one directory's parquet files — Spark's hidden
     ``_``/``.`` files (``_SUCCESS``, ``.crc``) skipped, as its reader
@@ -575,6 +569,124 @@ def _read_local(files: list[str], columns: list[str] | None, key: str, values: l
     return pq.read_table(
         files, columns=columns, filters=[(key, "in", list(values))]
     ).to_pandas()
+
+
+def _read_table(table_dir: str, columns: list[str]):
+    """``columns`` of a small unpartitioned local parquet table (a
+    sidecar, a per-group stats table) as a pyarrow Table read on the
+    driver, or None when the table does not exist or holds no file."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(table_dir):
+        return None
+    files = [p for p, _ in _data_files(table_dir)]
+    return pq.read_table(files, columns=columns) if files else None
+
+
+def _with_seg(inner):
+    """Wrap a grouped kernel so its output carries the segment id from
+    the (seg, group) key — the kernel itself is the tested single-index
+    one."""
+
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        out = inner(key[1:], pdf)
+        out.insert(0, "seg", np.full(len(out), key[0], dtype="int32"))
+        return out
+
+    return kernel
+
+
+def _pruned_files(segs: list["CompressedIndex"], table: str, terms: list[str]) -> list[list[str]] | None:
+    """Per segment, the files of ``table``'s (postings/idf) buckets
+    holding ``terms``, when every segment can run locally and the files
+    of ALL segments total at most :data:`LOCAL_BUDGET_BYTES`; else None,
+    and the query takes the Spark plan."""
+    per_seg, total = [], 0
+    for seg in segs:
+        listing = seg._local_listing()
+        if not listing:
+            return None
+        files = [f for b in seg._buckets(terms) for f in listing[table].get(b, ())]
+        total += sum(n for _, n in files)
+        per_seg.append([p for p, _ in files])
+    return None if total > LOCAL_BUDGET_BYTES else per_seg
+
+
+def _local_groups(segs: list["CompressedIndex"], fetch_terms: list[str], kernel) -> list[pd.DataFrame] | None:
+    """Driver-local executor over the (seg, CompressedIndex) pairs of
+    ``segs``: read each segment's pruned postings with pyarrow, group
+    them by ``group`` in pandas and hand each group to
+    ``_with_seg(kernel)``, the closure ``applyInPandas`` runs on the
+    Spark plan.  Returns the per-group outputs, each with its ``seg``
+    column, or None when the query is over budget."""
+    files = _pruned_files(segs, "postings", fetch_terms)
+    if files is None:
+        return None
+    kernel = _with_seg(kernel)
+    out = []
+    for i, seg_files in enumerate(files):
+        if not seg_files:
+            continue
+        # the seg column picks a segment's tombstones/cursor (_tomb_for)
+        post = _read_local(seg_files, None, "term", fetch_terms).assign(seg=np.int32(i))
+        out += [kernel((i, g), gdf.reset_index(drop=True)) for g, gdf in post.groupby("group", sort=True)]
+    return out
+
+
+def _label_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame]) -> pd.DataFrame | None:
+    """Local kernel outputs (seg, doc_id, score[, query_id]) → the same
+    rows with conv_id and turn_idx, or None when there are none.  Doc
+    ids are segment-local, so each segment's candidates are labelled
+    from only their ``conv_rank`` rows of that segment's convs files."""
+    cand = pd.concat(frames, ignore_index=True) if frames else None
+    if cand is None or cand.empty:
+        return None
+    turn_bits = segs[0].turn_bits
+    docs = cand["doc_id"].to_numpy(dtype=np.int64)
+    cand = cand.assign(
+        conv_rank=docs >> turn_bits,
+        turn_idx=(docs & ((1 << turn_bits) - 1)).astype(np.int32),
+    )
+    convs = pd.concat([
+        _read_local(
+            [p for p, _ in segs[i]._listing["convs"]], ["conv_id", "conv_rank"],
+            "conv_rank", np.unique(part["conv_rank"]).tolist(),
+        ).assign(seg=np.int32(i))
+        for i, part in cand.groupby("seg")
+    ], ignore_index=True)
+    return cand.merge(convs, on=["seg", "conv_rank"])
+
+
+def _topk_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame], k: int) -> DataFrame:
+    """Local kernel outputs (≤ S·G·k candidates) → the labelled top-k."""
+    cand = _label_local(segs, frames)
+    if cand is None:
+        return _topk_frame(segs[0].spark, None)
+    return _topk_frame(segs[0].spark, (
+        cand.sort_values(["score", "conv_id", "turn_idx"], ascending=[False, True, True])
+        .head(k)[["conv_id", "turn_idx", "score"]]
+    ))
+
+
+def _batch_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame],
+                 specs: list[tuple[int, QuerySpec, int]]) -> DataFrame:
+    """Local batch-kernel outputs → each query's labelled top-k, the
+    rows :func:`_rank_per_query` keeps: row number ≤ that query's k
+    in (score desc, conv_id, turn_idx) order, with the kernel's
+    position mapped back to the caller's list index."""
+    cand = _label_local(segs, frames)
+    if cand is None:
+        return _topk_frame(segs[0].spark, None, BATCH_TOPK_SCHEMA)
+    ranked = cand.sort_values(
+        ["query_id", "score", "conv_id", "turn_idx"], ascending=[True, False, True, True]
+    )
+    pos = ranked["query_id"].to_numpy()
+    ks = np.array([kk for _, _, kk in specs], dtype=np.int64)
+    keep = ranked.groupby("query_id").cumcount().to_numpy() < ks[pos]
+    ids = np.array([i for i, _, _ in specs], dtype=np.int32)
+    out = ranked[keep].assign(query_id=ids[pos[keep]])
+    return _topk_frame(segs[0].spark, out[["query_id", "conv_id", "turn_idx", "score"]],
+                       BATCH_TOPK_SCHEMA)
 
 
 def local_rows(df: DataFrame, columns: list[str], key: str, values: list) -> DataFrame | None:
@@ -653,35 +765,44 @@ class CompressedIndex:
                     f"TURN_BITS={TURN_BITS}; rebuild the index or match "
                     f"the engine version that wrote it"
                 )
-            self._convs = spark.read.parquet(self.paths.convs).cache()
-        else:
-            # streaming/dense builds carry an explicit per-doc map
-            self._docmap = spark.read.parquet(self.paths.docmap).cache()
         self._idf_cache: dict[str, float] = {}
         self._df_cache: dict[str, int] = {}
         self._tomb_memo: dict[tuple, Tombstones] = {}
         self._after_memo: dict[tuple, int] = {}
         self._syn_memo: dict[str, list[str]] | None = None
-        from collections import OrderedDict
-
-        self._results: "OrderedDict[tuple, list]" = OrderedDict()
-        # persistent DataFrame handles: the parquet file index (directory
-        # listing over NUM_BUCKETS partition dirs) is built once and
-        # reused by every query instead of re-listing per query.
-        # Explicit schemas: an index over an all-stopword corpus has an
-        # EMPTY idf table, which schema inference cannot read.
-        from .build import BLOCKS_SCHEMA
-
-        self._postings = spark.read.schema(BLOCKS_SCHEMA + ", bucket int").parquet(
-            self.paths.postings
-        )
-        self._idf = spark.read.schema("term string, df long, idf double, bucket int").parquet(
-            self.paths.idf
-        )
         # the driver-local path's file listing, built on first use
-        # (:meth:`_local_files`) so opens — MultiIndex's per segment
+        # (:meth:`_local_listing`) so opens — MultiIndex's per segment
         # included — never pay for it
         self._listing: dict | None = None
+
+    # persistent DataFrame handles, built on first use: the parquet file
+    # index (directory listing over NUM_BUCKETS partition dirs, a Spark
+    # job when there are many) and the convs/docmap schema inference (a
+    # job too) are paid once by the first Spark-plan query, never by an
+    # open whose queries all run on the driver
+
+    @cached_property
+    def _convs(self) -> DataFrame:
+        return self.spark.read.parquet(self.paths.convs).cache()
+
+    @cached_property
+    def _docmap(self) -> DataFrame:
+        # streaming/dense builds carry an explicit per-doc map
+        return self.spark.read.parquet(self.paths.docmap).cache()
+
+    @cached_property
+    def _postings(self) -> DataFrame:
+        # explicit schemas: an index over an all-stopword corpus has an
+        # EMPTY idf table, which schema inference cannot read
+        from .build import BLOCKS_SCHEMA
+
+        return self.spark.read.schema(BLOCKS_SCHEMA + ", bucket int").parquet(self.paths.postings)
+
+    @cached_property
+    def _idf(self) -> DataFrame:
+        return self.spark.read.schema("term string, df long, idf double, bucket int").parquet(
+            self.paths.idf
+        )
 
     def warm(self) -> None:
         """Materialize the lookup caches (convs/docmap).
@@ -730,7 +851,7 @@ class CompressedIndex:
             self._listing = {
                 "postings": _bucket_files(self.paths.postings),
                 "idf": _bucket_files(self.paths.idf),
-                "convs": [p for p, _ in _data_files(self.paths.convs)],
+                "convs": _data_files(self.paths.convs),
             } if local else {}
         return self._listing
 
@@ -738,76 +859,29 @@ class CompressedIndex:
         """Files of ``table``'s (postings/idf) buckets holding ``terms``
         when they total at most :data:`LOCAL_BUDGET_BYTES`, else None —
         the query then takes the Spark plan.  Only conv_rank indexes on
-        the local filesystem run locally; the postings, idf and convs
-        dirs are listed once."""
-        listing = self._local_listing()
-        if not listing:
+        the local filesystem run locally (:func:`_pruned_files`)."""
+        files = _pruned_files([self], table, terms)
+        return None if files is None else files[0]
+
+    def _convs_files(self) -> list[str] | None:
+        """The convs files when the index runs locally and they total at
+        most :data:`LOCAL_BUDGET_BYTES`, else None."""
+        convs = self._local_listing().get("convs")
+        if convs is None or sum(n for _, n in convs) > LOCAL_BUDGET_BYTES:
             return None
-        files = [f for b in self._buckets(terms) for f in listing[table].get(b, ())]
-        if sum(n for _, n in files) > LOCAL_BUDGET_BYTES:
-            return None
-        return [p for p, _ in files]
+        return [p for p, _ in convs]
 
-    def _local_groups(self, fetch_terms: list[str], kernel) -> list[pd.DataFrame] | None:
-        """Driver-local executor: read the pruned postings with pyarrow,
-        group them by ``group`` in pandas and hand each group to the very
-        ``kernel`` closure ``applyInPandas`` would run.  Returns the
-        per-group outputs, or None when the query is over budget."""
-        files = self._local_files("postings", fetch_terms)
-        if not files:
-            return None if files is None else []
-        post = _read_local(files, None, "term", fetch_terms)
-        return [
-            kernel((g,), gdf.reset_index(drop=True))
-            for g, gdf in post.groupby("group", sort=True)
-        ]
-
-    def _label_local(self, frames: list[pd.DataFrame]) -> pd.DataFrame | None:
-        """Local kernel outputs (doc_id, score[, query_id]) → the same rows
-        with conv_id and turn_idx, or None when there are none.  Only the
-        candidates' ``conv_rank`` rows of convs are read."""
-        cand = pd.concat(frames, ignore_index=True) if frames else None
-        if cand is None or cand.empty:
-            return None
-        docs = cand["doc_id"].to_numpy(dtype=np.int64)
-        cand = cand.assign(
-            conv_rank=docs >> self.turn_bits,
-            turn_idx=(docs & ((1 << self.turn_bits) - 1)).astype(np.int32),
-        )
-        convs = _read_local(
-            self._listing["convs"], ["conv_id", "conv_rank"],
-            "conv_rank", np.unique(cand["conv_rank"]).tolist(),
-        )
-        return cand.merge(convs, on="conv_rank")
-
-    def _topk_local(self, frames: list[pd.DataFrame], k: int) -> DataFrame:
-        """Local kernel outputs (≤ G·k candidates) → the labelled top-k."""
-        cand = self._label_local(frames)
-        if cand is None:
-            return _topk_frame(self.spark, None)
-        return _topk_frame(self.spark, (
-            cand.sort_values(["score", "conv_id", "turn_idx"], ascending=[False, True, True])
-            .head(k)[["conv_id", "turn_idx", "score"]]
-        ))
-
-    def _batch_local(self, frames: list[pd.DataFrame], specs: list[tuple[int, QuerySpec, int]]) -> DataFrame:
-        """Local batch-kernel outputs → each query's labelled top-k, the
-        rows :func:`_rank_per_query` keeps: row number ≤ that query's k
-        in (score desc, conv_id, turn_idx) order, with the kernel's
-        position mapped back to the caller's list index."""
-        cand = self._label_local(frames)
-        if cand is None:
-            return _topk_frame(self.spark, None, BATCH_TOPK_SCHEMA)
-        ranked = cand.sort_values(
-            ["query_id", "score", "conv_id", "turn_idx"], ascending=[True, False, True, True]
-        )
-        pos = ranked["query_id"].to_numpy()
-        ks = np.array([kk for _, _, kk in specs], dtype=np.int64)
-        keep = ranked.groupby("query_id").cumcount().to_numpy() < ks[pos]
-        ids = np.array([i for i, _, _ in specs], dtype=np.int32)
-        out = ranked[keep].assign(query_id=ids[pos[keep]])
-        return _topk_frame(self.spark, out[["query_id", "conv_id", "turn_idx", "score"]],
-                           BATCH_TOPK_SCHEMA)
+    def _conv_lookup(self, conv_ids: list[str]) -> dict[str, tuple[int, int]]:
+        """conv_id → (conv_rank, group) of the named conversations present
+        in this index (conv_rank scheme): read from the convs files on the
+        driver within the local budget, else one small Spark collect."""
+        cols = ["conv_id", "conv_rank", "group"]
+        files = self._convs_files()
+        if files is not None:
+            rows = _read_local(files, cols, "conv_id", conv_ids).itertuples(index=False)
+        else:
+            rows = self._convs.filter(F.col("conv_id").isin(conv_ids)).select(*cols).collect()
+        return {c: (int(r), int(g)) for c, r, g in rows}
 
     def idf_map(self, terms: list[str]) -> dict[str, float]:
         """Bucket-pruned idf lookup; absent terms get df=0 idf (oracle
@@ -1111,12 +1185,6 @@ class CompressedIndex:
 
     # -- query -------------------------------------------------------
 
-    def topk_cached(
-        self, query_text: str, mode: str = "disjunctive", k: int = 10, algo: str = "auto"
-    ) -> list:
-        """Collected top-k with an LRU result cache (see :func:`_lru_topk`)."""
-        return _lru_topk(self, query_text, mode, k, algo)
-
     def _resolve_spec(self, spec: "QuerySpec | None") -> "QuerySpec | None":
         """Resolve a phrase-prefix marker (ES ``match_phrase_prefix``:
         ``"incid resp*"``) into its vocabulary variants — one idf-table
@@ -1147,11 +1215,13 @@ class CompressedIndex:
             )
         # memo: the same deletion list arrives on every topk/match_count
         # call of a request (service.search resolves it twice otherwise)
-        # — one small collect job per distinct list, not per call
+        # — one convs lookup per distinct list, not per call
         key = _tomb_key(tombstones)
         hit = self._tomb_memo.get(key)
         if hit is None:
-            hit = resolve_tombstones(self._convs, tombstones)
+            hit = _tombstones(
+                tombstones, lambda need: {c: r for c, (r, _g) in self._conv_lookup(need).items()}
+            )
             self._tomb_memo[key] = hit
         return hit
 
@@ -1165,8 +1235,9 @@ class CompressedIndex:
         from the index (e.g. its docs live in another segment) still
         cuts correctly through the boundary rank r = |{convs < conv}|:
         every doc after the cursor has ``doc_id >= r << turn_bits``,
-        i.e. ``doc_id > (r << turn_bits) - 1``.  One small pruned-scan
-        job per distinct cursor, memoized."""
+        i.e. ``doc_id > (r << turn_bits) - 1``.  One convs lookup per
+        distinct cursor, memoized: on the driver within the local budget,
+        else a small Spark job."""
         if search_after is None:
             return None
         if self.scheme != "conv_rank":
@@ -1184,15 +1255,18 @@ class CompressedIndex:
         key = (str(conv_id), int(turn_idx))
         cdoc = self._after_memo.get(key)
         if cdoc is None:
-            rows = (
-                self._convs.filter(F.col("conv_id") == conv_id)
-                .select("conv_rank")
-                .collect()
-            )
-            if rows:
-                cdoc = (int(rows[0][0]) << self.turn_bits) | int(turn_idx)
+            hit = self._conv_lookup([conv_id]).get(conv_id)
+            if hit is not None:
+                cdoc = (hit[0] << self.turn_bits) | int(turn_idx)
             else:
-                r = self._convs.filter(F.col("conv_id") < conv_id).count()
+                files = self._convs_files()
+                if files is None:
+                    r = self._convs.filter(F.col("conv_id") < conv_id).count()
+                else:
+                    import pyarrow.parquet as pq
+
+                    r = pq.read_table(files, columns=["conv_id"],
+                                      filters=[("conv_id", "<", conv_id)]).num_rows
                 cdoc = (r << self.turn_bits) - 1
             self._after_memo[key] = cdoc
         return (float(score), cdoc)
@@ -1287,9 +1361,9 @@ class CompressedIndex:
             after=self._resolve_after(search_after),
         )
         if scope is None:
-            frames = self._local_groups(fetch_terms, kernel)
+            frames = _local_groups([self], fetch_terms, kernel)
             if frames is not None:
-                return self._topk_local(frames, k)
+                return _topk_local([self], frames, k)
         post = self.postings_df(fetch_terms)
         # v5: single-sided grouped kernel — the only exchange carries the
         # bucket-pruned postings; doclens are inline in the blocks (the
@@ -1395,7 +1469,7 @@ class CompressedIndex:
             scoped=scope is not None,
         )
         if scope is None:
-            frames = self._local_groups(fetch_terms, kernel)
+            frames = _local_groups([self], fetch_terms, kernel)
             if frames is not None:
                 return sum(int(f["n"].sum()) for f in frames)
         post = self.postings_df(fetch_terms)
@@ -1483,19 +1557,13 @@ class CompressedIndex:
 
     def _doc_coords(self, conv_id: str, turn_idx: int) -> tuple[int, int] | None:
         """(group, doc_id) of one (conv_id, turn_idx), or None when the
-        conversation is absent from this index — one pruned lookup job
-        on the thin convs/docmap table (diagnostic path, not cached)."""
+        conversation is absent from this index — one pruned lookup on
+        the thin convs/docmap table (diagnostic path, not cached)."""
         if self.scheme == "conv_rank":
-            rows = (
-                self._convs.filter(F.col("conv_id") == conv_id)
-                .select("conv_rank", "group")
-                .collect()
-            )
-            if not rows:
+            hit = self._conv_lookup([conv_id]).get(conv_id)
+            if hit is None:
                 return None
-            return int(rows[0]["group"]), (
-                (int(rows[0]["conv_rank"]) << self.turn_bits) | int(turn_idx)
-            )
+            return hit[1], (hit[0] << self.turn_bits) | int(turn_idx)
         rows = (
             self._docmap.filter(
                 (F.col("conv_id") == conv_id) & (F.col("turn_idx") == int(turn_idx))
@@ -1636,9 +1704,7 @@ class CompressedIndex:
             for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
         ]
         if not specs:
-            return self.spark.createDataFrame(
-                [], "query_id int, conv_id string, turn_idx int, score double"
-            )
+            return _topk_frame(self.spark, None, BATCH_TOPK_SCHEMA)
         fetch_terms, score_terms = _batch_term_sets(specs)
         merged_idf = self.idf_map(sorted(score_terms))
         # per-query maps carry that query's boosts (plists stay built
@@ -1660,9 +1726,9 @@ class CompressedIndex:
             scoped=scope is not None,
         )
         if scope is None:
-            frames = self._local_groups(sorted(fetch_terms), kernel)
+            frames = _local_groups([self], sorted(fetch_terms), kernel)
             if frames is not None:
-                return self._batch_local(frames, specs)
+                return _batch_local([self], frames, specs)
         post = self.postings_df(sorted(fetch_terms))
         if scope is not None:
             cand = (

@@ -1,6 +1,9 @@
 """Driver-local top-k: a query whose pruned bucket files fit the
 ``LOCAL_BUDGET_BYTES`` budget runs in-process (pyarrow read + the same
-group kernel) and must return exactly the rows of the Spark plan.
+group kernel) and must return exactly the rows of the Spark plan.  Both
+readers share the executor: ``CompressedIndex`` (the sm index) and the
+``MultiIndex`` live view (three disjoint xs segments, and a base plus an
+update segment with a shadow sidecar).
 
 At fixture sizes every unscoped query fits the budget, so these tests
 are what keeps the Spark plan covered: the Spark side forces the budget
@@ -19,7 +22,9 @@ from pyspark.sql import functions as F
 from search_engine_spark import service
 from search_engine_spark.corpus import REFERENCE_QUERIES
 from search_engine_spark.index import reader
+from search_engine_spark.index.multi import MultiIndex
 from search_engine_spark.index.reader import CompressedIndex
+from search_engine_spark.textproc import analyze_text
 
 
 @pytest.fixture(scope="module")
@@ -103,22 +108,32 @@ def test_query_options_match_spark_plan(local_ix, spark_ix, spark_plan, query, m
     )
 
 
-def test_tombstones_and_search_after_match_spark_plan(local_ix, spark_ix, spark_plan):
-    q = "term0000 term0001"
-    page = local_ix.topk(q, k=10).collect()
+def _tombstones_and_cursor(spark, local, remote, spark_plan, q):
+    """Tombstoned and search_after reads of ``q``: the local reader gives
+    the Spark plan's rows and counts, and resolves the deletion list and
+    the cursor (a conversation it holds, and one it does not) with zero
+    jobs."""
+    page = local.topk(q, k=10).collect()
     assert len(page) == 10
     dead = [page[0]["conv_id"], (page[1]["conv_id"], int(page[1]["turn_idx"]))]
-    got = _rows(local_ix.topk(q, k=10, tombstones=dead))
-    assert got == spark_plan(lambda: _rows(spark_ix.topk(q, k=10, tombstones=dead)))
+    (got, n), jobs = _jobs(spark, lambda: (
+        _rows(local.topk(q, k=10, tombstones=dead)), local.match_count(q, tombstones=dead)
+    ))
+    assert jobs == 0
+    assert got == spark_plan(lambda: _rows(remote.topk(q, k=10, tombstones=dead)))
     assert page[0]["conv_id"] not in {r[0] for r in got}
-    assert local_ix.match_count(q, tombstones=dead) == spark_plan(
-        lambda: spark_ix.match_count(q, tombstones=dead)
-    )
+    assert n == spark_plan(lambda: remote.match_count(q, tombstones=dead))
     last = page[4]
-    cursor = (last["score"], last["conv_id"], int(last["turn_idx"]))
-    got = _rows(local_ix.topk(q, k=5, search_after=cursor))
-    assert got == spark_plan(lambda: _rows(spark_ix.topk(q, k=5, search_after=cursor)))
-    assert got == [tuple(r) for r in page[5:10]]
+    held = (last["score"], last["conv_id"], int(last["turn_idx"]))
+    for cursor in (held, (last["score"], last["conv_id"] + "~absent", 0)):
+        got, jobs = _jobs(spark, lambda: _rows(local.topk(q, k=5, search_after=cursor)))
+        assert jobs == 0
+        assert got == spark_plan(lambda: _rows(remote.topk(q, k=5, search_after=cursor)))
+    assert _rows(local.topk(q, k=5, search_after=held)) == [tuple(r) for r in page[5:10]]
+
+
+def test_tombstones_and_search_after_match_spark_plan(spark, local_ix, spark_ix, spark_plan):
+    _tombstones_and_cursor(spark, local_ix, spark_ix, spark_plan, "term0000 term0001")
 
 
 def test_batch_matches_spark_plan(spark, local_ix, spark_ix, spark_plan):
@@ -215,3 +230,155 @@ def test_search_page_matches_spark_plan(spark, local_ix, spark_ix, spark_plan, s
     for page in (pages["term0000 term0001"], pages['"term0000 term0001"']):
         assert page["results"] and all(r["snippet"] for r in page["results"])
     assert reader.local_rows(turns.filter(F.col("role") == "user"), ["conv_id"], "conv_id", ["x"]) is None
+
+
+# -- MultiIndex: the same executor over (seg, CompressedIndex) pairs -------
+
+_MULTI_OPTIONS = [
+    ("term0001 term0002", "disjunctive", {"min_match": 2}),
+    ("term0001^3 term0002", "disjunctive", {}),
+    ("term0001^0.5 term0002^2.5 term0003", "disjunctive", {"algo": "exact"}),
+    ("term0000 term0001 term0002", "disjunctive", {"k": 200}),
+    ('"term0001 term0002"~2', "phrase", {}),
+    ('"phrase alpha beta"', "phrase", {}),
+    ('"alpha" NOT "beta"', "boolean", {}),
+    ("term0001 zzzznotacorpusword", "disjunctive", {}),
+    ("zzzznotacorpusword qqqqnotaword", "conjunctive", {}),
+]
+
+
+@pytest.fixture(scope="module")
+def local_multi(spark, three_segments):
+    return MultiIndex(spark, three_segments)
+
+
+@pytest.fixture(scope="module")
+def spark_multi(spark, three_segments):
+    return MultiIndex(spark, three_segments)
+
+
+@pytest.fixture(scope="module")
+def updated_roots(base_root, update_segment):
+    return [base_root, update_segment]
+
+
+def test_multi_open_launches_no_job(spark, three_segments, updated_roots):
+    """N and Σdl come from the segments' doclen tables and shadow
+    sidecars, read on the driver (their exactness is pinned by
+    test_multi_index and test_update)."""
+    for roots in (three_segments, updated_roots):
+        multi, jobs = _jobs(spark, lambda: MultiIndex(spark, roots))
+        assert jobs == 0
+    assert multi._shadow_keys[1]  # the update segment's sidecar was read
+
+
+def test_multi_reference_queries_match_spark_plan(spark, three_segments, spark_multi, spark_plan):
+    """All 30 reference queries over three segments, on a fresh reader
+    (cold idf): the local path gives the Spark plan's rows and counts
+    with zero jobs."""
+    local = MultiIndex(spark, three_segments)
+    for q in REFERENCE_QUERIES:
+        args = (q["query_text"], q["mode"])
+        (got, n), jobs = _jobs(
+            spark, lambda: (_rows(local.topk(*args, k=q["k"])), local.match_count(*args))
+        )
+        assert jobs == 0, q
+        assert got == spark_plan(lambda: _rows(spark_multi.topk(*args, k=q["k"]))), q
+        assert n == spark_plan(lambda: spark_multi.match_count(*args)), q
+
+
+@pytest.mark.parametrize("query, mode, kwargs", _MULTI_OPTIONS)
+def test_multi_query_options_match_spark_plan(spark, local_multi, spark_multi, spark_plan, query, mode, kwargs):
+    k = kwargs.pop("k", 10)
+    got, jobs = _jobs(spark, lambda: _rows(local_multi.topk(query, mode, k=k, **kwargs)))
+    assert jobs == 0
+    assert got == spark_plan(lambda: _rows(spark_multi.topk(query, mode, k=k, **kwargs)))
+    kwargs.pop("algo", None)
+    assert local_multi.match_count(query, mode, **kwargs) == spark_plan(
+        lambda: spark_multi.match_count(query, mode, **kwargs)
+    )
+
+
+def test_multi_tombstones_and_search_after_match_spark_plan(spark, three_segments, spark_multi, spark_plan):
+    # a conversation of the first segment also has turns in the third
+    _tombstones_and_cursor(spark, MultiIndex(spark, three_segments), spark_multi, spark_plan, "term0001 term0002")
+
+
+def test_multi_batch_matches_spark_plan(spark, local_multi, spark_multi, spark_plan):
+    queries = [(q["query_text"], q["mode"], q["k"]) for q in REFERENCE_QUERIES]
+    queries += [("term0001^3 term0002", "disjunctive"), ("zzzznotacorpusword", "disjunctive"),
+                ("", "disjunctive"), ("term0001 term0002", "disjunctive", 3)]
+
+    def key(rows):
+        return sorted(rows, key=lambda r: (r[0], -r[3], r[1], r[2]))
+
+    got, jobs = _jobs(spark, lambda: _rows(local_multi.topk_batch(queries, k=10)))
+    assert jobs == 0
+    assert got
+    assert key(got) == key(spark_plan(lambda: _rows(spark_multi.topk_batch(queries, k=10))))
+    assert sum(r[0] == len(queries) - 1 for r in got) == 3
+
+
+def test_multi_idf_and_shadow_df_match_spark_plan(spark, three_segments, updated_roots, corpora, spark_plan):
+    """Summed df and idf, and on an update segment the shadow-corrected
+    df, on fresh readers: local (zero jobs) equals the Spark plan."""
+    pdf, _, delta = corpora
+    shadowed = pdf.merge(delta[["conv_id", "turn_idx"]], on=["conv_id", "turn_idx"])
+    terms = sorted({t for text in shadowed["text"] for t in analyze_text(text)})
+    terms += ["term0001", "term0002", "zebra", "nosuchterm0xyz"]
+    for roots in (three_segments, updated_roots):
+        local = MultiIndex(spark, roots)
+        (idf, df), jobs = _jobs(spark, lambda: (local.idf_map(terms), local.df_map(terms)))
+        assert jobs == 0
+        remote = MultiIndex(spark, roots)
+        assert idf == spark_plan(lambda: remote.idf_map(terms))
+        assert df == spark_plan(lambda: remote.df_map(terms))
+    corr = local._shadow_df_counts(terms)
+    assert any(corr.values())
+    assert corr == spark_plan(lambda: remote._shadow_df_counts(terms))
+
+
+def test_multi_update_segment_matches_spark_plan(spark, updated_roots, spark_plan):
+    """Reads over a base plus an update segment exclude the shadowed
+    turns on both paths alike, user tombstones and batches included."""
+    local = MultiIndex(spark, updated_roots)
+    remote = MultiIndex(spark, updated_roots)
+    queries = [("term0001 term0002", "disjunctive"), ("updated special zebra", "disjunctive"),
+               ('"phrase alpha beta"', "phrase"), ('"alpha" AND "beta"', "boolean")]
+    for q in queries:
+        got, jobs = _jobs(spark, lambda: (_rows(local.topk(*q, k=10)), local.match_count(*q)))
+        assert jobs == 0, q
+        assert got == spark_plan(lambda: (_rows(remote.topk(*q, k=10)), remote.match_count(*q))), q
+    dead = ["conv-000001", ("conv-000002", 1)]
+    got, jobs = _jobs(spark, lambda: _rows(local.topk_batch(queries, k=10, tombstones=dead)))
+    assert jobs == 0
+    assert sorted(got) == sorted(spark_plan(lambda: _rows(remote.topk_batch(queries, k=10, tombstones=dead))))
+
+
+def test_multi_over_budget_query_takes_spark_plan(spark, three_segments, monkeypatch):
+    """The budget holds for the files of ALL segments together: a budget
+    that fits every segment's files alone but not their sum sends the
+    query to the Spark plan, which gives the same rows."""
+    multi = MultiIndex(spark, three_segments)
+    q, terms = "term0001 term0002", ["term0001", "term0002"]
+    want, jobs = _jobs(spark, lambda: _rows(multi.topk(q, k=10)))
+    assert jobs == 0 and want
+    sizes = [sum(map(os.path.getsize, seg._local_files("postings", terms))) for seg in multi.segments]
+    assert max(sizes) < sum(sizes) - 1
+    monkeypatch.setattr(reader, "LOCAL_BUDGET_BYTES", sum(sizes) - 1)
+    got, jobs = _jobs(spark, lambda: _rows(multi.topk(q, k=10)))
+    assert got == want
+    assert jobs > 0
+
+
+def test_multi_scoped_query_takes_spark_plan(spark, local_multi, xs_corpus):
+    users = xs_corpus[xs_corpus.role == "user"][["conv_id", "turn_idx"]]
+    scope = spark.createDataFrame(users)
+    allowed = set(users.itertuples(index=False, name=None))
+    q = "term0001 term0002"
+    got, jobs = _jobs(spark, lambda: _rows(local_multi.topk(q, k=10, scope=scope)))
+    assert jobs > 0
+    assert got and all((c, t) in allowed for c, t, _s in got)
+    n, jobs = _jobs(spark, lambda: local_multi.match_count(q, scope=scope))
+    assert jobs > 0
+    assert 0 < n <= local_multi.match_count(q)

@@ -48,22 +48,6 @@ def xs_full_index(spark, xs_pdf, tmp_path_factory):
     return CompressedIndex(spark, out)
 
 
-@pytest.fixture(scope="module")
-def three_segments(spark, xs_pdf, tmp_path_factory):
-    """Base + two delta segments: a later conv range, then new TURNS of
-    already-segmented conversations (one conversation spans segments)."""
-    d = tmp_path_factory.mktemp("multi")
-    a = xs_pdf[(xs_pdf.conv_id < "conv-000012") & (xs_pdf.turn_idx < 3)]
-    b = xs_pdf[(xs_pdf.conv_id >= "conv-000012") & (xs_pdf.turn_idx < 3)]
-    c = xs_pdf[xs_pdf.turn_idx >= 3]
-    roots = []
-    for name, part in (("a", a), ("b", b), ("c", c)):
-        out = str(d / name)
-        build_index(spark, _spark_df(spark, part), out, BuildConfig(num_groups=2))
-        roots.append(out)
-    return roots
-
-
 def test_single_segment_matches_compressed_index(spark, xs_full_index):
     multi = MultiIndex(spark, [xs_full_index.paths.root])
     assert multi.n_docs == xs_full_index.n_docs
@@ -100,18 +84,6 @@ def test_batch_matches_per_query(spark, three_segments):
         res.sort(key=lambda x: (-x[2], x[0], x[1]))
     for i, q in enumerate(_PROBE_QUERIES[:4]):
         assert by_q.get(i, []) == _rows(multi, q), q["query_text"]
-
-
-def test_topk_cached_round_trip(spark, three_segments):
-    multi = MultiIndex(spark, three_segments)
-    first = multi.topk_cached("term0001 term0002", "disjunctive", 5)
-    again = multi.topk_cached("term0001 term0002", "disjunctive", 5)
-    assert again is first  # LRU hit, no second job
-    fresh = [
-        (r.conv_id, r.turn_idx, r.score)
-        for r in multi.topk("term0001 term0002", "disjunctive", 5).collect()
-    ]
-    assert [(r.conv_id, r.turn_idx, r.score) for r in first] == fresh
 
 
 def test_multi_over_extended_segment(spark, xs_pdf, xs_full_index, tmp_path_factory):

@@ -1,4 +1,4 @@
-"""Proximity rerank + result cache tests."""
+"""Proximity rerank tests."""
 
 from __future__ import annotations
 
@@ -61,10 +61,3 @@ def test_rerank_with_proximity(built, sm_oracle):
     bs = [b for *_x, b in out]
     assert bs == sorted(bs, reverse=True)
 
-
-def test_result_cache(built):
-    r1 = built.topk_cached("term0000", "disjunctive", 10)
-    assert ("term0000", "disjunctive", 10, "auto") in built._results
-    r2 = built.topk_cached("term0000", "disjunctive", 10)
-    assert r1 is r2  # same object → served from cache
-    assert len(r1) == 10

@@ -23,7 +23,6 @@ import pandas as pd
 import pytest
 
 from search_engine_spark.config import BuildConfig
-from search_engine_spark.corpus import generate_transcripts
 from search_engine_spark.index.build import build_index, load_meta
 from search_engine_spark.index.extend import (
     compact_segments,
@@ -59,49 +58,12 @@ def _assert_matches_fresh(fresh, under_test):
 
 
 @pytest.fixture(scope="module")
-def corpora():
-    """(original corpus, updated corpus, update delta) — the delta
-    rewrites 5 existing turns (new text, incl. a distinctive token) and
-    adds 2 brand-new turns, the realistic mixed batch."""
-    pdf = generate_transcripts("xs")[["conv_id", "turn_idx", "text"]].copy()
-    keys = list(
-        pdf.sort_values(["conv_id", "turn_idx"])[["conv_id", "turn_idx"]]
-        .iloc[[3, 10, 17, 24, 31]]
-        .itertuples(index=False, name=None)
-    )
-    updated = pdf.copy()
-    mask = updated.set_index(["conv_id", "turn_idx"]).index.isin(keys)
-    updated.loc[mask, "text"] = [
-        f"updated special zebra transcript number {i} term0001 alpha"
-        for i in range(mask.sum())
-    ]
-    new_rows = pd.DataFrame(
-        {
-            "conv_id": ["zzz-update-conv"] * 2,
-            "turn_idx": [0, 1],
-            "text": ["brand new turn zebra term0002", "another new turn beta"],
-        }
-    )
-    delta = pd.concat([updated[mask], new_rows], ignore_index=True)
-    updated = pd.concat([updated, new_rows], ignore_index=True)
-    return pdf, updated, delta
-
-
-@pytest.fixture(scope="module")
 def fresh_updated(spark, corpora, tmp_path_factory):
     """From-scratch build of the UPDATED corpus — the ground truth."""
     _, updated, _ = corpora
     d = str(tmp_path_factory.mktemp("upd_fresh"))
     build_index(spark, spark.createDataFrame(updated), d, BuildConfig(num_groups=2))
     return CompressedIndex(spark, d)
-
-
-@pytest.fixture(scope="module")
-def base_root(spark, corpora, tmp_path_factory):
-    pdf, _, _ = corpora
-    d = str(tmp_path_factory.mktemp("upd_base"))
-    build_index(spark, spark.createDataFrame(pdf), d, BuildConfig(num_groups=2))
-    return d
 
 
 def test_extend_updates_false_still_fails(spark, corpora, base_root, tmp_path):
@@ -125,16 +87,6 @@ def test_extend_with_updates_equals_fresh(
     # updated docs kept their doc ids: isomorphism only depends on the
     # genuinely new conversation sorting last (it does: zzz-…)
     assert load_meta(out)["docid_order_isomorphic"] is True
-
-
-@pytest.fixture(scope="module")
-def update_segment(spark, corpora, base_root, tmp_path_factory):
-    _, _, delta = corpora
-    d = str(tmp_path_factory.mktemp("upd_seg"))
-    ingest_update_segment(
-        spark, [base_root], spark.createDataFrame(delta), d
-    )
-    return d
 
 
 def test_sidecar_names_exactly_the_updated_turns(spark, corpora, update_segment):
