@@ -25,16 +25,20 @@ Spark-first staged build over the transcripts table:
            reducers instead of one (SURVEY.md §4.1 "skew handling") —
            sort-within-partition by (term, group, min_doc), then a
            ``mapInPandas`` kernel (one invocation per Arrow batch, NOT per
-           term) concatenates fragments into sorted posting runs and packs
-           them into blocks of ``block_size`` with block-max BM25 partial
+           term) decodes the batch's fragments column-wise, puts every
+           (term, group) run in doc order with one lexsort and packs the
+           runs into blocks of ``block_size`` with block-max BM25 partial
            upper bounds for WAND.  Written partitioned by
            ``bucket = pmod(xxhash64(term), NB)`` for query-time partition
            pruning (the Iceberg ``bucket(term)`` analog).
   phase 4  idf table (``idf = ln((1+N)/(1+df)) + 1``, IndexerService.java:966)
            and per-group doclen blobs for the query kernels.
 
-All heavy work is DataFrame ops + Arrow-batched numpy kernels; no
-per-row Python in any hot path, no driver-side loops over data.
+All heavy work is DataFrame ops + Arrow-batched numpy kernels, with no
+driver-side loops over data.  The merge and block-rewrite kernels
+(:class:`PostingBatch`) run whole-batch array operations; the per-row
+Python left is the tokenize kernel's ``analyze_text`` call per turn and
+its loop building one output row per fragment.
 """
 
 from __future__ import annotations
@@ -48,6 +52,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import BM25_B, BM25_K1, BuildConfig
@@ -60,6 +65,7 @@ FRAGMENTS_SCHEMA = (
     "term string, group int, n int, min_doc long, sum_dl long, "
     "doc_blob binary, tf_blob binary, pos_blob binary, dl_blob binary"
 )
+FRAGMENT_COLS = [f.split()[0] for f in FRAGMENTS_SCHEMA.split(",")]
 # Format v5: posting blocks carry the per-posting doclen stream
 # (dl_blob) INLINE — scoring needs each candidate doc's length, and
 # serving it from the side doclen table forced every query (and every
@@ -300,13 +306,7 @@ def _fragment_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         dl_stream[dl_off[fs] : dl_off[fe]],
                     )
                 )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "term", "group", "n", "min_doc", "sum_dl",
-                "doc_blob", "tf_blob", "pos_blob", "dl_blob",
-            ],
-        )
+        yield pd.DataFrame(rows, columns=FRAGMENT_COLS)
 
 
 # ---------------------------------------------------------------- phase 3
@@ -316,72 +316,130 @@ _BLOCK_COLS = [
     "term", "group", "block_id", "n", "first_doc", "last_doc",
     "doc_blob", "tf_blob", "pos_blob", "dl_blob", "max_tf", "min_dl",
 ]
+def _binary(stream: bytes, offsets: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """Row slices ``stream[offsets[i]:offsets[i + 1]]``, None where not
+    ``valid``, as an object array of bytes (sliced by Arrow, not by a
+    Python loop over rows)."""
+    return pa.Array.from_buffers(
+        pa.large_binary(), len(valid),
+        [
+            pa.py_buffer(np.packbits(valid, bitorder="little")),
+            pa.py_buffer(np.ascontiguousarray(offsets, dtype=np.int64)),
+            pa.py_buffer(stream),
+        ],
+    ).to_numpy(zero_copy_only=False)
 
 
-def _emit_blocks(rows: list, term: str | None, group: int, doc_ids: np.ndarray,
-                 tfs: np.ndarray, dls: np.ndarray | None, pos_stream: bytes | None,
-                 block_size: int) -> None:
-    """Pack one doc-sorted (term, group) posting run into block rows.
+class PostingBatch:
+    """A batch of fragment rows decoded column-wise: each blob column is
+    ONE ``varbyte_decode`` over the rows' concatenated bytes (the stream
+    is self-delimiting), and doc ids are a cumulative sum that restarts
+    at each row.
 
-    ``term is None`` packs a DOCLEN run: tf_blob carries the dl stream,
-    pos_blob is empty, bounds are zero.
+    Fragment layout: a ``term IS NULL`` row is a doclen row whose
+    per-doc lengths are its ``dl`` stream; it has no tf or pos stream.
+    Per posting the batch holds its source ``row``, ``doc``, ``tf`` (0 on
+    doclen rows) and ``dl``, and where its tf, dl and pos bytes sit in
+    one byte buffer (``tf_at``/``dl_at``/``pos_at``: start, length), so
+    any selection of postings is repacked by copying bytes
+    (:meth:`blob`); only doc ids are re-encoded (:meth:`doc_blob`).
     """
-    if pos_stream is not None and len(doc_ids) > block_size:
-        pos_offsets = stream_byte_offsets(pos_stream, tfs)
-    for bi, s in enumerate(range(0, len(doc_ids), block_size)):
-        e = min(s + block_size, len(doc_ids))
-        d = doc_ids[s:e]
-        t = tfs[s:e]
-        if pos_stream is None:
-            pos_part = None
-        elif len(doc_ids) <= block_size:
-            pos_part = pos_stream
-        else:
-            pos_part = bytes(pos_stream[pos_offsets[s] : pos_offsets[e]])
-        rows.append(
-            (
-                term, group, bi, e - s, int(d[0]), int(d[-1]),
-                varbyte_encode(_delta(d).astype(np.uint64)),
-                varbyte_encode(t.astype(np.uint64)),
-                pos_part,
-                # v5: per-posting doclens ride with the block (query-path
-                # scoring never touches the side doclen table)
-                None if term is None else varbyte_encode(dls[s:e].astype(np.uint64)),
-                0 if term is None else int(t.max()),
-                0 if term is None else int(dls[s:e].min()),
-            )
-        )
+
+    def __init__(self, pdf: pd.DataFrame, dl_blobs: pd.Series):
+        n = pdf["n"].to_numpy(np.int64)
+        self.terms = pdf["term"].to_numpy(object)
+        self.groups = pdf["group"].to_numpy(np.int64)
+        self.is_dl = pd.isna(self.terms)
+        self.row = np.repeat(np.arange(len(n)), n)
+        term_rows = ~self.is_dl
+        # uint64 sums wrap, but each row's difference is exact
+        cs = np.cumsum(varbyte_decode(b"".join(pdf["doc_blob"].to_numpy(object))))
+        first = np.cumsum(n) - n
+        before = np.where(first > 0, cs[np.maximum(first - 1, 0)], 0).astype(np.uint64)
+        self.doc = (cs - np.repeat(before, n)).view(np.int64)
+        tf_bytes = b"".join(pdf["tf_blob"].to_numpy(object)[term_rows])
+        dl_bytes = b"".join(dl_blobs.to_numpy(object))
+        pos_bytes = b"".join(pdf["pos_blob"].to_numpy(object)[term_rows])
+        has_tf = term_rows[self.row]
+        self.tf = np.zeros(len(self.row), dtype=np.int64)
+        self.tf[has_tf] = varbyte_decode(tf_bytes).astype(np.int64)
+        self.dl = varbyte_decode(dl_bytes).astype(np.int64)
+        self.buf = np.frombuffer(tf_bytes + dl_bytes + pos_bytes, dtype=np.uint8)
+        base = 0
+        spans = []
+        for stream, counts in ((tf_bytes, has_tf), (dl_bytes, np.ones(len(self.row), np.int64)), (pos_bytes, self.tf)):
+            off = stream_byte_offsets(stream, counts)
+            spans.append((off[:-1] + base, np.diff(off)))
+            base += len(stream)
+        self.tf_at, self.dl_at, self.pos_at = spans
+
+    def doc_blob(self, doc: np.ndarray, sel: np.ndarray, cuts: np.ndarray) -> np.ndarray:
+        """Postings ``sel`` (in output order) cut into rows at ``cuts``
+        → one delta+varbyte doc blob per row, ``doc`` giving the ids."""
+        d = doc[sel]
+        delta = d.copy()
+        delta[1:] -= d[:-1]
+        delta[cuts] = d[cuts]
+        stream = varbyte_encode(delta.astype(np.uint64))
+        counts = np.diff(np.append(cuts, len(sel)))
+        return _binary(stream, stream_byte_offsets(stream, counts), np.ones(len(cuts), bool))
+
+    def blob(self, at: tuple, sel: np.ndarray, cuts: np.ndarray, valid: np.ndarray) -> np.ndarray:
+        """The bytes ``at`` (start, length per posting) of postings ``sel``
+        copied in order, cut into rows at ``cuts``, None where not ``valid``."""
+        starts, lens = at[0][sel], at[1][sel]
+        off = np.zeros(len(sel) + 1, dtype=np.int64)
+        np.cumsum(lens, out=off[1:])
+        idx = np.repeat(starts - off[:-1], lens) + np.arange(off[-1])
+        return _binary(self.buf[idx].tobytes(), np.append(off[cuts], off[-1]), valid)
 
 
-def _merge_run(rows: list, pdf: pd.DataFrame, block_size: int) -> None:
-    """Merge the fragments of ONE (term, group), already min_doc-sorted."""
-    term_v = pdf["term"].iloc[0]
-    term = None if term_v is None or (isinstance(term_v, float) and np.isnan(term_v)) else str(term_v)
-    group = int(pdf["group"].iloc[0])
-    docs = np.concatenate(
-        [np.cumsum(varbyte_decode(b).astype(np.int64)) for b in pdf["doc_blob"]]
-    )
-    if term is None:
-        # doclen run: pack (doc_id, dl) stream; dl rides in tf_blob
-        dls = np.concatenate([varbyte_decode(b).astype(np.int64) for b in pdf["dl_blob"]])
-        if not np.all(docs[1:] > docs[:-1]):
-            o = np.argsort(docs, kind="stable")
-            docs, dls = docs[o], dls[o]
-        _emit_blocks(rows, None, group, docs, dls, None, None, block_size)
-        return
-    tfs = np.concatenate([varbyte_decode(b).astype(np.int64) for b in pdf["tf_blob"]])
-    dls = np.concatenate([varbyte_decode(b).astype(np.int64) for b in pdf["dl_blob"]])
-    pos_stream = b"".join(pdf["pos_blob"])
-    if not np.all(docs[1:] > docs[:-1]):
-        # fragments overlapped (never happens for disjoint input splits;
-        # kept as a correctness fallback) — reorder per posting
-        offsets = stream_byte_offsets(pos_stream, tfs)
-        o = np.argsort(docs, kind="stable")
-        pos_stream = b"".join(
-            pos_stream[offsets[i] : offsets[i + 1]] for i in o
-        )
-        docs, tfs, dls = docs[o], tfs[o], dls[o]
-    _emit_blocks(rows, term, group, docs, tfs, dls, pos_stream, block_size)
+def _run_starts(pdf: pd.DataFrame) -> np.ndarray:
+    """True on each row whose (term, group) differs from the row before
+    (NULL terms compare equal)."""
+    codes = pd.factorize(pdf["term"].to_numpy(object))[0]
+    groups = pdf["group"].to_numpy()
+    starts = np.ones(len(pdf), dtype=bool)
+    starts[1:] = (codes[1:] != codes[:-1]) | (groups[1:] != groups[:-1])
+    return starts
+
+
+def _merge_frame(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
+    """Fragment rows sorted by (term, group, min_doc) → block rows.
+
+    Fragments of one (term, group) run overlap in doc range when input
+    splits interleave doc ids, so each run is put in doc order by one
+    stable lexsort over the batch, then cut into blocks of
+    ``block_size``.  A ``term IS NULL`` run packs DOCLEN blocks: the dl
+    stream rides in tf_blob, pos_blob and dl_blob are NULL, bounds zero.
+    """
+    p = PostingBatch(pdf, pdf["dl_blob"])
+    run = np.cumsum(_run_starts(pdf))[p.row]
+    sel = np.lexsort((p.doc, run))
+    run_s = run[sel]
+    firsts = np.flatnonzero(np.r_[True, run_s[1:] != run_s[:-1]])
+    local = np.arange(len(sel)) - np.repeat(firsts, np.diff(np.append(firsts, len(sel))))
+    cuts = np.flatnonzero(local % block_size == 0)
+    src = p.row[sel[cuts]]
+    dl_block = p.is_dl[src]
+    ends = np.append(cuts[1:], len(sel))
+    d = p.doc[sel]
+    dl_post = p.is_dl[p.row]
+    tf_or_dl = tuple(np.where(dl_post, a, b) for a, b in zip(p.dl_at, p.tf_at))
+    return pd.DataFrame({
+        "term": p.terms[src],
+        "group": p.groups[src],
+        "block_id": local[cuts] // block_size,
+        "n": ends - cuts,
+        "first_doc": d[cuts],
+        "last_doc": d[ends - 1],
+        "doc_blob": p.doc_blob(p.doc, sel, cuts),
+        "tf_blob": p.blob(tf_or_dl, sel, cuts, np.ones(len(cuts), bool)),
+        "pos_blob": p.blob(p.pos_at, sel, cuts, ~dl_block),
+        "dl_blob": p.blob(p.dl_at, sel, cuts, ~dl_block),
+        "max_tf": np.where(dl_block, 0, np.maximum.reduceat(p.tf[sel], cuts)),
+        "min_dl": np.where(dl_block, 0, np.minimum.reduceat(p.dl[sel], cuts)),
+    }, columns=_BLOCK_COLS)
 
 
 def _make_merge_mapper(block_size: int):
@@ -399,11 +457,7 @@ def _make_merge_mapper(block_size: int):
                 buf = None
             if len(pdf) == 0:
                 continue
-            t = pdf["term"].to_numpy()
-            g = pdf["group"].to_numpy()
-            tail_mask = _eq(t, t[-1]) & (g == g[-1])
-            tail_len = int(tail_mask[::-1].argmin()) if not tail_mask.all() else len(pdf)
-            head_end = len(pdf) - tail_len
+            head_end = int(np.flatnonzero(_run_starts(pdf))[-1])
             buf = pdf.iloc[head_end:].reset_index(drop=True)
             if head_end:
                 yield _merge_frame(pdf.iloc[:head_end], block_size)
@@ -411,33 +465,6 @@ def _make_merge_mapper(block_size: int):
             yield _merge_frame(buf, block_size)
 
     return mapper
-
-
-def _eq(a: np.ndarray, v) -> np.ndarray:
-    """Elementwise equality treating None/NaN as equal to None/NaN."""
-    if v is None or (isinstance(v, float) and np.isnan(v)):
-        return np.asarray([x is None or (isinstance(x, float) and np.isnan(x)) for x in a])
-    return a == v
-
-
-def _neq_shift(a: np.ndarray) -> np.ndarray:
-    """a[1:] != a[:-1] with None==None (object arrays)."""
-    out = a[1:] != a[:-1]
-    nulls = np.asarray([x is None or (isinstance(x, float) and np.isnan(x)) for x in a])
-    both_null = nulls[1:] & nulls[:-1]
-    return np.asarray(out & ~both_null, dtype=bool)
-
-
-def _merge_frame(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    terms = pdf["term"].to_numpy()
-    groups = pdf["group"].to_numpy()
-    change = np.flatnonzero(_neq_shift(terms) | (groups[1:] != groups[:-1])) + 1
-    starts = np.concatenate([[0], change])
-    ends = np.concatenate([change, [len(pdf)]])
-    rows: list = []
-    for s, e in zip(starts, ends):
-        _merge_run(rows, pdf.iloc[s:e], block_size)
-    return pd.DataFrame(rows, columns=_BLOCK_COLS)
 
 
 # ---------------------------------------------------------------- phase 4
@@ -686,9 +713,12 @@ class IndexBuilder:
         """Ensure the tokenize stage has ≥1 partition per core.
 
         A small/single-file corpus yields too few input splits to use the
-        cluster; a hash repartition on conv_id fixes that (and co-locates
-        conversations).  Big corpora arrive with ample splits, so this is
-        a no-op there — no shuffle added at scale.
+        cluster; a hash repartition on doc_id fixes that.  It spreads each
+        conversation's turns over all tasks, so the fragments one
+        (term, group) gets from different tasks overlap in doc range and
+        the merge re-sorts the run (:func:`_merge_frame`).  Big corpora
+        arrive with ample splits, so this is a no-op there — no shuffle
+        added at scale.
         """
         p = self.spark.sparkContext.defaultParallelism
         if staged.rdd.getNumPartitions() < p:

@@ -36,8 +36,8 @@ valid byte-for-byte.  Two consequences, both handled:
   ``ORDER BY score, conv_id, turn_idx LIMIT k`` resolves them) — results
   remain identical to a from-scratch build.
 * Appending turns to an EXISTING conversation interleaves new doc ids
-  inside old posting runs; the merge kernel's stable-argsort fallback
-  (``build._merge_run``) reorders those runs per posting.
+  inside old posting runs; the merge kernel (``build._merge_frame``)
+  puts every run in doc order with a stable sort.
 
 Updating an already-indexed ``(conv_id, turn_idx)`` has two paths, the
 analogs of the reference's ``ON CONFLICT ... DO UPDATE`` upsert
@@ -62,11 +62,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import BuildConfig
 from .build import (
+    FRAGMENT_COLS,
     FRAGMENTS_SCHEMA,
     TURN_BITS,
     TURN_MASK,
     IndexBuilder,
     IndexPaths,
+    PostingBatch,
     build_index,
     conv_ranks,
     finalize_index,
@@ -75,7 +77,7 @@ from .build import (
     write_blocks,
     _fragment_kernel,
 )
-from .codec import delta_encode, stream_byte_offsets, varbyte_decode, varbyte_encode
+from .codec import varbyte_decode
 
 _DOC_EXPLODE_SCHEMA = "conv_rank long, max_turn long"
 
@@ -142,7 +144,7 @@ def _blocks_as_fragments(blocks: DataFrame) -> DataFrame:
 
     A block row IS a doc-sorted fragment: same delta+varbyte blobs, with
     ``first_doc`` as ``min_doc``.  Doclen blocks (``term IS NULL``) carry
-    their dl stream in ``tf_blob`` (see ``build._emit_blocks``); fragment
+    their dl stream in ``tf_blob`` (see ``build._merge_frame``); fragment
     doclen rows carry it in ``dl_blob`` — swapped here in the projection.
     """
     is_dl = F.col("term").isNull()
@@ -178,10 +180,6 @@ def _doclen_turns_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         )
 
 
-def _is_dl_row(term_v) -> bool:
-    return term_v is None or (isinstance(term_v, float) and np.isnan(term_v))
-
-
 _TURNS_DL_SCHEMA = "conv_rank long, turn_idx long, dl long"
 
 
@@ -204,63 +202,64 @@ def _doclen_turns_dl_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Data
         )
 
 
+def _rewrite_blocks(pdf: pd.DataFrame, tomb=None, ranks=None) -> pd.DataFrame:
+    """Posting/doclen BLOCK rows → fragment rows, one per block that keeps
+    a posting: ``tomb``'s postings (a resolved :class:`reader.Tombstones`
+    in the blocks' id space) are dropped, and with ``ranks`` = (old, new)
+    conv ranks sorted by old, doc ids move into the new rank space.
+
+    Each row's postings are re-sorted by their new doc id (stable): the
+    remap is monotone unless the segment came from an
+    order-isomorphism-breaking extend.  Doclen blocks carry their dl
+    stream in ``tf_blob``; their fragment rows carry it in ``dl_blob``
+    (the projection of :func:`_blocks_as_fragments`)."""
+    if pdf.empty:
+        return pd.DataFrame(columns=FRAGMENT_COLS)
+    p = PostingBatch(pdf, pdf["dl_blob"].where(pdf["term"].notna(), pdf["tf_blob"]))
+    keep = np.ones(len(p.doc), dtype=bool) if tomb is None else tomb.keep_mask(p.doc, TURN_BITS)
+    if not keep.any():
+        return pd.DataFrame(columns=FRAGMENT_COLS)
+    doc = p.doc
+    if ranks is not None:
+        old, new = ranks
+        conv = doc >> TURN_BITS
+        i = np.minimum(np.searchsorted(old, conv), len(old) - 1)
+        if not len(old) or (old[i] != conv)[keep].any():
+            raise ValueError(
+                "compact_segments: a posting references a conv_rank absent "
+                "from its segment's conv table — the segment is corrupt"
+            )
+        doc = (new[i] << TURN_BITS) | (doc & TURN_MASK)
+    sel = np.lexsort((doc, p.row))
+    sel = sel[keep[sel]]
+    row_s = p.row[sel]
+    cuts = np.flatnonzero(np.r_[True, row_s[1:] != row_s[:-1]])
+    src = row_s[cuts]
+    dl_row = p.is_dl[src]
+    return pd.DataFrame({
+        "term": p.terms[src],
+        "group": p.groups[src],
+        "n": np.diff(np.append(cuts, len(sel))),
+        "min_doc": doc[sel[cuts]],
+        "sum_dl": np.where(dl_row, np.add.reduceat(p.dl[sel], cuts), 0),
+        "doc_blob": p.doc_blob(doc, sel, cuts),
+        "tf_blob": p.blob(p.tf_at, sel, cuts, ~dl_row),
+        "pos_blob": p.blob(p.pos_at, sel, cuts, ~dl_row),
+        "dl_blob": p.blob(p.dl_at, sel, cuts, np.ones(len(cuts), bool)),
+    }, columns=FRAGMENT_COLS)
+
+
 def _make_drop_kernel(tomb):
     """mapInPandas kernel: posting/doclen BLOCK rows → fragment rows with
     tombstoned postings REMOVED (doc ids unchanged — no remap).
 
     The update leg of ``extend_index``: blocks of groups containing an
     updated doc are decode-filtered here; every other group passes
-    through :func:`_blocks_as_fragments` zero-decode.  Filtering keeps
-    doc order, so the output rows are valid doc-sorted fragments."""
+    through :func:`_blocks_as_fragments` zero-decode."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "term", "group", "n", "min_doc", "sum_dl",
-            "doc_blob", "tf_blob", "pos_blob", "dl_blob",
-        ]
         for pdf in batches:
-            rows: list[tuple] = []
-            for r in pdf.itertuples(index=False):
-                docs = np.cumsum(varbyte_decode(r.doc_blob).astype(np.int64))
-                keep = tomb.keep_mask(docs, TURN_BITS)
-                is_dl = _is_dl_row(r.term)
-                if keep.all():
-                    # untouched block: reuse its blobs byte-for-byte
-                    # (same projection as _blocks_as_fragments)
-                    rows.append((
-                        None if is_dl else r.term, int(r.group), int(r.n),
-                        int(docs[0]), 0,
-                        bytes(r.doc_blob),
-                        None if is_dl else bytes(r.tf_blob),
-                        None if is_dl else bytes(r.pos_blob),
-                        bytes(r.tf_blob) if is_dl else bytes(r.dl_blob),
-                    ))
-                    continue
-                if not keep.any():
-                    continue  # every posting in this block was updated
-                docs = docs[keep]
-                if is_dl:
-                    dls = varbyte_decode(r.tf_blob).astype(np.int64)[keep]
-                    rows.append((
-                        None, int(r.group), len(docs), int(docs[0]), 0,
-                        varbyte_encode(delta_encode(docs)), None, None,
-                        varbyte_encode(dls.astype(np.uint64)),
-                    ))
-                    continue
-                tfs = varbyte_decode(r.tf_blob).astype(np.int64)
-                dls = varbyte_decode(r.dl_blob).astype(np.int64)
-                pos = bytes(r.pos_blob)
-                offs = stream_byte_offsets(pos, tfs)
-                pos = b"".join(
-                    pos[offs[i] : offs[i + 1]] for i in np.flatnonzero(keep)
-                )
-                rows.append((
-                    r.term, int(r.group), len(docs), int(docs[0]), 0,
-                    varbyte_encode(delta_encode(docs)),
-                    varbyte_encode(tfs[keep].astype(np.uint64)), pos,
-                    varbyte_encode(dls[keep].astype(np.uint64)),
-                ))
-            yield pd.DataFrame(rows, columns=cols)
+            yield _rewrite_blocks(pdf, tomb)
 
     return kernel
 
@@ -268,13 +267,7 @@ def _make_drop_kernel(tomb):
 def _make_remap_kernel(tomb=None):
     """Cogroup kernel factory: one segment's posting blocks of one group
     → fragment rows with doc ids rewritten into the compacted global
-    rank space.
-
-    Ranks of both spaces are lexicographic over conv_id, so the remap is
-    monotone and re-encoding is the only work — EXCEPT when the segment
-    itself came from an order-isomorphism-breaking extend; then the
-    stable argsort fallback reorders each posting (and its position byte
-    run) the same way ``build._merge_run`` does.
+    rank space (:func:`_rewrite_blocks`).
 
     ``tomb`` (a resolved :class:`reader.Tombstones` in the segment's OLD
     id space) drops deleted postings before the remap — compaction is
@@ -282,83 +275,10 @@ def _make_remap_kernel(tomb=None):
     (finalize_index) reflect the post-deletion corpus exactly."""
 
     def kernel(key: tuple, blocks_pdf: pd.DataFrame, map_pdf: pd.DataFrame):
-        g = int(key[0])
         old = map_pdf["old_rank"].to_numpy(dtype=np.int64)
-        new = map_pdf["new_rank"].to_numpy(dtype=np.int64)
         o = np.argsort(old)
-        old_s, new_s = old[o], new[o]
-        rows: list[tuple] = []
-        for r in blocks_pdf.itertuples(index=False):
-            docs = np.cumsum(varbyte_decode(r.doc_blob).astype(np.int64))
-            is_dl = _is_dl_row(r.term)
-            if is_dl:
-                tfs = None
-                dls = varbyte_decode(r.tf_blob).astype(np.int64)
-                pos = None
-            else:
-                tfs = varbyte_decode(r.tf_blob).astype(np.int64)
-                dls = varbyte_decode(r.dl_blob).astype(np.int64)
-                pos = bytes(r.pos_blob)
-            if tomb is not None:
-                keep = tomb.keep_mask(docs, TURN_BITS)
-                if not keep.all():
-                    if not keep.any():
-                        continue  # every posting in this block deleted
-                    if pos is not None:
-                        offs = stream_byte_offsets(pos, tfs)
-                        pos = b"".join(
-                            pos[offs[i] : offs[i + 1]]
-                            for i in np.flatnonzero(keep)
-                        )
-                    docs = docs[keep]
-                    dls = dls[keep]
-                    if tfs is not None:
-                        tfs = tfs[keep]
-            ranks = docs >> TURN_BITS
-            turns = docs & TURN_MASK
-            idx = np.searchsorted(old_s, ranks)
-            if ranks.size and (
-                old_s.size == 0
-                or np.any(idx >= old_s.size)
-                or np.any(old_s[np.minimum(idx, old_s.size - 1)] != ranks)
-            ):
-                raise ValueError(
-                    "compact_segments: a posting references a conv_rank absent "
-                    "from its segment's conv table — the segment is corrupt"
-                )
-            ndocs = (new_s[idx] << TURN_BITS) | turns
-            if is_dl:
-                if not np.all(ndocs[1:] > ndocs[:-1]):
-                    o2 = np.argsort(ndocs, kind="stable")
-                    ndocs, dls = ndocs[o2], dls[o2]
-                rows.append(
-                    (
-                        None, g, len(ndocs), int(ndocs[0]), int(dls.sum()),
-                        varbyte_encode(delta_encode(ndocs)), None, None,
-                        varbyte_encode(dls.astype(np.uint64)),
-                    )
-                )
-                continue
-            if not np.all(ndocs[1:] > ndocs[:-1]):
-                offs = stream_byte_offsets(pos, tfs)
-                o2 = np.argsort(ndocs, kind="stable")
-                pos = b"".join(pos[offs[i] : offs[i + 1]] for i in o2)
-                ndocs, tfs, dls = ndocs[o2], tfs[o2], dls[o2]
-            rows.append(
-                (
-                    r.term, g, len(ndocs), int(ndocs[0]), 0,
-                    varbyte_encode(delta_encode(ndocs)),
-                    varbyte_encode(tfs.astype(np.uint64)), pos,
-                    varbyte_encode(dls.astype(np.uint64)),
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "term", "group", "n", "min_doc", "sum_dl",
-                "doc_blob", "tf_blob", "pos_blob", "dl_blob",
-            ],
-        )
+        new = map_pdf["new_rank"].to_numpy(dtype=np.int64)[o]
+        return _rewrite_blocks(blocks_pdf, tomb, (old[o], new))
 
     return kernel
 

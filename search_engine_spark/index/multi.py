@@ -218,7 +218,8 @@ class MultiIndex:
         ).cache()
 
     def warm(self) -> None:
-        self._convs.count()
+        for seg in self.segments:
+            seg.warm()
 
     # -- global statistics -------------------------------------------
 

@@ -805,14 +805,10 @@ class CompressedIndex:
         )
 
     def warm(self) -> None:
-        """Materialize the lookup caches (convs/docmap).
-
-        Doclens need no warming since v5 — they ride inside the posting
-        blocks the query already reads."""
-        if self.scheme == "conv_rank":
-            self._convs.count()
-        else:
-            self._docmap.count()
+        """List the files the driver-local path reads (:meth:`_local_listing`)
+        — no Spark job.  The Spark plan's cached handles fill on the
+        first query that takes it."""
+        self._local_listing()
 
     def _label(self, cand: DataFrame, extra: tuple = ()) -> DataFrame:
         """(doc_id, score[, extra…]) → (extra…, conv_id, turn_idx, score)."""

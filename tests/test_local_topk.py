@@ -272,6 +272,17 @@ def test_multi_open_launches_no_job(spark, three_segments, updated_roots):
     assert multi._shadow_keys[1]  # the update segment's sidecar was read
 
 
+def test_warm_launches_no_job(spark, sm_index_dir, three_segments):
+    """warm() lists the files the driver-local path reads, on both
+    readers, without a Spark job."""
+    single = CompressedIndex(spark, sm_index_dir)
+    multi = MultiIndex(spark, three_segments)
+    for ix, segs in ((single, [single]), (multi, multi.segments)):
+        _, jobs = _jobs(spark, ix.warm)
+        assert jobs == 0
+        assert all(seg._listing["postings"] for seg in segs)
+
+
 def test_multi_reference_queries_match_spark_plan(spark, three_segments, spark_multi, spark_plan):
     """All 30 reference queries over three segments, on a fresh reader
     (cold idf): the local path gives the Spark plan's rows and counts
