@@ -537,9 +537,7 @@ def main() -> None:
     idf_map = _weighted_idf(idx.idf_map(spec.score_terms), spec)
     conv0 = idx._convs.select("conv_id").orderBy("conv_id").first()["conv_id"]
     group0, doc0 = idx._doc_coords(conv0, 0)
-    explain_kernel = _make_explain_kernel(
-        spec, idf_map, idx.avgdl, doc0, idx.turn_bits
-    )
+    explain_kernel = _make_explain_kernel(spec, idf_map, idx.avgdl, doc0)
     sections.append(
         (
             "Per-doc score explain (ES _explain analog) — the distributed half",

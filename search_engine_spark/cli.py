@@ -131,19 +131,13 @@ def _load_tombstones(path: str | None) -> list | None:
 
 
 def _open_index(spark, index_arg: str):
-    """One root → CompressedIndex; comma-separated roots → MultiIndex
-    (LSM read path over base + delta segments); ``alias:<catalog>/<name>``
+    """One root, or comma-separated roots (LSM read path over base +
+    delta segments) → one reader over them; ``alias:<catalog>/<name>``
     resolves through the catalog first (zero-downtime flips)."""
     from .catalog import resolve_index_arg
-
-    roots = [p for p in resolve_index_arg(index_arg).split(",") if p]
-    if len(roots) == 1:
-        from .index.reader import CompressedIndex
-
-        return CompressedIndex(spark, roots[0])
     from .index.multi import MultiIndex
 
-    return MultiIndex(spark, roots)
+    return MultiIndex(spark, [p for p in resolve_index_arg(index_arg).split(",") if p])
 
 
 def cmd_compact(args: argparse.Namespace) -> None:
@@ -1159,9 +1153,9 @@ def _one_index_stats(spark, root: str) -> dict:
     from pyspark.sql import functions as F
 
     from .index.build import load_meta
-    from .index.reader import CompressedIndex
+    from .index.reader import Segment
 
-    idx = CompressedIndex(spark, root)
+    idx = Segment(spark, root)
     agg = idx._postings.filter(F.col("bucket") >= 0).agg(
         F.countDistinct("term").alias("n_terms"),
         F.sum("n").alias("n_postings"),

@@ -4,7 +4,7 @@ Replaces the reference's row-per-posting PostgreSQL upsert pipeline
 (``IndexerService.java:370-452`` batching, ``:57-68`` upserts) with a
 Spark-first staged build over the transcripts table:
 
-  phase 0  docmap/staging:  global dense ``doc_id`` by rank over
+  phase 0  doc ids/staging:  global ``doc_id`` by rank over
            ``(conv_id, turn_idx)`` (two-phase range partition + offset —
            the scalable analog of Ranker1's sorted-docId densification,
            ``Ranker1.java:128-137``), plus ``group = pmod(xxhash64(conv_id), G)``
@@ -101,8 +101,7 @@ def _dir(base: str, name: str) -> str:
 @dataclass
 class IndexPaths:
     root: str
-    convs: str = field(init=False)  # conv_id ↔ conv_rank table (batch builds)
-    docmap: str = field(init=False)  # per-doc map (streaming/dense builds)
+    convs: str = field(init=False)  # conv_id ↔ conv_rank table
     tokens: str = field(init=False)  # fragment table (kept name for layout compat)
     postings: str = field(init=False)
     idf: str = field(init=False)
@@ -112,7 +111,6 @@ class IndexPaths:
 
     def __post_init__(self) -> None:
         self.convs = _dir(self.root, "convs")
-        self.docmap = _dir(self.root, "docmap")
         self.tokens = _dir(self.root, "fragments")
         self.postings = _dir(self.root, "postings")
         self.idf = _dir(self.root, "idf")
@@ -816,3 +814,31 @@ def build_index(
 def load_meta(out_dir: str) -> dict:
     with open(IndexPaths(out_dir).meta) as f:
         return json.load(f)
+
+
+def load_layout(root: str) -> dict:
+    """``root``'s meta, refusing an index this engine cannot read or
+    fold: format v5 (per-posting doclens inline in the blocks), conv_rank
+    doc ids, and doc ids encoded with this build's :data:`TURN_BITS`
+    (tombstone encoding and the remap kernels shift by the constant, so
+    a mismatch would silently mask the wrong conv ranks)."""
+    meta = load_meta(root)
+    if int(meta.get("format_version", 0)) < 5:
+        raise ValueError(
+            f"index at {root} is format v{meta.get('format_version')}: "
+            "v5 readers score from inline per-posting doclens "
+            "(blocks carry dl_blob) — rebuild the index"
+        )
+    if meta.get("docid_scheme") != "conv_rank":
+        raise ValueError(
+            f"index at {root} uses doc-id scheme {meta.get('docid_scheme')!r}; "
+            "this engine reads only conv_rank doc ids — rebuild the index"
+        )
+    if int(meta["turn_bits"]) != TURN_BITS:
+        raise ValueError(
+            f"index at {root} records turn_bits={meta['turn_bits']} but "
+            f"this build of the engine encodes doc ids with "
+            f"TURN_BITS={TURN_BITS}; rebuild the index or match the "
+            "engine version that wrote it"
+        )
+    return meta

@@ -72,7 +72,7 @@ from .build import (
     build_index,
     conv_ranks,
     finalize_index,
-    load_meta,
+    load_layout,
     with_doc_ids,
     write_blocks,
     _fragment_kernel,
@@ -321,32 +321,15 @@ def compact_segments(
     """
     if not roots:
         raise ValueError("compact_segments needs at least one segment root")
-    metas = [load_meta(r) for r in roots]
+    metas = [load_layout(r) for r in roots]
     for r, m in zip(roots, metas):
-        if int(m.get("format_version", 0)) < 5:
-            raise ValueError(f"compact_segments: segment {r} is not format v5")
-        if m.get("docid_scheme", "dense") != "conv_rank":
-            raise ValueError(
-                f"compact_segments: segment {r} uses doc-id scheme "
-                f"{m.get('docid_scheme')!r}; segments must be conv_rank "
-                "batch builds (dense streaming indexes have no conv table)"
-            )
-        for k in ("num_groups", "block_size", "turn_bits"):
+        for k in ("num_groups", "block_size"):
             if m[k] != metas[0][k]:
                 raise ValueError(
                     f"compact_segments: segments disagree on {k} "
                     f"({r}: {m[k]} vs {roots[0]}: {metas[0][k]}) — "
                     "rebuild or extend instead"
                 )
-        # the remap kernels shift by the module constant (see module
-        # docstring); an index written with different turn_bits must not
-        # be silently re-encoded wrong
-        if int(m["turn_bits"]) != TURN_BITS:
-            raise ValueError(
-                f"compact_segments: segment {r} records turn_bits="
-                f"{m['turn_bits']} but this engine build encodes with "
-                f"TURN_BITS={TURN_BITS}"
-            )
     num_groups = int(metas[0]["num_groups"])
     block_size = int(metas[0]["block_size"])
     shuffle_partitions = (config or BuildConfig()).shuffle_partitions
@@ -520,24 +503,7 @@ def extend_index(
     default ``updates=False`` a collision still fails loudly.
     """
     old_paths = IndexPaths(index_root)
-    meta = load_meta(index_root)
-    if int(meta.get("format_version", 0)) < 5:
-        raise ValueError(
-            f"extend_index: index at {index_root} is format "
-            f"v{meta.get('format_version')}; extend requires v5 "
-            "(inline dl_blob) — rebuild once"
-        )
-    if meta.get("docid_scheme", "dense") != "conv_rank":
-        raise ValueError(
-            f"extend_index: index at {index_root} uses doc-id scheme "
-            f"{meta.get('docid_scheme')!r}; extend requires a conv_rank "
-            "batch build (dense streaming indexes carry no conv table)"
-        )
-    if int(meta["turn_bits"]) != TURN_BITS:
-        raise ValueError(
-            f"extend_index: index records turn_bits={meta['turn_bits']} "
-            f"but this engine build encodes with TURN_BITS={TURN_BITS}"
-        )
+    meta = load_layout(index_root)
     num_groups = int(meta["num_groups"])
     block_size = int(meta["block_size"])
     shuffle_partitions = (config or BuildConfig()).shuffle_partitions
@@ -698,19 +664,7 @@ def ingest_update_segment(
     """
     if not existing_roots:
         raise ValueError("ingest_update_segment needs at least one existing root")
-    meta0 = load_meta(existing_roots[0])
-    if int(meta0.get("format_version", 0)) < 5:
-        raise ValueError("ingest_update_segment: existing segments must be format v5")
-    if meta0.get("docid_scheme", "dense") != "conv_rank":
-        raise ValueError(
-            "ingest_update_segment: existing segments must be conv_rank batch builds"
-        )
-    if int(meta0["turn_bits"]) != TURN_BITS:
-        raise ValueError(
-            f"ingest_update_segment: segments record turn_bits="
-            f"{meta0['turn_bits']} but this engine build encodes with "
-            f"TURN_BITS={TURN_BITS}"
-        )
+    meta0 = load_layout(existing_roots[0])
     cfg = config or BuildConfig()
     cfg = BuildConfig(
         num_groups=int(meta0["num_groups"]),

@@ -1,14 +1,22 @@
-"""Query engine over the compressed index (SURVEY.md §4.4 step 2, M3).
+"""Query engine over N ≥ 1 compressed index segments (SURVEY.md §4.4
+step 2, M3).
+
+One reader, :class:`IndexReader`, answers every query over a list of
+conv_rank :class:`Segment` roots as ONE index; a single index is the
+one-segment case.  :class:`CompressedIndex` (one root) and
+``multi.MultiIndex`` (base + delta segments) are its two constructors.
 
 Physical plan per query::
 
-    idf parquet  --bucket-pruned scan--> driver (|terms| rows, broadcast)
-    postings parquet --bucket-pruned, term-filtered scan-->
-        groupBy(group).applyInPandas(per-group WAND / exact kernel)
-        # ≤ G·k rows out; doclens ride INLINE in the blocks (format v5),
+    idf parquet  --bucket-pruned scan per segment--> driver: Σ df per term,
+        idf = ln((1+N)/(1+Σdf)) + 1 at the global N
+    postings parquet --bucket-pruned, term-filtered scan per segment,
+            tagged with its segment id-->
+        groupBy(seg, group).applyInPandas(per-group WAND / exact kernel)
+        # ≤ S·G·k rows out; doclens ride INLINE in the blocks (format v5),
         # so the only exchange carries the pruned postings — never the
         # corpus-wide doclen blobs the pre-v5 cogroup shipped per query
-    join docmap (broadcast of the tiny candidate side)
+    join convs on (seg, conv_rank) (doc ids are segment-local ranks)
     orderBy(score desc, conv_id, turn_idx) limit k     # TakeOrderedAndProject
 
 Bucket pruning is the Spark analog of the reference's B-tree index seek
@@ -18,9 +26,7 @@ postings table.  Every stage is a DataFrame op; per-group kernels are the
 only Python, Arrow-batched.
 
 Driver-local branch (``topk``, ``topk_batch``, ``match_count``,
-``idf_map``), shared by both readers: it walks N ≥ 1 (seg,
-CompressedIndex) pairs, so a single index is the 1-segment case of the
-``MultiIndex`` live view::
+``idf_map``/``df_map``)::
 
     if no scope and Σ over segments of bytes(query's postings bucket
             files) ≤ LOCAL_BUDGET_BYTES:
@@ -36,19 +42,18 @@ without a sidecar the whole idf table, on the driver under the same
 budget, and :func:`local_rows` does the same for a small bare parquet
 table (``service.search`` reads its snippet rows through it).  The
 tombstone, search_after and shadow lookups read the convs files on the
-driver when those fit the budget.  The reader lists its
-postings/idf/convs files once, on first use, and builds its Spark
-DataFrame handles on first use too, so opening an index launches no
-job.  The budget is a module constant; over-budget and scoped queries
-(and dense doc-id indexes) keep the Spark plan above unchanged.
+driver when those fit the budget.  Opening a reader launches no job:
+N and Σdl come from the doclen tables and shadow sidecars read with
+pyarrow, each segment lists its files on first use, and the Spark
+DataFrame handles are built on first use too.  The budget is a module
+constant; over-budget and scoped queries keep the Spark plan above.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
@@ -74,7 +79,8 @@ from ..oracle import (
     wildcard_to_like,
 )
 from ..textproc import analyze_query, analyze_text
-from .build import TURN_BITS, IndexPaths
+from .build import TURN_BITS, TURN_MASK, IndexPaths, load_layout
+from .codec import varbyte_decode
 from .kernels import (
     TermPostings,
     _cut_topk,
@@ -271,8 +277,8 @@ def resolve_tombstones(convs_df: DataFrame, items: list) -> Tombstones:
     Deletion sets are small (removal requests), so the rank lookup is a
     driver-side collect over the pruned conv table; items naming
     unknown conversations are no-ops (already absent).  The readers
-    resolve through :meth:`CompressedIndex._conv_lookup` instead, which
-    reads the convs files on the driver within the local budget."""
+    resolve through :meth:`Segment._conv_lookup` instead, which reads
+    the convs files on the driver within the local budget."""
 
     def lookup(need: list[str]) -> dict[str, int]:
         rows = convs_df.filter(F.col("conv_id").isin(need)).select("conv_id", "conv_rank").collect()
@@ -290,25 +296,13 @@ def _tomb_key(items: list) -> tuple:
     )
 
 
-def _tomb_for(exclude, post_pdf: pd.DataFrame):
-    """Kernel-side tombstone lookup: a plain set for one index, or a
-    per-segment dict keyed by the batch's ``seg`` column (MultiIndex)."""
-    if not isinstance(exclude, dict):
-        return exclude
-    if "seg" not in post_pdf.columns or len(post_pdf) == 0:
+def _for_seg(per_seg: dict | None, post_pdf: pd.DataFrame):
+    """Kernel-side lookup of the batch's own entry in a per-segment dict
+    (resolved tombstones, or a search_after cursor — each segment has
+    its own conv_rank doc-id space), keyed by the batch's ``seg``."""
+    if per_seg is None or len(post_pdf) == 0:
         return None
-    return exclude.get(int(post_pdf["seg"].iloc[0]))
-
-
-def _after_for(after, post_pdf: pd.DataFrame):
-    """Kernel-side search_after cursor: a (score, cursor_doc_id) pair for
-    one index, or a per-segment dict (MultiIndex — each segment has its
-    own conv_rank space, so the cursor doc id differs per segment)."""
-    if not isinstance(after, dict):
-        return after
-    if "seg" not in post_pdf.columns or len(post_pdf) == 0:
-        return None
-    return after.get(int(post_pdf["seg"].iloc[0]))
+    return per_seg.get(int(post_pdf["seg"].iloc[0]))
 
 
 def _weighted_idf(idf: dict[str, float], spec: QuerySpec) -> dict[str, float]:
@@ -372,7 +366,7 @@ def _parse_batch(
     queries: list[tuple], default_k: int, analyzed: bool = False
 ) -> list[tuple[int, QuerySpec, int]]:
     """(query_text, mode[, k]) list → [(caller_index, spec, k)] for the
-    parseable queries — shared by both readers' batch paths.
+    parseable queries (the batch path of :meth:`IndexReader.topk_batch`).
 
     An element may instead be ``(QuerySpec[, k])`` — a PRE-COMPILED
     spec (e.g. a unified query string from ``compile_query_string``,
@@ -396,19 +390,6 @@ def _parse_batch(
     return [(i, s, kk) for i, (s, kk) in enumerate(parsed) if s is not None]
 
 
-def _facet_join(cand: DataFrame, meta: DataFrame, facet_col: str) -> DataFrame:
-    """(conv_id, turn_idx) match set ⋈ column-pruned metadata → per-value
-    counts — shared by both readers' facet_counts."""
-    return (
-        cand.join(
-            meta.select("conv_id", "turn_idx", facet_col),
-            ["conv_id", "turn_idx"],
-        )
-        .groupBy(facet_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def _batch_term_sets(specs: list[tuple[int, QuerySpec, int]]) -> tuple[set, set]:
     fetch_terms: set[str] = set()
     score_terms: set[str] = set()
@@ -422,7 +403,6 @@ def _collapse_convs(
     docs: np.ndarray,
     scores: np.ndarray,
     k: int,
-    turn_bits: int,
     with_ties: bool,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(all scored turns, score-desc/doc-asc order) → one row per
@@ -430,11 +410,9 @@ def _collapse_convs(
     cut to the group-local top-k conversations.  Representative doc ids
     order like conv ids (different convs differ in the high bits), so
     the shared :func:`kernels._cut_topk` tie policy applies verbatim."""
-    from .kernels import _cut_topk
-
     if docs.size == 0:
         return docs, scores
-    convs = docs >> turn_bits
+    convs = docs >> TURN_BITS
     # docs arrive sorted (score desc, doc asc): the FIRST occurrence of
     # each conv is its best turn under exactly that tie-break
     _, first = np.unique(convs, return_index=True)
@@ -448,14 +426,13 @@ def _make_collapse_kernel(
     k: int,
     with_ties: bool = False,
     exclude=None,
-    turn_bits: int = TURN_BITS,
     scoped: bool = False,
     after=None,
 ):
     """Per-group kernel for conversation-collapsed top-k (the field-
     collapsing analog: rank CONVERSATIONS by their best matching turn).
     Collapse is group-LOCAL because ``group = pmod(xxhash64(conv_id))``
-    — a conversation never spans groups within one index (MultiIndex
+    — a conversation never spans the groups of one segment (the reader
     re-collapses across segments with a window).  Scores every
     candidate exactly (no block pruning — the collapse needs each
     conv's max, which a turn-level top-k cut could drop).  ``after``
@@ -471,15 +448,15 @@ def _make_collapse_kernel(
         plists = _build_plists(post_pdf, idf, avgdl)
         docs, scores = _score_spec(
             spec, idf, plists, avgdl, 1 << 62, "exact", False,
-            tomb=_tomb_for(exclude, post_pdf), turn_bits=turn_bits,
+            tomb=_for_seg(exclude, post_pdf),
             allow=allow,
         )
-        aft = _after_for(after, post_pdf)
+        aft = _for_seg(after, post_pdf)
         if aft is None:
-            docs, scores = _collapse_convs(docs, scores, k, turn_bits, with_ties)
+            docs, scores = _collapse_convs(docs, scores, k, with_ties)
         else:
             docs, scores = _collapse_convs(
-                docs, scores, 1 << 62, turn_bits, False
+                docs, scores, 1 << 62, False
             )
             cs, cd = float(aft[0]), int(aft[1])
             keep = (scores < cs) | ((scores == cs) & (docs > cd))
@@ -585,8 +562,8 @@ def _read_table(table_dir: str, columns: list[str]):
 
 def _with_seg(inner):
     """Wrap a grouped kernel so its output carries the segment id from
-    the (seg, group) key — the kernel itself is the tested single-index
-    one."""
+    the (seg, group) key — the kernel itself sees one group of one
+    segment."""
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = inner(key[1:], pdf)
@@ -596,7 +573,19 @@ def _with_seg(inner):
     return kernel
 
 
-def _pruned_files(segs: list["CompressedIndex"], table: str, terms: list[str]) -> list[list[str]] | None:
+def _with_seg_scoped(inner):
+    """Cogroup counterpart of :func:`_with_seg` for scoped kernels —
+    (key, postings, allow) with the (seg, group) composite key."""
+
+    def kernel(key: tuple, pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
+        out = inner(key[1:], pdf, allow_pdf)
+        out.insert(0, "seg", np.full(len(out), key[0], dtype="int32"))
+        return out
+
+    return kernel
+
+
+def _pruned_files(segs: list["Segment"], table: str, terms: list[str]) -> list[list[str]] | None:
     """Per segment, the files of ``table``'s (postings/idf) buckets
     holding ``terms``, when every segment can run locally and the files
     of ALL segments total at most :data:`LOCAL_BUDGET_BYTES`; else None,
@@ -612,9 +601,8 @@ def _pruned_files(segs: list["CompressedIndex"], table: str, terms: list[str]) -
     return None if total > LOCAL_BUDGET_BYTES else per_seg
 
 
-def _local_groups(segs: list["CompressedIndex"], fetch_terms: list[str], kernel) -> list[pd.DataFrame] | None:
-    """Driver-local executor over the (seg, CompressedIndex) pairs of
-    ``segs``: read each segment's pruned postings with pyarrow, group
+def _local_groups(segs: list["Segment"], fetch_terms: list[str], kernel) -> list[pd.DataFrame] | None:
+    """Driver-local executor over the segments ``segs``: read each segment's pruned postings with pyarrow, group
     them by ``group`` in pandas and hand each group to
     ``_with_seg(kernel)``, the closure ``applyInPandas`` runs on the
     Spark plan.  Returns the per-group outputs, each with its ``seg``
@@ -627,13 +615,13 @@ def _local_groups(segs: list["CompressedIndex"], fetch_terms: list[str], kernel)
     for i, seg_files in enumerate(files):
         if not seg_files:
             continue
-        # the seg column picks a segment's tombstones/cursor (_tomb_for)
+        # the seg column picks a segment's tombstones/cursor (_for_seg)
         post = _read_local(seg_files, None, "term", fetch_terms).assign(seg=np.int32(i))
         out += [kernel((i, g), gdf.reset_index(drop=True)) for g, gdf in post.groupby("group", sort=True)]
     return out
 
 
-def _label_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame]) -> pd.DataFrame | None:
+def _label_local(segs: list["Segment"], frames: list[pd.DataFrame]) -> pd.DataFrame | None:
     """Local kernel outputs (seg, doc_id, score[, query_id]) → the same
     rows with conv_id and turn_idx, or None when there are none.  Doc
     ids are segment-local, so each segment's candidates are labelled
@@ -641,12 +629,8 @@ def _label_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame]) -> p
     cand = pd.concat(frames, ignore_index=True) if frames else None
     if cand is None or cand.empty:
         return None
-    turn_bits = segs[0].turn_bits
     docs = cand["doc_id"].to_numpy(dtype=np.int64)
-    cand = cand.assign(
-        conv_rank=docs >> turn_bits,
-        turn_idx=(docs & ((1 << turn_bits) - 1)).astype(np.int32),
-    )
+    cand = cand.assign(conv_rank=docs >> TURN_BITS, turn_idx=(docs & TURN_MASK).astype(np.int32))
     convs = pd.concat([
         _read_local(
             [p for p, _ in segs[i]._listing["convs"]], ["conv_id", "conv_rank"],
@@ -657,7 +641,7 @@ def _label_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame]) -> p
     return cand.merge(convs, on=["seg", "conv_rank"])
 
 
-def _topk_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame], k: int) -> DataFrame:
+def _topk_local(segs: list["Segment"], frames: list[pd.DataFrame], k: int) -> DataFrame:
     """Local kernel outputs (≤ S·G·k candidates) → the labelled top-k."""
     cand = _label_local(segs, frames)
     if cand is None:
@@ -668,7 +652,7 @@ def _topk_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame], k: in
     ))
 
 
-def _batch_local(segs: list["CompressedIndex"], frames: list[pd.DataFrame],
+def _batch_local(segs: list["Segment"], frames: list[pd.DataFrame],
                  specs: list[tuple[int, QuerySpec, int]]) -> DataFrame:
     """Local batch-kernel outputs → each query's labelled top-k, the
     rows :func:`_rank_per_query` keeps: row number ≤ that query's k
@@ -711,10 +695,10 @@ def local_rows(df: DataFrame, columns: list[str], key: str, values: list) -> Dat
         or rel.partitionSchema().length() > 0
     ):
         return None
-    uris = [urlparse(f) for f in df.inputFiles()]
-    if not uris or any(u.scheme != "file" for u in uris):
+    uris = df.inputFiles()
+    if not uris or not all(u.startswith("file:") for u in uris):
         return None
-    files = [unquote(u.path) for u in uris]
+    files = [unquote(urlparse(u).path) for u in uris]
     if sum(map(os.path.getsize, files)) > LOCAL_BUDGET_BYTES:
         return None
     rows = _read_local(files, columns, key, values)
@@ -724,71 +708,42 @@ def local_rows(df: DataFrame, columns: list[str], key: str, values: list) -> Dat
     return df.sparkSession.createDataFrame(rows[columns], schema)
 
 
-class CompressedIndex:
-    """Reader over an index directory produced by :class:`IndexBuilder`."""
+class Segment:
+    """One conv_rank index root as the reader sees it: its paths, meta
+    and file listing, the lazy Spark handles over its tables, and the
+    per-root lookups (conversation ranks, tombstones, cursors, explain
+    rows, fuzzy candidates) that :class:`IndexReader` fans out to.
+
+    Opening one launches no Spark job: the handles are built on first
+    use and the file listing on the first driver-local read."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.paths = IndexPaths(root)
-        with open(self.paths.meta) as f:
-            self.meta = json.load(f)
-        self.n_docs = int(self.meta["n_docs"])
-        self.avgdl = float(self.meta["avgdl"])
+        self.meta = load_layout(root)
         self.num_buckets = int(self.meta["num_buckets"])
-        if int(self.meta.get("format_version", 0)) < 5:
-            raise ValueError(
-                f"index at {root} is format v{self.meta.get('format_version')}: "
-                "v5 readers score from inline per-posting doclens "
-                "(blocks carry dl_blob) — rebuild the index"
-            )
-        self.scheme = self.meta.get("docid_scheme", "dense")
+        self.turn_bits = int(self.meta["turn_bits"])
         # conv_rank doc ids are order-isomorphic to (conv_id, turn_idx),
         # letting kernels cut exactly at k with doc-id tiebreaks.  An
         # incremental extend that appended lexicographically-earlier
         # conversations breaks the isomorphism (extend.py records it in
         # meta); then the kernels must return score-ties at the boundary
         # so the final ORDER BY conv_id resolves them.
-        self.tie_safe = self.scheme != "conv_rank" or not self.meta.get(
-            "docid_order_isomorphic", True
-        )
-        if self.scheme == "conv_rank":
-            self.turn_bits = int(self.meta["turn_bits"])
-            # every writer stamps build.TURN_BITS; tombstone ENCODING
-            # (resolve_tombstones) and extend/compact kernels use the
-            # module constant while masks use self.turn_bits — fail loud
-            # at load if an index ever diverges, instead of silently
-            # masking the wrong conv ranks
-            if self.turn_bits != TURN_BITS:
-                raise ValueError(
-                    f"index {root} records turn_bits={self.turn_bits} but "
-                    f"this build of the engine encodes doc ids with "
-                    f"TURN_BITS={TURN_BITS}; rebuild the index or match "
-                    f"the engine version that wrote it"
-                )
-        self._idf_cache: dict[str, float] = {}
-        self._df_cache: dict[str, int] = {}
-        self._tomb_memo: dict[tuple, Tombstones] = {}
+        self.tie_safe = not self.meta.get("docid_order_isomorphic", True)
         self._after_memo: dict[tuple, int] = {}
-        self._syn_memo: dict[str, list[str]] | None = None
         # the driver-local path's file listing, built on first use
-        # (:meth:`_local_listing`) so opens — MultiIndex's per segment
-        # included — never pay for it
+        # (:meth:`_local_listing`) so opens never pay for it
         self._listing: dict | None = None
 
     # persistent DataFrame handles, built on first use: the parquet file
     # index (directory listing over NUM_BUCKETS partition dirs, a Spark
-    # job when there are many) and the convs/docmap schema inference (a
-    # job too) are paid once by the first Spark-plan query, never by an
-    # open whose queries all run on the driver
+    # job when there are many) and the convs schema inference (a job
+    # too) are paid once by the first Spark-plan query, never by an open
+    # whose queries all run on the driver
 
     @cached_property
     def _convs(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.convs).cache()
-
-    @cached_property
-    def _docmap(self) -> DataFrame:
-        # streaming/dense builds carry an explicit per-doc map
-        return self.spark.read.parquet(self.paths.docmap).cache()
 
     @cached_property
     def _postings(self) -> DataFrame:
@@ -804,37 +759,15 @@ class CompressedIndex:
             self.paths.idf
         )
 
-    def warm(self) -> None:
-        """List the files the driver-local path reads (:meth:`_local_listing`)
-        — no Spark job.  The Spark plan's cached handles fill on the
-        first query that takes it."""
-        self._local_listing()
-
-    def _label(self, cand: DataFrame, extra: tuple = ()) -> DataFrame:
-        """(doc_id, score[, extra…]) → (extra…, conv_id, turn_idx, score)."""
-        cols = [*extra, "conv_id", "turn_idx", "score"]
-        if self.scheme == "conv_rank":
-            return (
-                cand.withColumn(
-                    "conv_rank", F.shiftrightunsigned("doc_id", self.turn_bits)
-                )
-                .withColumn(
-                    "turn_idx",
-                    F.col("doc_id").bitwiseAND(F.lit((1 << self.turn_bits) - 1)).cast("int"),
-                )
-                .join(self._convs.select("conv_id", "conv_rank"), "conv_rank")
-                .select(*cols)
-            )
-        return cand.join(
-            self._docmap.select("doc_id", "conv_id", "turn_idx"), "doc_id"
-        ).select(*cols)
-
-    # -- lookups -----------------------------------------------------
-
     def _buckets(self, terms: list[str]) -> list[int]:
         # driver-side XXH64 — identical to the writer's Spark xxhash64,
         # no job launch (parity pinned by tests/test_xxhash.py)
         return sorted({term_bucket(t, self.num_buckets) for t in terms})
+
+    def postings_df(self, terms: list[str]) -> DataFrame:
+        return self._postings.filter(
+            F.col("bucket").isin(self._buckets(terms)) & F.col("term").isin(terms)
+        )
 
     # -- driver-local execution --------------------------------------
 
@@ -843,19 +776,17 @@ class CompressedIndex:
         first use; empty when the index cannot run locally."""
         if self._listing is None:
             dirs = (self.paths.postings, self.paths.idf, self.paths.convs)
-            local = self.scheme == "conv_rank" and all(map(os.path.isdir, dirs))
             self._listing = {
                 "postings": _bucket_files(self.paths.postings),
                 "idf": _bucket_files(self.paths.idf),
                 "convs": _data_files(self.paths.convs),
-            } if local else {}
+            } if all(map(os.path.isdir, dirs)) else {}
         return self._listing
 
     def _local_files(self, table: str, terms: list[str]) -> list[str] | None:
         """Files of ``table``'s (postings/idf) buckets holding ``terms``
         when they total at most :data:`LOCAL_BUDGET_BYTES`, else None —
-        the query then takes the Spark plan.  Only conv_rank indexes on
-        the local filesystem run locally (:func:`_pruned_files`)."""
+        the query then takes the Spark plan (:func:`_pruned_files`)."""
         files = _pruned_files([self], table, terms)
         return None if files is None else files[0]
 
@@ -869,8 +800,8 @@ class CompressedIndex:
 
     def _conv_lookup(self, conv_ids: list[str]) -> dict[str, tuple[int, int]]:
         """conv_id → (conv_rank, group) of the named conversations present
-        in this index (conv_rank scheme): read from the convs files on the
-        driver within the local budget, else one small Spark collect."""
+        in this root: read from the convs files on the driver within the
+        local budget, else one small Spark collect."""
         cols = ["conv_id", "conv_rank", "group"]
         files = self._convs_files()
         if files is not None:
@@ -879,138 +810,72 @@ class CompressedIndex:
             rows = self._convs.filter(F.col("conv_id").isin(conv_ids)).select(*cols).collect()
         return {c: (int(r), int(g)) for c, r, g in rows}
 
-    def idf_map(self, terms: list[str]) -> dict[str, float]:
-        """Bucket-pruned idf lookup; absent terms get df=0 idf (oracle
-        parity).  Within the driver-local budget the idf files are read
-        on the driver, with no Spark job."""
-        import math
+    # -- per-root lookups --------------------------------------------
 
-        uniq = sorted(set(terms))
-        if not uniq:
-            return {}
-        missing = [t for t in uniq if t not in self._idf_cache]
-        if missing:
-            files = self._local_files("idf", missing)
-            if files is None:
-                rows = (
-                    self._idf.filter(
-                        F.col("bucket").isin(self._buckets(missing))
-                        & F.col("term").isin(missing)
-                    )
-                    .select("term", "idf", "df")
-                    .collect()
-                )
-            elif files:
-                rows = _read_local(files, ["term", "idf", "df"], "term", missing).to_dict("records")
+    def _resolve_after(self, search_after) -> tuple[float, int]:
+        """(score, conv_id, turn_idx) cursor → (score, cursor_doc_id) in
+        THIS root's doc-id space (search_after deep pagination).
+
+        conv_rank assignment is order-isomorphic to conv_id (pinned by
+        tests), so "strictly after the cursor" is exactly
+        ``doc_id > cdoc`` at equal score.  A cursor conversation ABSENT
+        from the root (e.g. its docs live in another segment) still
+        cuts correctly through the boundary rank r = |{convs < conv}|:
+        every doc after the cursor has ``doc_id >= r << turn_bits``,
+        i.e. ``doc_id > (r << turn_bits) - 1``.  One convs lookup per
+        distinct cursor, memoized: on the driver within the local budget,
+        else a small Spark job."""
+        if self.tie_safe:
+            raise ValueError(
+                "search_after needs doc-id order isomorphic to (conv_id, "
+                "turn_idx); this index's meta records the isomorphism "
+                "broken (out-of-order extend) — compact first"
+            )
+        score, conv_id, turn_idx = search_after
+        key = (str(conv_id), int(turn_idx))
+        cdoc = self._after_memo.get(key)
+        if cdoc is None:
+            hit = self._conv_lookup([conv_id]).get(conv_id)
+            if hit is not None:
+                cdoc = (hit[0] << self.turn_bits) | int(turn_idx)
             else:
-                rows = []
-            found = {r["term"]: (float(r["idf"]), int(r["df"])) for r in rows}
-            absent = math.log((1.0 + self.n_docs) / 1.0) + 1.0
-            for t in missing:
-                self._idf_cache[t], self._df_cache[t] = found.get(t, (absent, 0))
-        return {t: self._idf_cache[t] for t in uniq}
+                files = self._convs_files()
+                if files is None:
+                    r = self._convs.filter(F.col("conv_id") < conv_id).count()
+                else:
+                    import pyarrow.parquet as pq
 
-    def df_map(self, terms: list[str]) -> dict[str, int]:
-        """Per-term document frequency (same bucket-pruned scan as
-        :meth:`idf_map`, shared cache); absent terms get df=0."""
-        self.idf_map(terms)
-        return {t: self._df_cache[t] for t in sorted(set(terms))}
+                    r = pq.read_table(files, columns=["conv_id"],
+                                      filters=[("conv_id", "<", conv_id)]).num_rows
+                cdoc = (r << self.turn_bits) - 1
+            self._after_memo[key] = cdoc
+        return (float(score), cdoc)
 
-    def postings_df(self, terms: list[str]) -> DataFrame:
-        buckets = self._buckets(terms)
-        return self._postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+    def _doc_coords(self, conv_id: str, turn_idx: int) -> tuple[int, int] | None:
+        """(group, doc_id) of one (conv_id, turn_idx), or None when the
+        conversation is absent from this root — one convs lookup
+        (diagnostic path, not cached)."""
+        hit = self._conv_lookup([conv_id]).get(conv_id)
+        if hit is None:
+            return None
+        return hit[1], (hit[0] << self.turn_bits) | int(turn_idx)
 
-    def expand_prefixes(self, query_text: str, limit: int = PREFIX_CAP) -> str:
-        """Rewrite trailing-``*`` tokens into their matching index terms
-        (``kuber* pod`` → ``kubernetes kuberctl pod``) — the Lucene
-        multi-term-query contract: the wildcard matches the POST-STEM
-        index vocabulary (wildcard terms skip analysis), expansion is
-        capped at ``limit`` terms per prefix (highest df first, term asc
-        ties — the most selective rewrite), and unmatched prefixes drop
-        out.  The rewritten string feeds the ordinary query paths, so
-        expansion composes with scope/tombstones/batch for free.
-
-        Physically one scan of the one-row-per-term idf table with the
-        ``StartsWith`` filters pushed to parquet (the term-hash bucket
-        layout cannot prune a prefix — the vocabulary table is the
-        right side to pay that scan on, postings stay bucket-pruned)."""
-        toks, prefixes = split_prefix_tokens(query_text)
-        if not prefixes:
-            return query_text
-        return rewrite_with_expansions(
-            toks, self._prefix_expansions(prefixes, limit)
-        )
-
-    def _vocab_topdf(
-        self, items: list[tuple[str, "F.Column"]], limit: int
-    ) -> dict[str, list[str]]:
-        """Per-key TakeOrdered over the one-row-per-term idf table: the
-        df-desc cap runs DISTRIBUTED, so the driver receives at most
-        ``limit`` rows per key — a short pattern over a 10^9-term
-        vocabulary must not collect millions of matches before capping.
-        ``items`` = (key, boolean filter over the vocabulary)."""
-        from functools import reduce
-
-        parts = [
-            self._idf.filter(cond)
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(limit)
-            .select(F.lit(key).alias("key"), "term", "df")
-            for key, cond in items
-        ]
-        rows = reduce(DataFrame.unionByName, parts).collect()
-        by_key: dict[str, list[tuple[int, str]]] = {}
-        for r in rows:  # union row order is unspecified — re-rank driver-side
-            by_key.setdefault(r["key"], []).append((int(r["df"]), r["term"]))
-        return {
-            p: [t for _df, t in sorted(hits, key=lambda x: (-x[0], x[1]))]
-            for p, hits in by_key.items()
-        }
-
-    def _prefix_expansions(
-        self, prefixes: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        return self._vocab_topdf(
-            [(p, F.col("term").startswith(p)) for p in prefixes], limit
-        )
-
-    def _wildcard_expansions(
-        self, patterns: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        """General wildcard (``*``/``?`` anywhere) expansion over the
-        post-stem vocabulary — Lucene WildcardQuery semantics.  The
-        longest literal prefix is pushed as an extra StartsWith (prunes
-        the scan unless the pattern leads with a wildcard, Lucene's own
-        cost cliff); the LIKE itself evaluates in codegen."""
-        items = []
-        for p in patterns:
-            cond = F.col("term").like(wildcard_to_like(p))
-            lit = wildcard_literal_prefix(p)
-            if lit:
-                cond = F.col("term").startswith(lit) & cond
-            items.append((p, cond))
-        return self._vocab_topdf(items, limit)
-
-    def _regexp_expansions(
-        self, patterns: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        """Regexp term (``/pattern/``) expansion — Lucene RegexpQuery
-        semantics: the pattern must match the WHOLE vocabulary term
-        (anchored).  Evaluated JVM-side via ``rlike``; patterns are
-        validated driver-side first so an invalid regex fails loud with
-        a Python error, not an opaque executor stack."""
-        import re as _re
-
-        for p in patterns:
-            try:
-                _re.compile(p)
-            except _re.error as e:
-                raise ValueError(f"invalid regexp term /{p}/: {e}") from e
-        return self._vocab_topdf(
-            [(p, F.col("term").rlike(f"^(?:{p})$")) for p in patterns], limit
-        )
+    def _explain_rows(
+        self, spec: QuerySpec, idf: dict[str, float], avgdl: float,
+        group: int, doc_id: int,
+    ) -> list:
+        """Collected (term, tf, dl) rows of ONE doc for one query — the
+        distributed half of :meth:`IndexReader.explain`: a bucket-pruned,
+        group-filtered postings scan feeding a single-group kernel that
+        checks candidate membership (same ``_candidates_spec`` dispatch
+        every count/matches kernel runs — one group's pruned postings,
+        1/num_groups of a query's kernel work).  Empty when the doc does
+        not match the query."""
+        kernel = _make_explain_kernel(spec, idf, avgdl, doc_id)
+        post = self.postings_df(_fetch_terms(spec)).filter(F.col("group") == group)
+        return post.groupBy("group").applyInPandas(
+            kernel, schema=EXPLAIN_KERNEL_SCHEMA
+        ).collect()
 
     def _fuzzy_rows(self, terms: list[str]) -> dict[str, list[tuple[str, int]]]:
         """Delete-1 collision candidates per fuzzy query term →
@@ -1101,6 +966,383 @@ class CompressedIndex:
             for v in {t, *deletions1(t)} & wanted
         ]
 
+
+def _column_sums(table_dir: str, columns: list[str]) -> list[int]:
+    """Exact integer sums of ``columns`` over a small local parquet table
+    (0 for an absent or empty one), read with pyarrow on the driver."""
+    t = _read_table(table_dir, columns)
+    if t is None:
+        return [0] * len(columns)
+    return [sum(v for v in t.column(c).to_pylist() if v is not None) for c in columns]
+
+
+def _shadow_hits(pdf: pd.DataFrame, ids: np.ndarray) -> pd.DataFrame:
+    """Postings rows (term, doc_blob) → (term, c): per row, how many of
+    the sorted shadowed doc ``ids`` its block holds."""
+    ts, cs = [], []
+    for term, blob in zip(pdf["term"], pdf["doc_blob"]):
+        docs = np.cumsum(varbyte_decode(blob).astype(np.int64))
+        j = np.searchsorted(ids, docs)
+        hit = (j < ids.size) & (ids[np.minimum(j, ids.size - 1)] == docs)
+        ts.append(term)
+        cs.append(int(hit.sum()))
+    return pd.DataFrame({"term": ts, "c": cs})
+
+
+class IndexReader:
+    """Query engine over N ≥ 1 conv_rank index segments (``segments``,
+    oldest first, later segments win), answering as ONE index.
+
+    Segments hold disjoint documents, so the global BM25 statistics are
+    exact sums: N = Σ n_docs and avgdl = Σ dl / N over the per-group
+    doclen tables, df(t) = Σ df_i(t), and idf = ``ln((1+N)/(1+df)) + 1``
+    (IndexerService.java:966) at that N — results equal one index built
+    over the union byte-for-byte (pinned by tests).  A (conv_id,
+    turn_idx) may appear in several segments ONLY when every earlier
+    occurrence is named by a later segment's SHADOW sidecar
+    (``ingest_update_segment`` writes it).  Shadowed docs are excluded
+    at candidate time like tombstones, and the statistics are corrected
+    EXACTLY (not the usual LSM approximation): N and Σdl subtract the
+    sidecars' ``n_prev``/``dl_prev`` totals, and per-term df subtracts
+    the shadowed docs whose posting lists hold the term, counted from
+    their own blocks at query time (memoized in the idf cache).
+
+    Doc ids are segment-local conv ranks, so every plan carries the
+    segment id: kernels run per (seg, group), exclusions and cursors
+    are per-segment dicts, and candidates are labelled on (seg,
+    conv_rank).  Group kernels cut exactly at k (and may run WAND) only
+    when doc-id order is the (conv_id, turn_idx) tie-break order: one
+    order-isomorphic segment.  Otherwise they emit boundary score-ties
+    (``tie_safe``) for the global sort to resolve.
+
+    A one-segment reader also answers for its root's own state (paths,
+    meta, the Spark handles, the file listing) through its segment.
+    """
+
+    def __init__(self, spark: SparkSession, roots: list[str]):
+        if not roots:
+            raise ValueError("a reader needs at least one segment root")
+        self.spark = spark
+        self.segments = [Segment(spark, r) for r in roots]
+        self.tie_safe = len(self.segments) > 1 or self.segments[0].tie_safe
+        # exact global stats from the per-group doclen tables (G rows per
+        # segment, read with pyarrow — no Spark job); summing the integer
+        # totals reproduces a single build's avgdl bit-for-bit
+        n_all = tok_all = 0
+        for seg in self.segments:
+            n, tok = _column_sums(seg.paths.doclen, ["n_docs", "sum_dl"])
+            n_all, tok_all = n_all + n, tok_all + tok
+        # shadow sidecars (update segments): keys a later segment
+        # supersedes in earlier ones — applied as per-segment exclusion
+        # sets, with exact N/Σdl corrections from the sidecar totals of
+        # every segment that has an earlier one to supersede
+        from .extend import read_shadow_keys, shadows_path
+
+        self._shadow_keys = [read_shadow_keys(spark, r) for r in roots]
+        self._shadow_for = [
+            sorted({key for keys in self._shadow_keys[i + 1:] for key in keys})
+            for i in range(len(roots))
+        ]
+        self._shadow_resolved: dict[int, tuple] | None = None
+        for r in roots[1:]:
+            n, dl = _column_sums(shadows_path(r), ["n_prev", "dl_prev"])
+            n_all, tok_all = n_all - n, tok_all - dl
+        self.n_docs = n_all
+        self.avgdl = tok_all / n_all if n_all else 0.0
+        self._idf_cache: dict[str, float] = {}
+        self._df_cache: dict[str, int] = {}
+        self._tomb_memo: dict[tuple, dict | None] = {}
+        self._syn_memo: dict[str, list[str]] | None = None
+
+    def __getattr__(self, name: str):
+        # only for names the reader lacks: a one-segment reader reads
+        # them from its segment (see the class docstring)
+        segs = self.__dict__.get("segments", ())
+        if len(segs) == 1 and not name.startswith("__"):
+            return getattr(segs[0], name)
+        raise AttributeError(f"{type(self).__name__!r} object has no attribute {name!r}")
+
+    @cached_property
+    def _convs(self) -> DataFrame:
+        # doc ids are segment-local conv ranks, so labels join on (seg,
+        # conv_rank); one conversation may appear in several segments
+        # (new turns in a later delta) — each row maps only its own
+        # segment's candidates
+        return reduce(DataFrame.unionByName, [
+            seg._convs.select("conv_id", "conv_rank").withColumn("seg", F.lit(i))
+            for i, seg in enumerate(self.segments)
+        ])
+
+    def warm(self) -> None:
+        """List the files the driver-local path reads (each segment's
+        :meth:`Segment._local_listing`) — no Spark job.  The Spark plan's
+        cached handles fill on the first query that takes it."""
+        for seg in self.segments:
+            seg._local_listing()
+
+    def postings_df(self, terms: list[str]) -> DataFrame:
+        """Every segment's bucket-pruned postings of ``terms``, each row
+        tagged with its segment id ``seg``."""
+        return reduce(DataFrame.unionByName, [
+            seg.postings_df(terms).withColumn("seg", F.lit(i))
+            for i, seg in enumerate(self.segments)
+        ])
+
+    # -- exclusions and statistics -----------------------------------
+
+    def _shadow_exclude(self) -> dict | None:
+        """Per-segment (Tombstones, affected-groups) for shadowed docs,
+        resolved once per instance — sidecar lists are update-batch
+        sized, so the rank lookup is one small convs lookup per segment
+        (on the driver within the local budget)."""
+        if not any(self._shadow_for):
+            return None
+        if self._shadow_resolved is None:
+            d: dict[int, tuple] = {}
+            for i, seg in enumerate(self.segments):
+                items = self._shadow_for[i]
+                if not items:
+                    continue
+                rank = seg._conv_lookup(sorted({c for c, _ in items}))
+                ids, groups = [], set()
+                for c, t in items:
+                    if c in rank:
+                        ids.append((rank[c][0] << TURN_BITS) | int(t))
+                        groups.add(rank[c][1])
+                if ids:
+                    d[i] = (
+                        Tombstones(np.asarray(ids, dtype=np.int64), np.empty(0, dtype=np.int64)),
+                        sorted(groups),
+                    )
+            self._shadow_resolved = d
+        return self._shadow_resolved or None
+
+    def _resolve_tomb(self, tombstones) -> dict | None:
+        """Tombstone items ∪ shadow supersession → one :class:`Tombstones`
+        per segment (doc ids are segment-local rank encodings); kernels
+        pick their segment's set from the batch's ``seg`` column.
+        Memoized per distinct list: the same deletion list arrives on
+        every topk/match_count call of a request (service.search
+        resolves it twice otherwise) — one convs lookup per segment and
+        list, on the driver within the local budget."""
+        key = _tomb_key(tombstones or [])
+        if key not in self._tomb_memo:
+            shadow = self._shadow_exclude() or {}
+            out: dict[int, Tombstones] = {}
+            for i, seg in enumerate(self.segments):
+                parts = [shadow[i][0]] if i in shadow else []
+                if tombstones:
+                    parts.append(_tombstones(tombstones, lambda need: {
+                        c: r for c, (r, _g) in seg._conv_lookup(need).items()
+                    }))
+                if parts:
+                    out[i] = Tombstones(
+                        np.concatenate([p.doc_ids for p in parts]),
+                        np.concatenate([p.conv_ranks for p in parts]),
+                    )
+            self._tomb_memo[key] = out or None
+        return self._tomb_memo[key]
+
+    def _resolve_after(self, search_after) -> dict | None:
+        """(score, conv_id, turn_idx) cursor → one (score, cursor_doc_id)
+        per segment, each resolved and memoized by
+        :meth:`Segment._resolve_after` — a segment not holding the
+        cursor conversation cuts through its boundary rank, so the
+        filter stays exact even when the cursor doc lives elsewhere."""
+        if search_after is None:
+            return None
+        return {i: seg._resolve_after(search_after) for i, seg in enumerate(self.segments)}
+
+    def _shadow_df_counts(self, terms: list[str]) -> dict[str, int]:
+        """For each term: how many SHADOWED docs contain it, summed over
+        segments — the exact df correction.  One bucket+group-pruned
+        scan of the shadowed docs' posting blocks per segment that has
+        any (results land in the idf cache, so each term pays once); the
+        blocks are read with pyarrow on the driver when their files fit
+        the local budget, else by a Spark scan."""
+        out = {t: 0 for t in terms}
+        sh = self._shadow_exclude()
+        if sh is None or not terms:
+            return out
+        segs = sorted(sh)
+        files = _pruned_files([self.segments[i] for i in segs], "postings", terms)
+        for n, i in enumerate(segs):
+            tomb, groups = sh[i]
+            ids = np.sort(tomb.doc_ids)
+            if files is not None:
+                if not files[n]:
+                    continue
+                post = _read_local(files[n], ["term", "doc_blob", "group"], "term", terms)
+                rows = _shadow_hits(post[post["group"].isin(groups)], ids).groupby("term")["c"].sum().items()
+            else:
+                rows = (
+                    self.segments[i].postings_df(terms)
+                    .filter(F.col("group").isin(groups))
+                    .select("term", "doc_blob")
+                    .mapInPandas(lambda it, _ids=ids: (_shadow_hits(p, _ids) for p in it),
+                                 schema="term string, c long")
+                    .groupBy("term")
+                    .agg(F.sum("c").alias("c"))
+                    .collect()
+                )
+            for term, c in rows:
+                out[term] += int(c)
+        return out
+
+    def idf_map(self, terms: list[str]) -> dict[str, float]:
+        """Bucket-pruned idf lookup; absent terms get df=0 idf (oracle
+        parity).  Within the driver-local budget the idf files are read
+        on the driver, with no Spark job."""
+        import math
+
+        uniq = sorted(set(terms))
+        if not uniq:
+            return {}
+        missing = [t for t in uniq if t not in self._idf_cache]
+        if missing:
+            files = _pruned_files(self.segments, "idf", missing)
+            if files is None:
+                rows = (
+                    reduce(DataFrame.unionByName, [
+                        seg._idf.filter(
+                            F.col("bucket").isin(seg._buckets(missing)) & F.col("term").isin(missing)
+                        ).select("term", "df")
+                        for seg in self.segments
+                    ])
+                    .groupBy("term")
+                    .agg(F.sum("df"))
+                    .collect()
+                )
+            else:
+                parts = [_read_local(fs, ["term", "df"], "term", missing) for fs in files if fs]
+                rows = pd.concat(parts).groupby("term")["df"].sum().items() if parts else []
+            found = {t: int(df) for t, df in rows}
+            corr = self._shadow_df_counts(missing)
+            for t in missing:
+                df = found.get(t, 0) - corr.get(t, 0)
+                self._df_cache[t] = df
+                # from df, not the stored idf column: the JVM's log that
+                # wrote it differs from math.log (the oracle's) by 1 ulp
+                # on some terms
+                self._idf_cache[t] = math.log((1.0 + self.n_docs) / (1.0 + df)) + 1.0
+        return {t: self._idf_cache[t] for t in uniq}
+
+    def df_map(self, terms: list[str]) -> dict[str, int]:
+        """Per-term document frequency (same bucket-pruned scan as
+        :meth:`idf_map`, shared cache); absent terms get df=0."""
+        self.idf_map(terms)
+        return {t: self._df_cache[t] for t in sorted(set(terms))}
+
+    # -- vocabulary expansion ----------------------------------------
+
+    def expand_prefixes(self, query_text: str, limit: int = PREFIX_CAP) -> str:
+        """Rewrite trailing-``*`` tokens into their matching index terms
+        (``kuber* pod`` → ``kubernetes kuberctl pod``) — the Lucene
+        multi-term-query contract: the wildcard matches the POST-STEM
+        index vocabulary (wildcard terms skip analysis), expansion is
+        capped at ``limit`` terms per prefix (highest df first, term asc
+        ties — the most selective rewrite), and unmatched prefixes drop
+        out.  The rewritten string feeds the ordinary query paths, so
+        expansion composes with scope/tombstones/batch for free.
+
+        Physically one scan of the one-row-per-term idf table with the
+        ``StartsWith`` filters pushed to parquet (the term-hash bucket
+        layout cannot prune a prefix — the vocabulary table is the
+        right side to pay that scan on, postings stay bucket-pruned)."""
+        toks, prefixes = split_prefix_tokens(query_text)
+        if not prefixes:
+            return query_text
+        return rewrite_with_expansions(
+            toks, self._prefix_expansions(prefixes, limit)
+        )
+
+    def _vocab_topdf(
+        self, items: list[tuple[str, "F.Column"]], limit: int
+    ) -> dict[str, list[str]]:
+        """Per-key TakeOrdered over the union of the segments'
+        one-row-per-term idf tables, df summed per term (raw sums —
+        shadow-superseded copies may inflate a tie-break, which only
+        affects the cap boundary ordering, never scoring): the df-desc
+        cap runs DISTRIBUTED, so the driver receives at most ``limit``
+        rows per key — a short pattern over a 10^9-term vocabulary must
+        not collect millions of matches before capping.  ``items`` =
+        (key, boolean filter over the vocabulary)."""
+        parts = []
+        for key, cond in items:
+            vocab = reduce(DataFrame.unionByName, [seg._idf.filter(cond).select("term", "df")
+                                                   for seg in self.segments])
+            if len(self.segments) > 1:  # one idf row per term and segment
+                vocab = vocab.groupBy("term").agg(F.sum("df").alias("df"))
+            parts.append(
+                vocab.orderBy(F.desc("df"), F.asc("term"))
+                .limit(limit)
+                .select(F.lit(key).alias("key"), "term", "df")
+            )
+        rows = reduce(DataFrame.unionByName, parts).collect()
+        by_key: dict[str, list[tuple[int, str]]] = {}
+        for r in rows:  # union row order is unspecified — re-rank driver-side
+            by_key.setdefault(r["key"], []).append((int(r["df"]), r["term"]))
+        return {
+            p: [t for _df, t in sorted(hits, key=lambda x: (-x[0], x[1]))]
+            for p, hits in by_key.items()
+        }
+
+    def _prefix_expansions(
+        self, prefixes: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        return self._vocab_topdf(
+            [(p, F.col("term").startswith(p)) for p in prefixes], limit
+        )
+
+    def _wildcard_expansions(
+        self, patterns: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        """General wildcard (``*``/``?`` anywhere) expansion over the
+        post-stem vocabulary — Lucene WildcardQuery semantics.  The
+        longest literal prefix is pushed as an extra StartsWith (prunes
+        the scan unless the pattern leads with a wildcard, Lucene's own
+        cost cliff); the LIKE itself evaluates in codegen."""
+        items = []
+        for p in patterns:
+            cond = F.col("term").like(wildcard_to_like(p))
+            lit = wildcard_literal_prefix(p)
+            if lit:
+                cond = F.col("term").startswith(lit) & cond
+            items.append((p, cond))
+        return self._vocab_topdf(items, limit)
+
+    def _regexp_expansions(
+        self, patterns: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        """Regexp term (``/pattern/``) expansion — Lucene RegexpQuery
+        semantics: the pattern must match the WHOLE vocabulary term
+        (anchored).  Evaluated JVM-side via ``rlike``; patterns are
+        validated driver-side first so an invalid regex fails loud with
+        a Python error, not an opaque executor stack."""
+        import re as _re
+
+        for p in patterns:
+            try:
+                _re.compile(p)
+            except _re.error as e:
+                raise ValueError(f"invalid regexp term /{p}/: {e}") from e
+        return self._vocab_topdf(
+            [(p, F.col("term").rlike(f"^(?:{p})$")) for p in patterns], limit
+        )
+
+    def _fuzzy_rows(self, terms: list[str]) -> dict[str, list[tuple[str, int]]]:
+        """Per-segment delete-1 collision candidates
+        (:meth:`Segment._fuzzy_rows`) merged with df summed (raw sums,
+        like :meth:`_vocab_topdf`), so fuzzy expansion and did-you-mean
+        (operators/didyoumean.py) share ONE merge contract."""
+        merged: dict[str, dict[str, int]] = {t: {} for t in terms}
+        for seg in self.segments:
+            for t, lst in seg._fuzzy_rows(terms).items():
+                acc = merged[t]
+                for w, dfv in lst:
+                    acc[w] = acc.get(w, 0) + dfv
+        return {t: list(d.items()) for t, d in merged.items()}
+
     def expand_fuzzy(self, query_text: str, limit: int = FUZZY_CAP) -> str:
         """Rewrite trailing-``~`` tokens into their edit-distance-≤1
         vocabulary neighbors (``kubernets~`` → ``kubernetes ...``) —
@@ -1163,7 +1405,8 @@ class CompressedIndex:
         query-time shape).  Execute the result with ``analyzed=True``
         (disjunctive — OR-semantics is what a synonym means; a
         conjunctive query would REQUIRE every synonym).  ``mapping``
-        (raw words) overrides the persisted sidecar; with neither, the
+        (raw words) overrides the persisted sidecar, a query-layer
+        setting kept on the base segment (segment 0); with neither, the
         query passes through unchanged.  ``analyzed=True`` treats the
         input as already-analyzed terms (composition with a prior
         prefix/fuzzy ``expand_query`` pass, whose output must not be
@@ -1174,19 +1417,18 @@ class CompressedIndex:
             syn = analyze_mapping(mapping)
         else:
             if self._syn_memo is None:
-                self._syn_memo = load_synonyms(self.spark, self.paths.root)
+                self._syn_memo = load_synonyms(self.spark, self.segments[0].paths.root)
             syn = self._syn_memo
         terms = query_text.split() if analyzed else analyze_query(query_text)
         return " ".join(expand_terms(terms, syn))
-
-    # -- query -------------------------------------------------------
 
     def _resolve_spec(self, spec: "QuerySpec | None") -> "QuerySpec | None":
         """Resolve a phrase-prefix marker (ES ``match_phrase_prefix``:
         ``"incid resp*"``) into its vocabulary variants — one idf-table
         TakeOrdered like :meth:`expand_prefixes` — folding them into the
         scoring set.  Kernels require the resolved form (they have no
-        vocabulary access)."""
+        vocabulary access); the variants run in every segment's kernel,
+        so a variant present only in a newer segment still matches."""
         if spec is None or spec.phrase_prefix is None:
             return spec
         import dataclasses
@@ -1201,95 +1443,66 @@ class CompressedIndex:
             score_terms=sorted(set((spec.phrase_a or []) + exp)),
         )
 
-    def _resolve_tomb(self, tombstones) -> "Tombstones | None":
-        if not tombstones:
-            return None
-        if self.scheme != "conv_rank":
-            raise ValueError(
-                "tombstones need the conv_rank doc-id scheme (dense "
-                "streaming indexes: rebuild or compact first)"
-            )
-        # memo: the same deletion list arrives on every topk/match_count
-        # call of a request (service.search resolves it twice otherwise)
-        # — one convs lookup per distinct list, not per call
-        key = _tomb_key(tombstones)
-        hit = self._tomb_memo.get(key)
-        if hit is None:
-            hit = _tombstones(
-                tombstones, lambda need: {c: r for c, (r, _g) in self._conv_lookup(need).items()}
-            )
-            self._tomb_memo[key] = hit
-        return hit
-
-    def _resolve_after(self, search_after) -> tuple[float, int] | None:
-        """(score, conv_id, turn_idx) cursor → (score, cursor_doc_id) in
-        THIS index's doc-id space (search_after deep pagination).
-
-        conv_rank assignment is order-isomorphic to conv_id (pinned by
-        tests), so "strictly after the cursor" is exactly
-        ``doc_id > cdoc`` at equal score.  A cursor conversation ABSENT
-        from the index (e.g. its docs live in another segment) still
-        cuts correctly through the boundary rank r = |{convs < conv}|:
-        every doc after the cursor has ``doc_id >= r << turn_bits``,
-        i.e. ``doc_id > (r << turn_bits) - 1``.  One convs lookup per
-        distinct cursor, memoized: on the driver within the local budget,
-        else a small Spark job."""
-        if search_after is None:
-            return None
-        if self.scheme != "conv_rank":
-            raise ValueError(
-                "search_after needs the conv_rank doc-id scheme (dense "
-                "streaming indexes: compact first)"
-            )
-        if self.tie_safe:
-            raise ValueError(
-                "search_after needs doc-id order isomorphic to (conv_id, "
-                "turn_idx); this index's meta records the isomorphism "
-                "broken (out-of-order extend) — compact first"
-            )
-        score, conv_id, turn_idx = search_after
-        key = (str(conv_id), int(turn_idx))
-        cdoc = self._after_memo.get(key)
-        if cdoc is None:
-            hit = self._conv_lookup([conv_id]).get(conv_id)
-            if hit is not None:
-                cdoc = (hit[0] << self.turn_bits) | int(turn_idx)
-            else:
-                files = self._convs_files()
-                if files is None:
-                    r = self._convs.filter(F.col("conv_id") < conv_id).count()
-                else:
-                    import pyarrow.parquet as pq
-
-                    r = pq.read_table(files, columns=["conv_id"],
-                                      filters=[("conv_id", "<", conv_id)]).num_rows
-                cdoc = (r << self.turn_bits) - 1
-            self._after_memo[key] = cdoc
-        return (float(score), cdoc)
+    # -- planning ----------------------------------------------------
 
     def scope_docs(self, turns: DataFrame) -> DataFrame:
         """Resolve a metadata predicate's matching turns to kernel
-        coordinates: DataFrame(conv_id, turn_idx, …) → (group, doc_id).
+        coordinates: DataFrame(conv_id, turn_idx, …) → (seg, group,
+        doc_id), against every segment's own convs table.
 
         This is the distributed half of scoped search — the caller
         filters the corpus METADATA (column-pruned, predicate pushed to
         its parquet scan, never the text column) and hands the matching
-        keys here; the join against the thin convs/docmap table and the
+        keys here; the join against the thin convs table and the
         group-keyed shuffle carry only the docs that PASS the predicate,
         so cost tracks filter selectivity, not corpus size.  No driver
         collect anywhere (contrast :func:`resolve_tombstones`, which is
-        sized for small deletion lists)."""
+        sized for small deletion lists).  A turn indexed in several
+        segments (update shadows) resolves in each — the shadow
+        exclusion removes the superseded copy at kernel time."""
         keys = turns.select("conv_id", "turn_idx")
-        if self.scheme == "conv_rank":
-            return keys.join(self._convs, "conv_id").select(
+        return reduce(DataFrame.unionByName, [
+            keys.join(seg._convs, "conv_id").select(
+                F.lit(i).alias("seg"),
                 "group",
-                (F.shiftleft(F.col("conv_rank"), self.turn_bits) + F.col("turn_idx"))
+                (F.shiftleft(F.col("conv_rank"), TURN_BITS) + F.col("turn_idx"))
                 .cast("long")
                 .alias("doc_id"),
             )
-        return keys.join(self._docmap, ["conv_id", "turn_idx"]).select(
-            "group", "doc_id"
+            for i, seg in enumerate(self.segments)
+        ])
+
+    def _grouped(self, kernel, terms: list[str], scope: DataFrame | None, schema: str) -> DataFrame:
+        """The Spark plan's kernel pass: the segments' bucket-pruned
+        postings of ``terms`` grouped by (seg, group) — cogrouped with
+        ``scope``'s doc ids on the SAME key when scoped, so the allow
+        side shuffles once, partitioned like the postings, never via the
+        driver — through ``kernel``, whose rows gain the ``seg`` column.
+        The only exchange carries the pruned postings: doclens ride
+        inline in the blocks (format v5)."""
+        post = self.postings_df(terms).groupBy("seg", "group")
+        if scope is None:
+            return post.applyInPandas(_with_seg(kernel), schema="seg int, " + schema)
+        return post.cogroup(self.scope_docs(scope).groupBy("seg", "group")).applyInPandas(
+            _with_seg_scoped(kernel), schema="seg int, " + schema
         )
+
+    def _label(self, cand: DataFrame, extra: tuple = ()) -> DataFrame:
+        """(seg, doc_id, score[, extra…]) → (extra…, conv_id, turn_idx, score)."""
+        return (
+            cand.withColumn("conv_rank", F.shiftrightunsigned("doc_id", TURN_BITS))
+            .withColumn("turn_idx", F.col("doc_id").bitwiseAND(F.lit(TURN_MASK)).cast("int"))
+            .join(self._convs, ["seg", "conv_rank"])
+            .select(*extra, "conv_id", "turn_idx", "score")
+        )
+
+    def _spec(self, spec, query_text: str, mode: str, analyzed: bool, min_match: int = 1):
+        """A caller's pre-compiled spec, else the query parsed and resolved."""
+        if spec is None:
+            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+        return spec
+
+    # -- query -------------------------------------------------------
 
     def topk(
         self,
@@ -1338,45 +1551,22 @@ class CompressedIndex:
                 "search_after (its bounded heap has no candidate-exclusion "
                 "hook); use algo='auto' or 'exact'"
             )
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+        spec = self._spec(spec, query_text, mode, analyzed, min_match)
         if spec is None:
             return _topk_frame(self.spark, None)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        avgdl = self.avgdl
-        # dense (streaming/arrival-ordered) doc ids are not isomorphic to
-        # the (conv_id, turn_idx) tie-break order, so group kernels must
-        # emit boundary ties and let the global sort resolve them; WAND's
-        # bounded heap cannot hold ties, so it is only safe on conv_rank
         kernel = _make_group_kernel(
-            spec, idf, avgdl, k, algo, with_ties=self.tie_safe,
-            exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
+            spec, idf, self.avgdl, k, algo, with_ties=self.tie_safe,
+            exclude=self._resolve_tomb(tombstones), scoped=scope is not None,
             after=self._resolve_after(search_after),
         )
         if scope is None:
-            frames = _local_groups([self], fetch_terms, kernel)
+            frames = _local_groups(self.segments, fetch_terms, kernel)
             if frames is not None:
-                return _topk_local([self], frames, k)
-        post = self.postings_df(fetch_terms)
-        # v5: single-sided grouped kernel — the only exchange carries the
-        # bucket-pruned postings; doclens are inline in the blocks (the
-        # pre-v5 shape cogrouped the CORPUS-wIDE doclen blobs per query)
-        if scope is not None:
-            # scoped: cogroup the pruned postings with the predicate's
-            # doc ids on the SAME group key — the allow side shuffles
-            # once, partitioned like the postings, never via the driver
-            cand = (
-                post.groupBy("group")
-                .cogroup(self.scope_docs(scope).groupBy("group"))
-                .applyInPandas(kernel, schema=RESULT_SCHEMA)
-            )
-        else:
-            cand = post.groupBy("group").applyInPandas(kernel, schema=RESULT_SCHEMA)
+                return _topk_local(self.segments, frames, k)
         return (
-            self._label(cand)
+            self._label(self._grouped(kernel, fetch_terms, scope, RESULT_SCHEMA))
             .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
             .limit(k)
         )
@@ -1398,43 +1588,45 @@ class CompressedIndex:
         Elasticsearch field-collapsing analog — 'show me conversations
         about X', one row per conv, its best turn as representative).
 
-        Exact: each group scores all candidates and collapses to its
-        local top-k conversations (convs never span groups — the group
-        key is a conv_id hash), so at most G·k rows reach the global
-        TakeOrdered.  Composes with tombstones/scope/analyzed/
-        min_match/boosts/search_after like :meth:`topk` (the
-        search_after cursor names the previous page's last CONVERSATION
-        via its representative turn)."""
-        if self.scheme != "conv_rank":
+        Exact: each (seg, group) scores all candidates and collapses to
+        its local top-k conversations (convs never span the groups of
+        one segment — the group key is a conv_id hash), so at most
+        S·G·k rows reach the global TakeOrdered.  A conversation CAN
+        span segments (a later delta adds turns), so a window
+        re-collapses per conv_id before the global cut; a conv whose
+        best turn was cut by a segment-local top-k cannot belong to the
+        global top-k (that segment already holds k better convs).
+        Composes with tombstones/scope/analyzed/min_match/boosts like
+        :meth:`topk`.  ``search_after`` (the cursor names the previous
+        page's last CONVERSATION via its representative turn) needs one
+        segment: across segments a conversation collapses to its best
+        turn only after the window, so a per-segment cursor filter
+        could resurface a conversation already served."""
+        from pyspark.sql import Window
+
+        if search_after is not None and len(self.segments) > 1:
             raise ValueError(
-                "topk_conversations needs the conv_rank doc-id scheme — the "
-                "kernel collapses on the rank bits (dense streaming indexes: "
-                "compact first)"
+                "search_after on conversation-collapsed results needs a "
+                "single compacted index (a conv spanning segments would "
+                "paginate on per-segment bests, not its global best); "
+                "compact first or paginate turn-level topk"
             )
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+        spec = self._spec(spec, query_text, mode, analyzed, min_match)
         if spec is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_collapse_kernel(
             spec, idf, self.avgdl, k, with_ties=self.tie_safe,
-            exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
+            exclude=self._resolve_tomb(tombstones), scoped=scope is not None,
             after=self._resolve_after(search_after),
         )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            cand = (
-                post.groupBy("group")
-                .cogroup(self.scope_docs(scope).groupBy("group"))
-                .applyInPandas(kernel, schema=RESULT_SCHEMA)
-            )
-        else:
-            cand = post.groupBy("group").applyInPandas(kernel, schema=RESULT_SCHEMA)
+        w = Window.partitionBy("conv_id").orderBy(F.desc("score"), F.asc("turn_idx"))
         return (
-            self._label(cand)
+            self._label(self._grouped(kernel, fetch_terms, scope, RESULT_SCHEMA))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
             .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
             .limit(k)
         )
@@ -1452,34 +1644,21 @@ class CompressedIndex:
         """Total matching documents (the reference's totalResults field,
         served by every /api/search response for pagination): size of
         the candidate set :meth:`topk` ranks, via one grouped count pass
-        over the same bucket-pruned postings scan."""
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+        over the same bucket-pruned postings scan — per-(seg, group)
+        counts sum because segments and groups hold disjoint docs."""
+        spec = self._spec(spec, query_text, mode, analyzed, min_match)
         if spec is None:
             return 0
         fetch_terms = _fetch_terms(spec)
-        idf = self.idf_map(spec.score_terms)
         kernel = _make_count_kernel(
-            spec, idf, self.avgdl, exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
+            spec, self.idf_map(spec.score_terms), self.avgdl,
+            exclude=self._resolve_tomb(tombstones), scoped=scope is not None,
         )
         if scope is None:
-            frames = _local_groups([self], fetch_terms, kernel)
+            frames = _local_groups(self.segments, fetch_terms, kernel)
             if frames is not None:
                 return sum(int(f["n"].sum()) for f in frames)
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            grouped = post.groupBy("group").cogroup(
-                self.scope_docs(scope).groupBy("group")
-            )
-        else:
-            grouped = post.groupBy("group")
-        row = (
-            grouped.applyInPandas(kernel, schema="n long")
-            .agg(F.sum("n"))
-            .collect()[0]
-        )
+        row = self._grouped(kernel, fetch_terms, scope, "n long").agg(F.sum("n")).collect()[0]
         return int(row[0] or 0)
 
     def matches(
@@ -1495,25 +1674,15 @@ class CompressedIndex:
         """ALL matching documents → DataFrame(conv_id, turn_idx) — the
         candidate set :meth:`match_count` sizes, materialized for
         faceting and metadata joins.  Output is O(matches)."""
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+        spec = self._spec(spec, query_text, mode, analyzed, min_match)
         if spec is None:
             return self.spark.createDataFrame([], "conv_id string, turn_idx int")
         fetch_terms = _fetch_terms(spec)
-        idf = self.idf_map(spec.score_terms)
         kernel = _make_matches_kernel(
-            spec, idf, self.avgdl, exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
+            spec, self.idf_map(spec.score_terms), self.avgdl,
+            exclude=self._resolve_tomb(tombstones), scoped=scope is not None,
         )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            grouped = post.groupBy("group").cogroup(
-                self.scope_docs(scope).groupBy("group")
-            )
-        else:
-            grouped = post.groupBy("group")
-        cand = grouped.applyInPandas(kernel, schema=MATCHES_SCHEMA)
+        cand = self._grouped(kernel, fetch_terms, scope, MATCHES_SCHEMA)
         return self._label(cand.withColumn("score", F.lit(0.0))).drop("score")
 
     def matches_scored(
@@ -1531,65 +1700,15 @@ class CompressedIndex:
         whose final order is not monotone in BM25 (recency decay —
         ``operators/recency.py``).  Output is O(matches); kernel cost
         is the same O(postings) class as :meth:`match_count`."""
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed))
+        spec = self._spec(spec, query_text, mode, analyzed)
         if spec is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
         fetch_terms = _fetch_terms(spec)
-        idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
         kernel = _make_scored_matches_kernel(
-            spec, idf, self.avgdl, exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
+            spec, _weighted_idf(self.idf_map(spec.score_terms), spec), self.avgdl,
+            exclude=self._resolve_tomb(tombstones), scoped=scope is not None,
         )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            grouped = post.groupBy("group").cogroup(
-                self.scope_docs(scope).groupBy("group")
-            )
-        else:
-            grouped = post.groupBy("group")
-        return self._label(grouped.applyInPandas(kernel, schema=RESULT_SCHEMA))
-
-    def _doc_coords(self, conv_id: str, turn_idx: int) -> tuple[int, int] | None:
-        """(group, doc_id) of one (conv_id, turn_idx), or None when the
-        conversation is absent from this index — one pruned lookup on
-        the thin convs/docmap table (diagnostic path, not cached)."""
-        if self.scheme == "conv_rank":
-            hit = self._conv_lookup([conv_id]).get(conv_id)
-            if hit is None:
-                return None
-            return hit[1], (hit[0] << self.turn_bits) | int(turn_idx)
-        rows = (
-            self._docmap.filter(
-                (F.col("conv_id") == conv_id) & (F.col("turn_idx") == int(turn_idx))
-            )
-            .select("group", "doc_id")
-            .collect()
-        )
-        if not rows:
-            return None
-        return int(rows[0]["group"]), int(rows[0]["doc_id"])
-
-    def _explain_rows(
-        self, spec: QuerySpec, idf: dict[str, float], avgdl: float,
-        group: int, doc_id: int,
-    ) -> list:
-        """Collected (term, tf, dl) rows of ONE doc for one query — the
-        distributed half of :meth:`explain`: a bucket-pruned,
-        group-filtered postings scan feeding a single-group kernel that
-        checks candidate membership (same ``_candidates_spec`` dispatch
-        every count/matches kernel runs — one group's pruned postings,
-        1/num_groups of a query's kernel work).  Empty when the doc does
-        not match the query."""
-        fetch_terms = _fetch_terms(spec)
-        kernel = _make_explain_kernel(
-            spec, idf, avgdl, doc_id, getattr(self, "turn_bits", TURN_BITS)
-        )
-        post = self.postings_df(fetch_terms).filter(F.col("group") == group)
-        return post.groupBy("group").applyInPandas(
-            kernel, schema=EXPLAIN_KERNEL_SCHEMA
-        ).collect()
+        return self._label(self._grouped(kernel, fetch_terms, scope, RESULT_SCHEMA))
 
     def explain(
         self,
@@ -1614,32 +1733,39 @@ class CompressedIndex:
         (lexicographic term order) to the doc's :meth:`topk` score
         bit-for-bit (pinned by tests).  Empty when the doc is not in the
         query's match set (conjunctive missing a term, phrase absent,
-        NOT excluded, tombstoned, below ``min_match``) — the ES
-        ``matched: false`` case.
+        NOT excluded, tombstoned, shadow-superseded, below
+        ``min_match``) — the ES ``matched: false`` case.
 
-        Cost: one convs lookup + one bucket-pruned, group-filtered
-        postings scan — the membership check runs the tested
-        ``_candidates_spec`` dispatch over ONE group's pruned postings,
-        so the kernel work is 1/num_groups of a full query's."""
+        Cost: a (conv_id, turn_idx) has at most one LIVE occurrence
+        across segments, so segments probe newest-first: each segment
+        holding the conversation pays one convs lookup, and only the
+        owner runs one bucket-pruned, group-filtered postings scan — the
+        membership check runs the tested ``_candidates_spec`` dispatch
+        over ONE group's pruned postings, so the kernel work is
+        1/num_groups of a full query's."""
+        spec = self._spec(spec, query_text, mode, analyzed, min_match)
         if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        if spec is None:
-            return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
-        coords = self._doc_coords(conv_id, turn_idx)
-        if coords is None:
-            return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
-        group, doc_id = coords
-        tomb = self._resolve_tomb(tombstones)
-        if tomb is not None and not tomb.keep_mask(
-            np.asarray([doc_id], dtype=np.int64), self.turn_bits
-        )[0]:
             return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        rows = self._explain_rows(spec, idf, self.avgdl, group, doc_id)
-        return _assemble_explain(
-            self.spark, rows, self.idf_map(spec.score_terms),
-            self.df_map(spec.score_terms), spec, self.avgdl,
-        )
+        excl = self._resolve_tomb(tombstones) or {}
+        for i in reversed(range(len(self.segments))):
+            seg = self.segments[i]
+            coords = seg._doc_coords(conv_id, turn_idx)
+            if coords is None:
+                continue
+            group, doc_id = coords
+            tomb = excl.get(i)
+            if tomb is not None and not tomb.keep_mask(
+                np.asarray([doc_id], dtype=np.int64), TURN_BITS
+            )[0]:
+                continue  # tombstoned or shadow-superseded here
+            rows = seg._explain_rows(spec, idf, self.avgdl, group, doc_id)
+            if rows:
+                return _assemble_explain(
+                    self.spark, rows, self.idf_map(spec.score_terms),
+                    self.df_map(spec.score_terms), spec, self.avgdl,
+                )
+        return self.spark.createDataFrame([], EXPLAIN_SCHEMA)
 
     def facet_counts(
         self,
@@ -1666,7 +1792,11 @@ class CompressedIndex:
             query_text, mode, tombstones=tombstones, scope=scope,
             analyzed=analyzed, min_match=min_match, spec=spec,
         )
-        return _facet_join(cand, meta, facet_col)
+        return (
+            cand.join(meta.select("conv_id", "turn_idx", facet_col), ["conv_id", "turn_idx"])
+            .groupBy(facet_col)
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
 
     def topk_batch(
         self,
@@ -1718,23 +1848,21 @@ class CompressedIndex:
             algo,
             with_ties=self.tie_safe,
             exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
             scoped=scope is not None,
         )
         if scope is None:
-            frames = _local_groups([self], sorted(fetch_terms), kernel)
+            frames = _local_groups(self.segments, sorted(fetch_terms), kernel)
             if frames is not None:
-                return _batch_local([self], frames, specs)
-        post = self.postings_df(sorted(fetch_terms))
-        if scope is not None:
-            cand = (
-                post.groupBy("group")
-                .cogroup(self.scope_docs(scope).groupBy("group"))
-                .applyInPandas(kernel, schema=BATCH_RESULT_SCHEMA)
-            )
-        else:
-            cand = post.groupBy("group").applyInPandas(kernel, schema=BATCH_RESULT_SCHEMA)
+                return _batch_local(self.segments, frames, specs)
+        cand = self._grouped(kernel, sorted(fetch_terms), scope, BATCH_RESULT_SCHEMA)
         return _rank_per_query(self._label(cand, extra=("query_id",)), specs)
+
+
+class CompressedIndex(IndexReader):
+    """Reader over an index directory produced by :class:`IndexBuilder`."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        super().__init__(spark, [root])
 
 
 def _score_spec(
@@ -1746,7 +1874,6 @@ def _score_spec(
     algo: str,
     with_ties: bool,
     tomb: "Tombstones | None" = None,
-    turn_bits: int = TURN_BITS,
     allow: np.ndarray | None = None,
     after: tuple[float, int] | None = None,
 ):
@@ -1787,7 +1914,7 @@ def _score_spec(
             if allow is not None:
                 cand = np.intersect1d(cand, allow, assume_unique=True)
             if tomb is not None:
-                cand = tomb.mask(cand, turn_bits)
+                cand = tomb.mask(cand, TURN_BITS)
             if after is not None:
                 return _topk_after(
                     score_lists, idf, avgdl, k, cand, after, with_ties
@@ -1829,7 +1956,7 @@ def _score_spec(
     if allow is not None:
         cand = np.intersect1d(cand, allow, assume_unique=True)
     if tomb is not None:
-        cand = tomb.mask(cand, turn_bits)
+        cand = tomb.mask(cand, TURN_BITS)
     if after is not None:
         return _topk_after(score_lists, idf, avgdl, k, cand, after, with_ties)
     return exact_topk(
@@ -1842,7 +1969,6 @@ def _candidates_spec(
     idf: dict[str, float],
     plists: dict,
     tomb: "Tombstones | None" = None,
-    turn_bits: int = TURN_BITS,
     allow: np.ndarray | None = None,
 ) -> np.ndarray:
     """The matching-doc set of one group for one query (sorted unique
@@ -1880,7 +2006,7 @@ def _candidates_spec(
     if allow is not None:
         cand = np.intersect1d(cand, allow, assume_unique=True)
     if tomb is not None:
-        cand = tomb.mask(cand, turn_bits)
+        cand = tomb.mask(cand, TURN_BITS)
     return cand
 
 
@@ -1889,13 +2015,12 @@ def _count_spec(
     idf: dict[str, float],
     plists: dict,
     tomb: "Tombstones | None" = None,
-    turn_bits: int = TURN_BITS,
     allow: np.ndarray | None = None,
 ) -> int:
     """Matching-doc count for one group — the candidate set top-k draws
     from (totalResults analog); groups hold disjoint docs, so counts sum."""
     return int(
-        _candidates_spec(spec, idf, plists, tomb, turn_bits, allow).size
+        _candidates_spec(spec, idf, plists, tomb, allow).size
     )
 
 
@@ -1904,17 +2029,16 @@ def _make_count_kernel(
     idf: dict[str, float],
     avgdl: float,
     exclude=None,
-    turn_bits: int = TURN_BITS,
     scoped: bool = False,
 ):
     def count(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return pd.DataFrame({"n": pd.array([0], dtype="int64")})
         plists = _build_plists(post_pdf, idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
+        tomb = _for_seg(exclude, post_pdf)
         return pd.DataFrame(
             {"n": pd.array(
-                [_count_spec(spec, idf, plists, tomb, turn_bits, allow)],
+                [_count_spec(spec, idf, plists, tomb, allow)],
                 dtype="int64",
             )}
         )
@@ -1937,7 +2061,6 @@ def _make_matches_kernel(
     idf: dict[str, float],
     avgdl: float,
     exclude=None,
-    turn_bits: int = TURN_BITS,
     scoped: bool = False,
 ):
     """Kernel EMITTING the matching doc ids of each group (the set
@@ -1949,8 +2072,8 @@ def _make_matches_kernel(
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return pd.DataFrame({"doc_id": pd.array([], dtype="int64")})
         plists = _build_plists(post_pdf, idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
-        cand = _candidates_spec(spec, idf, plists, tomb, turn_bits, allow)
+        tomb = _for_seg(exclude, post_pdf)
+        cand = _candidates_spec(spec, idf, plists, tomb, allow)
         return pd.DataFrame({"doc_id": cand})
 
     if scoped:
@@ -1975,7 +2098,6 @@ def _make_explain_kernel(
     idf: dict[str, float],
     avgdl: float,
     target_doc: int,
-    turn_bits: int = TURN_BITS,
 ):
     """Kernel emitting (term, tf, dl) of ONE target doc — the
     distributed half of ``explain``.  Candidate membership runs the
@@ -1998,7 +2120,7 @@ def _make_explain_kernel(
             return empty
         plists = _build_plists(post_pdf, idf, avgdl)
         doc = np.asarray([target_doc], dtype=np.int64)
-        cand = _candidates_spec(spec, idf, plists, None, turn_bits, allow=doc)
+        cand = _candidates_spec(spec, idf, plists, None, allow=doc)
         if cand.size == 0:
             return empty
         rows = []
@@ -2062,7 +2184,6 @@ def _make_scored_matches_kernel(
     idf: dict[str, float],
     avgdl: float,
     exclude=None,
-    turn_bits: int = TURN_BITS,
     scoped: bool = False,
 ):
     """Kernel emitting EVERY matching doc WITH its exact BM25 score —
@@ -2081,8 +2202,8 @@ def _make_scored_matches_kernel(
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return empty
         plists = _build_plists(post_pdf, idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
-        cand = _candidates_spec(spec, idf, plists, tomb, turn_bits, allow)
+        tomb = _for_seg(exclude, post_pdf)
+        cand = _candidates_spec(spec, idf, plists, tomb, allow)
         if cand.size == 0:
             return empty
         score_lists = {t: p for t, p in plists.items() if t in idf}
@@ -2125,7 +2246,6 @@ def _make_group_kernel(
     algo: str,
     with_ties: bool = False,
     exclude=None,
-    turn_bits: int = TURN_BITS,
     scoped: bool = False,
     after=None,
 ):
@@ -2134,8 +2254,8 @@ def _make_group_kernel(
     ``scoped=True`` returns the COGROUP form ``(key, postings, allow)``
     — the allow side is the scope predicate's matching doc ids of the
     same group, delivered by Spark's cogroup (never a driver collect).
-    ``after`` is the resolved search_after cursor ((score, doc_id), or a
-    per-segment dict under MultiIndex)."""
+    ``exclude`` and ``after`` are per-segment dicts of resolved
+    tombstones and search_after cursors ((score, doc_id))."""
 
     def score(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
@@ -2144,8 +2264,8 @@ def _make_group_kernel(
         plists = _build_plists(post_pdf, idf, avgdl)
         docs, scores = _score_spec(
             spec, idf, plists, avgdl, k, algo, with_ties,
-            tomb=_tomb_for(exclude, post_pdf), turn_bits=turn_bits,
-            allow=allow, after=_after_for(after, post_pdf),
+            tomb=_for_seg(exclude, post_pdf),
+            allow=allow, after=_for_seg(after, post_pdf),
         )
         return pd.DataFrame({"doc_id": docs, "score": scores})
 
@@ -2171,7 +2291,6 @@ def _make_batch_kernel(
     algo: str,
     with_ties: bool = False,
     exclude=None,
-    turn_bits: int = TURN_BITS,
     scoped: bool = False,
 ):
     """One grouped kernel scoring EVERY query of a batch against the
@@ -2193,7 +2312,7 @@ def _make_batch_kernel(
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return empty
         plists = _build_plists(post_pdf, merged_idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
+        tomb = _for_seg(exclude, post_pdf)
         frames = []
         for qid, (spec, idf, k) in enumerate(zip(specs, idfs, ks)):
             # a boosted query's per-query idf map is SCALED, but plists
@@ -2203,7 +2322,7 @@ def _make_batch_kernel(
             qalgo = "exact" if spec.weights else algo
             docs, scores = _score_spec(
                 spec, idf, plists, avgdl, k, qalgo, with_ties,
-                tomb=tomb, turn_bits=turn_bits, allow=allow,
+                tomb=tomb, allow=allow,
             )
             if docs.size:
                 frames.append(

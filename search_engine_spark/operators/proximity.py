@@ -51,7 +51,7 @@ def proximity_boost(distance: int | None) -> float:
     return 0.0
 
 
-def proximity_distances(index, terms: list[str], doc_ids: list[int]):
+def proximity_distances(segment, terms: list[str], doc_ids: list[int]):
     """(doc_id, distance) DataFrame for the given candidate docs.
 
     Executor-side: bucket-pruned postings of the query terms are
@@ -93,60 +93,32 @@ def proximity_distances(index, terms: list[str], doc_ids: list[int]):
                              "distance": pd.array(out_dists, dtype="int64")})
 
     return (
-        index.postings_df(terms)
+        segment.postings_df(terms)
         .groupBy("group")
         .applyInPandas(kernel, schema="doc_id long, distance long")
     )
-
-
-def _candidate_doc_ids(index, base_rows) -> dict[tuple[str, int], int]:
-    """(conv_id, turn_idx) → doc_id for the k candidates, looking up only
-    those keys (filtered join — never a full conv/docmap collect)."""
-    from pyspark.sql import functions as F
-
-    if index.scheme == "conv_rank":
-        conv_ids = sorted({r["conv_id"] for r in base_rows})
-        ranks = {
-            r["conv_id"]: r["conv_rank"]
-            for r in index._convs.filter(F.col("conv_id").isin(conv_ids))
-            .select("conv_id", "conv_rank")
-            .collect()
-        }
-        return {
-            (r["conv_id"], r["turn_idx"]): (ranks[r["conv_id"]] << index.turn_bits)
-            | r["turn_idx"]
-            for r in base_rows
-        }
-    conv_ids = sorted({r["conv_id"] for r in base_rows})
-    turns = sorted({r["turn_idx"] for r in base_rows})
-    wanted = {(r["conv_id"], r["turn_idx"]) for r in base_rows}
-    rows = (
-        index._docmap.filter(
-            F.col("conv_id").isin(conv_ids) & F.col("turn_idx").isin(turns)
-        )
-        .select("doc_id", "conv_id", "turn_idx")
-        .collect()
-    )
-    return {
-        (r["conv_id"], r["turn_idx"]): r["doc_id"]
-        for r in rows
-        if (r["conv_id"], r["turn_idx"]) in wanted
-    }
 
 
 def rerank_with_proximity(index, query_text: str, k: int = 10, mode: str = "disjunctive"):
     """BM25 top-k, then add the proximity boost and re-sort.
 
     Returns list of (conv_id, turn_idx, base_score, distance, boosted).
-    Works for both docid schemes (conv_rank and dense/streaming).  All
-    heavy work is executor-side: candidate doc_ids come from a filtered
-    lookup of the k keys, positions from a candidate-bounded cogroup
-    kernel — no full postings/conv-table collect (the round-1 version
-    pulled both to the driver).
+    Needs a one-segment reader (a ``CompressedIndex``, or a compacted
+    live index): candidate doc ids come from the segment's conv-rank
+    lookup of the k keys (on the driver within the local budget),
+    positions from a candidate-bounded grouped kernel over that
+    segment's postings — no full postings/conv-table collect.
     """
+    from ..index.build import TURN_BITS
     from ..index.reader import parse_query
     from ..textproc import analyze_query
 
+    if len(index.segments) > 1:
+        raise ValueError(
+            "rerank_with_proximity needs one segment (doc ids are "
+            "segment-local conv ranks); compact the live index first"
+        )
+    seg = index.segments[0]
     base = index.topk(query_text, mode, k).collect()
     if not base:
         return []
@@ -154,10 +126,14 @@ def rerank_with_proximity(index, query_text: str, k: int = 10, mode: str = "disj
     terms = spec.score_terms if spec else sorted(set(analyze_query(query_text)))
     if not terms:
         return []
-    doc_of = _candidate_doc_ids(index, base)
+    rank = seg._conv_lookup(sorted({r["conv_id"] for r in base}))
+    doc_of = {
+        (r["conv_id"], r["turn_idx"]): (rank[r["conv_id"]][0] << TURN_BITS) | r["turn_idx"]
+        for r in base
+    }
     dists = {
         r["doc_id"]: int(r["distance"])
-        for r in proximity_distances(index, terms, list(doc_of.values())).collect()
+        for r in proximity_distances(seg, terms, list(doc_of.values())).collect()
     }
     out = []
     for row in base:

@@ -32,6 +32,7 @@ restores the raw ES behavior.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
@@ -103,26 +104,17 @@ def significant_terms(
         )
         if qspec is not None:
             fg = fg.filter(~F.col("term").isin(_fetch_terms(qspec)))
-    # background df from the one-row-per-term idf table (bucket layout
-    # cannot prune an unknown term set — this is the table built to pay
-    # that scan, same trade as prefix expansion); every foreground term
-    # is in the vocabulary, so the inner join loses nothing.  MultiIndex:
-    # per-segment dfs sum (the same union-vocabulary contract as fuzzy /
-    # prefix expansion).
-    segments = getattr(index, "segments", None)
-    if segments is None:
-        bg = index._idf.select("term", F.col("df").alias("bg"))
-    else:
-        from functools import reduce
-
-        bg = (
-            reduce(
-                DataFrame.unionByName,
-                [s._idf.select("term", "df") for s in segments],
-            )
-            .groupBy("term")
-            .agg(F.sum("df").alias("bg"))
-        )
+    # background df from the segments' one-row-per-term idf tables
+    # (bucket layout cannot prune an unknown term set — this is the table
+    # built to pay that scan, same trade as prefix expansion), summed per
+    # term (the union-vocabulary contract of fuzzy/prefix expansion);
+    # every foreground term is in the vocabulary, so the inner join
+    # loses nothing.
+    bg = (
+        reduce(DataFrame.unionByName, [s._idf.select("term", "df") for s in index.segments])
+        .groupBy("term")
+        .agg(F.sum("df").alias("bg"))
+    )
     n_docs = float(index.n_docs)
     fg_pct = F.col("fg") / F.lit(float(fg_total))
     bg_pct = F.col("bg") / F.lit(n_docs)

@@ -8,11 +8,12 @@ complement of the LSM ingest path (a turn can be both indexed for later
 forward search AND percolated for immediate alerting from the same
 stream, since both sinks are independent ``foreachBatch`` consumers).
 
-Commit protocol mirrors ``IncrementalIndexer`` (ingest.py): each batch
-writes ``alerts/batch=<id>`` with overwrite semantics and drops a
-``_SUCCESS`` marker, so a replayed micro-batch (Structured Streaming's
-at-least-once ``foreachBatch`` contract) is detected and skipped —
-alerts are emitted exactly once per batch id.
+Commit protocol follows ``SegmentStreamIndexer`` (ingest.py), whose
+commit marker for a batch is the live segment that covers its id: here
+each batch writes ``alerts/batch=<id>`` with overwrite semantics and
+drops a ``_SUCCESS`` marker, so a replayed micro-batch (Structured
+Streaming's at-least-once ``foreachBatch`` contract) is detected and
+skipped — alerts are emitted exactly once per batch id.
 """
 
 from __future__ import annotations

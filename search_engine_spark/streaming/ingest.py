@@ -4,25 +4,16 @@ The reference has NO streaming operators (SURVEY.md §2.9) — its
 "real-time search" is interactive HTTP latency.  These are the
 Spark-native extensions a transcript pipeline needs:
 
-* :class:`IncrementalIndexer` — append-only transcript ingestion via
-  ``readStream`` + ``foreachBatch``: each micro-batch is tokenized with
-  the SAME fragment kernel as the batch build and appended as fragment
-  rows under ``batches/batch=<id>/``; idempotent per batch id (re-run
-  micro-batches skip committed directories — exactly-once on top of
-  at-least-once delivery).  ``compact()`` then runs the standard merge
-  to produce the queryable block-max postings format.  Doc ids are
-  ``(high-watermark offset + rank within batch)`` — monotonically
-  increasing, stable under replay, persisted in ``stream_state.json``.
-
-* :class:`SegmentStreamIndexer` — the streaming leg of the LSM triad:
+* :class:`SegmentStreamIndexer` — append-only transcript ingestion via
+  ``readStream`` + ``foreachBatch``, the streaming leg of the LSM triad:
   each micro-batch becomes its OWN conv_rank index segment (the same
   ``build_index`` a batch build runs, committed atomically by directory
-  rename), instantly queryable through ``MultiIndex`` with exact merged
-  global stats, and folded by ``compact_segments`` when the segment
-  count grows.  Trade vs :class:`IncrementalIndexer`: per-batch cost is
-  a full small build (a few jobs) instead of one fragment append, but
-  the index is LIVE the moment the batch commits — no compaction on the
-  query path.
+  rename), idempotent per batch id (a replayed micro-batch whose id a
+  live segment covers is skipped — exactly-once on top of
+  at-least-once delivery).  The index is LIVE the moment the batch
+  commits, queryable through ``MultiIndex`` with exact merged global
+  stats, and folded by ``compact_segments`` when the segment count
+  grows.  Per-batch cost is a full small build (a few jobs).
 
 * :func:`windowed_event_counts` — watermarked tumbling-window
   aggregation over an event stream (late data handled by the
@@ -32,132 +23,15 @@ Spark-native extensions a transcript pipeline needs:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import BuildConfig
-from ..index.build import (
-    FRAGMENTS_SCHEMA,
-    IndexPaths,
-    _fragment_kernel,
-    finalize_index,
-    write_blocks,
-)
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
-
-
-class IncrementalIndexer:
-    """Streaming transcript ingestion → incremental index fragments."""
-
-    def __init__(self, spark: SparkSession, out_dir: str, config: BuildConfig | None = None):
-        self.spark = spark
-        self.out_dir = out_dir
-        self.config = config or BuildConfig()
-        self.batches_dir = os.path.join(out_dir, "batches")
-        self.state_path = os.path.join(out_dir, "stream_state.json")
-        os.makedirs(self.batches_dir, exist_ok=True)
-
-    # -- state -------------------------------------------------------
-
-    def _state(self) -> dict:
-        if os.path.exists(self.state_path):
-            with open(self.state_path) as f:
-                return json.load(f)
-        return {"next_doc_id": 0, "batches": {}}
-
-    def _save_state(self, state: dict) -> None:
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.state_path)
-
-    # -- micro-batch sink --------------------------------------------
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: tokenize + append fragments, idempotently."""
-        state = self._state()
-        key = str(batch_id)
-        bdir = os.path.join(self.batches_dir, f"batch={batch_id}")
-        if key in state["batches"] and os.path.exists(os.path.join(bdir, "_SUCCESS")):
-            return  # replayed micro-batch — already committed
-        from pyspark.sql.window import Window
-
-        offset = state["next_doc_id"]
-        n = batch_df.count()
-        if n == 0:
-            state["batches"][key] = {"n_docs": 0, "offset": offset}
-            self._save_state(state)
-            return
-        w = Window.orderBy("conv_id", "turn_idx")
-        staged = (
-            batch_df.select("conv_id", "turn_idx", "text")
-            .withColumn("doc_id", F.lit(offset) + F.row_number().over(w) - 1)
-            .withColumn(
-                "group",
-                F.pmod(F.xxhash64("conv_id"), F.lit(self.config.num_groups)).cast("int"),
-            )
-        )
-        staged.select("doc_id", "conv_id", "turn_idx", "group").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(bdir, "docmap"))
-        frags = staged.select("group", "doc_id", "text").mapInPandas(
-            _fragment_kernel, schema=FRAGMENTS_SCHEMA
-        )
-        frags.write.mode("overwrite").parquet(os.path.join(bdir, "fragments"))
-        with open(os.path.join(bdir, "_SUCCESS"), "w") as f:
-            f.write("ok")
-        state["next_doc_id"] = offset + n
-        state["batches"][key] = {"n_docs": n, "offset": offset}
-        self._save_state(state)
-
-    def start(self, input_dir: str, trigger_available_now: bool = True):
-        """readStream on a transcript parquet directory → fragment sink."""
-        stream = (
-            self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", 4)
-            .parquet(input_dir)
-        )
-        writer = stream.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", os.path.join(self.out_dir, "checkpoint")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    # -- compaction ---------------------------------------------------
-
-    def fragments(self) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.batches_dir, "batch=*", "fragments")
-        )
-
-    def compact(self, index_dir: str | None = None) -> str:
-        """Merge all committed batch fragments into the standard
-        block-max postings layout (queryable via CompressedIndex)."""
-        index_dir = index_dir or os.path.join(self.out_dir, "index")
-        paths = IndexPaths(index_dir)
-        os.makedirs(index_dir, exist_ok=True)
-        write_blocks(
-            self.fragments(), paths, self.config.shuffle_partitions, self.config.block_size
-        )
-        # per-doc map for the reader (streamed doc ids are arrival-ordered,
-        # not conv-rank encoded)
-        self.spark.read.parquet(
-            os.path.join(self.batches_dir, "batch=*", "docmap")
-        ).write.mode("overwrite").parquet(paths.docmap)
-        finalize_index(
-            self.spark,
-            paths,
-            self.config.num_groups,
-            self.config.block_size,
-            extra_meta={"docid_scheme": "dense", "source": "streaming"},
-        )
-        return index_dir
 
 
 class SegmentStreamIndexer:

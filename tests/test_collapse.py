@@ -133,36 +133,19 @@ def test_multi_collapse_conv_spanning_segments(spark, xs_pdf, xs_oracle, tmp_pat
         assert got == _want(xs_oracle, q, mode, 5), (q, mode)
 
 
-def test_collapse_rejects_dense_scheme(spark, tmp_path, xs_pdf):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def test_collapse_rejects_dense_scheme(spark, xs_index, tmp_path):
+    """An index whose meta records the retired dense doc-id scheme is
+    refused when it is opened, before any query (collapse included) can
+    misread its doc ids."""
+    import json
+    import shutil
 
-    from search_engine_spark.config import BuildConfig as BC
-    from search_engine_spark.streaming.ingest import IncrementalIndexer
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    schema = pa.schema(
-        [
-            pa.field("conv_id", pa.string()),
-            pa.field("turn_idx", pa.int32()),
-            pa.field("role", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("tool", pa.string()),
-            pa.field("ts", pa.timestamp("us")),
-        ]
-    )
-    pq.write_table(
-        pa.Table.from_pandas(
-            xs_pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]],
-            schema=schema, preserve_index=False,
-        ),
-        str(inp / "all.parquet"),
-    )
-    ing = IncrementalIndexer(spark, str(tmp_path / "out"), BC(num_groups=2))
-    q = ing.start(str(inp), trigger_available_now=True)
-    q.awaitTermination(120)
-    idx = CompressedIndex(spark, ing.compact())
-    assert idx.scheme == "dense"
+    clone = str(tmp_path / "dense")
+    shutil.copytree(xs_index.paths.root, clone)
+    with open(f"{clone}/meta.json") as f:
+        meta = json.load(f)
+    meta["docid_scheme"] = "dense"
+    with open(f"{clone}/meta.json", "w") as f:
+        json.dump(meta, f)
     with pytest.raises(ValueError, match="conv_rank"):
-        idx.topk_conversations("term0001", "disjunctive", 5)
+        CompressedIndex(spark, clone).topk_conversations("term0001", "disjunctive", 5)

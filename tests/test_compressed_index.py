@@ -41,6 +41,14 @@ def test_meta_matches_oracle(built, sm_oracle):
     assert built.avgdl == pytest.approx(sm_oracle.avgdl, rel=1e-12)
 
 
+def test_idf_equals_oracle_exactly(built, sm_oracle):
+    """Every term's idf equals the oracle's bit for bit: the reader
+    computes it from df with math.log, as the oracle does, instead of
+    reading the stored idf column, which the JVM's log wrote."""
+    terms = sorted(sm_oracle.postings)
+    assert built.idf_map(terms) == {t: sm_oracle.idf(t) for t in terms}
+
+
 def test_docid_order_isomorphic_to_conv_turn(built):
     """conv_rank is the rank of conv_id ascending, so doc_id order ==
     (conv_id, turn_idx) order (the tie-break/densification invariant,

@@ -56,6 +56,15 @@ def test_single_segment_matches_compressed_index(spark, xs_full_index):
         assert _rows(multi, q) == _rows(xs_full_index, q), q["query_text"]
 
 
+def test_ties_only_across_segments(spark, xs_full_index, three_segments):
+    """Group kernels cut exactly at k (no boundary ties, WAND allowed) on
+    one order-isomorphic root, whichever constructor opened it, and emit
+    boundary ties once doc ids come from several segments."""
+    assert xs_full_index.tie_safe is False
+    assert MultiIndex(spark, [xs_full_index.paths.root]).tie_safe is False
+    assert MultiIndex(spark, three_segments).tie_safe is True
+
+
 def test_three_segments_match_full_rebuild(spark, xs_full_index, three_segments):
     multi = MultiIndex(spark, three_segments)
     assert multi.n_docs == xs_full_index.n_docs

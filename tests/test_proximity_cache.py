@@ -61,3 +61,22 @@ def test_rerank_with_proximity(built, sm_oracle):
     bs = [b for *_x, b in out]
     assert bs == sorted(bs, reverse=True)
 
+
+
+def test_rerank_on_one_segment_live_index(spark, built):
+    """A live reader over one root reranks like the single index: the
+    candidates' ranks come from that segment's conv lookup."""
+    from search_engine_spark.index.multi import MultiIndex
+
+    live = MultiIndex(spark, [built.paths.root])
+    assert rerank_with_proximity(live, "term0001 term0002", k=10) == \
+        rerank_with_proximity(built, "term0001 term0002", k=10)
+
+
+def test_rerank_rejects_segmented_reader(spark, three_segments):
+    """Doc ids are segment-local, so a reader over several segments must
+    be compacted before a proximity rerank."""
+    from search_engine_spark.index.multi import MultiIndex
+
+    with pytest.raises(ValueError, match="compact"):
+        rerank_with_proximity(MultiIndex(spark, three_segments), "term0001 term0002", k=5)

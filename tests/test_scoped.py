@@ -248,48 +248,3 @@ def test_multi_scoped_batch_equals_per_query(spark, segments, xs_df):
         got.setdefault(r.query_id, []).append((r.conv_id, r.turn_idx, round(r.score, 9)))
     for qid, (q, m, kk) in enumerate(queries):
         assert got.get(qid, []) == _rows(multi.topk(q, m, kk, scope=scope_df)), (q, m)
-
-
-# ----------------------------------------------------- dense scheme
-
-
-def test_scoped_on_dense_streaming_index(spark, tmp_path, xs_pdf, xs_oracle):
-    """Streaming-built ('dense' docid scheme) indexes resolve scope
-    through the docmap instead of conv_rank bit math."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from search_engine_spark.streaming.ingest import IncrementalIndexer
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    schema = pa.schema(
-        [
-            pa.field("conv_id", pa.string()),
-            pa.field("turn_idx", pa.int32()),
-            pa.field("role", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("tool", pa.string()),
-            pa.field("ts", pa.timestamp("us")),
-        ]
-    )
-    pq.write_table(
-        pa.Table.from_pandas(
-            xs_pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]],
-            schema=schema,
-            preserve_index=False,
-        ),
-        str(inp / "all.parquet"),
-    )
-    ing = IncrementalIndexer(spark, str(tmp_path / "out"), BuildConfig(num_groups=2))
-    q = ing.start(str(inp), trigger_available_now=True)
-    q.awaitTermination(120)
-    idx = CompressedIndex(spark, ing.compact())
-    assert idx.scheme == "dense"
-
-    scope_df = spark.createDataFrame(xs_pdf[xs_pdf.role == "assistant"])
-    scope = _keys(xs_pdf[xs_pdf.role == "assistant"])
-    got = _rows(idx.topk("term0001 term0002", "disjunctive", 10, scope=scope_df))
-    assert got == _want(xs_oracle, "term0001 term0002", "disjunctive", 10, scope)
-    assert idx.match_count("term0001 term0002", scope=scope_df) == \
-        oracle_match_count(xs_oracle, "term0001 term0002", scope=scope)

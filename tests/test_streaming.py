@@ -1,87 +1,17 @@
-"""Structured Streaming extension tests: incremental ingestion →
-compaction → queryable index; watermarked window agg; replay idempotence."""
+"""Structured Streaming extension tests: segment-per-batch ingestion →
+live queryable index → compaction; watermarked window agg; replay
+idempotence."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.config import BuildConfig
-from search_engine_spark.corpus import generate_transcripts
 from search_engine_spark.oracle import build_oracle_index, oracle_topk
-from search_engine_spark.streaming.ingest import (
-    IncrementalIndexer,
-    windowed_event_counts,
-)
-
-
-@pytest.fixture(scope="module")
-def stream_dirs(tmp_path_factory, spark):
-    """Corpus split into 3 parquet files arriving as a stream."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = tmp_path_factory.mktemp("stream")
-    inp = base / "incoming"
-    inp.mkdir()
-    df = generate_transcripts("xs")
-    schema = pa.schema(
-        [
-            pa.field("conv_id", pa.string()),
-            pa.field("turn_idx", pa.int32()),
-            pa.field("role", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("tool", pa.string()),
-            pa.field("ts", pa.timestamp("us")),
-        ]
-    )
-    third = len(df) // 3
-    for i in range(3):
-        part = df.iloc[i * third : (i + 1) * third if i < 2 else len(df)]
-        pq.write_table(
-            pa.Table.from_pandas(part, schema=schema, preserve_index=False),
-            str(inp / f"part{i}.parquet"),
-        )
-    return str(inp), str(base / "out")
-
-
-def test_incremental_ingest_and_compact(spark, stream_dirs, xs_corpus):
-    inp, out = stream_dirs
-    ing = IncrementalIndexer(spark, out, BuildConfig(num_groups=2))
-    q = ing.start(inp, trigger_available_now=True)
-    q.awaitTermination(120)
-
-    state = ing._state()
-    assert state["next_doc_id"] == len(xs_corpus)
-
-    idx_dir = ing.compact()
-    from search_engine_spark.index.reader import CompressedIndex
-
-    idx = CompressedIndex(spark, idx_dir)
-    assert idx.n_docs == len(xs_corpus)
-
-    oracle = build_oracle_index(xs_corpus)
-    assert idx.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
-    for qtext, mode in [("term0000", "disjunctive"), ("term0001 term0002", "disjunctive"),
-                        ('"phrase alpha beta"', "phrase")]:
-        golden = oracle_topk(oracle, qtext, mode, 10)
-        got = idx.topk(qtext, mode, 10).collect()
-        assert [(r["conv_id"], r["turn_idx"]) for r in got] == [k for k, _s in golden]
-        for row, (_k, s) in zip(got, golden):
-            assert row["score"] == pytest.approx(s, abs=1e-9)
-
-
-def test_replayed_batch_is_idempotent(spark, stream_dirs, xs_corpus):
-    inp, out = stream_dirs
-    ing = IncrementalIndexer(spark, out, BuildConfig(num_groups=2))
-    state_before = ing._state()
-    # simulate the stream runner re-delivering batch 0
-    batch0 = spark.read.parquet(os.path.join(inp, "part0.parquet"))
-    ing.process_batch(batch0, 0)
-    assert ing._state() == state_before
+from search_engine_spark.streaming.ingest import windowed_event_counts
 
 
 def test_windowed_event_counts_batch_semantics(spark):
@@ -156,46 +86,16 @@ def test_windowed_event_counts_streaming(spark, tmp_path):
     }
 
 
-def test_proximity_rerank_on_dense_streaming_index(spark, stream_dirs, xs_corpus, tmp_path):
-    """rerank_with_proximity must work on a streaming-built ('dense')
-    index too — candidate doc_ids come from the docmap, not conv_rank
-    bit math (round-1 raised AttributeError here)."""
-    from search_engine_spark.index.reader import CompressedIndex
-    from search_engine_spark.operators.proximity import (
-        proximity_boost,
-        rerank_with_proximity,
-    )
-
-    inp, _ = stream_dirs
-    out = str(tmp_path / "densed")
-    ing = IncrementalIndexer(spark, out, BuildConfig(num_groups=2))
-    q = ing.start(inp, trigger_available_now=True)
-    q.awaitTermination(120)
-    idx = CompressedIndex(spark, ing.compact())
-    assert idx.scheme == "dense"
-
-    got = rerank_with_proximity(idx, "term0001 term0002", k=5)
-    assert len(got) == 5
-    oracle = build_oracle_index(xs_corpus)
-    for conv, turn, base, dist, boosted in got:
-        assert boosted == pytest.approx(base + proximity_boost(dist), abs=1e-12)
-        toks = oracle.tokens[(conv, turn)]
-        p1 = [i for i, t in enumerate(toks) if t == "term0001"]
-        p2 = [i for i, t in enumerate(toks) if t == "term0002"]
-        want = min((abs(a - b) for a in p1 for b in p2), default=None)
-        assert dist == want
-
-
 def test_dense_tie_break_survives_out_of_order_arrival(spark, tmp_path):
     """Two docs with bit-identical scores arriving in reverse (conv_id,
-    turn_idx) order: the dense-scheme kernel must not cut the doc the
-    global (conv_id, turn_idx) tie-break would keep (round-1 defect:
-    group top-k tie-broke on arrival-ordered doc_id)."""
+    turn_idx) order, each in its own segment: the group kernels must not
+    cut the doc the global (conv_id, turn_idx) tie-break would keep
+    (round-1 defect: group top-k tie-broke on arrival-ordered doc_id)."""
     import pandas as pd
-    from search_engine_spark.index.reader import CompressedIndex
 
-    out = str(tmp_path / "ooo")
-    ing = IncrementalIndexer(spark, out, BuildConfig(num_groups=1))
+    from search_engine_spark.streaming.ingest import SegmentStreamIndexer
+
+    ing = SegmentStreamIndexer(spark, str(tmp_path / "ooo"), BuildConfig(num_groups=1))
 
     def batch(conv, ts):
         return spark.createDataFrame(
@@ -211,11 +111,12 @@ def test_dense_tie_break_survives_out_of_order_arrival(spark, tmp_path):
             )
         )
 
-    # conv-b arrives FIRST → doc_id 0; conv-a second → doc_id 1
+    # conv-b arrives FIRST (segment 0, doc_id 0); conv-a second (segment
+    # 1, doc_id 0 too — doc ids are segment-local)
     ing.process_batch(batch("conv-b", "2026-01-01"), 0)
     ing.process_batch(batch("conv-a", "2026-01-02"), 1)
-    idx = CompressedIndex(spark, ing.compact())
-    assert idx.scheme == "dense"
+    idx = ing.open()
+    assert len(idx.segments) == 2
 
     rows = idx.topk("tiebreak", "disjunctive", 1).collect()
     assert len(rows) == 1
