@@ -39,6 +39,17 @@ driver-side loops over data.  The merge and block-rewrite kernels
 (:class:`PostingBatch`) run whole-batch array operations; the per-row
 Python left is the tokenize kernel's ``analyze_text`` call per turn and
 its loop building one output row per fragment.
+
+Driver-local builds: an input within ``reader.LOCAL_BUDGET_BYTES``
+(:func:`driver_rows`: Catalyst's size estimate, then the collected
+Arrow bytes) skips the Spark jobs, whose fixed cost dominates a small
+build.  :func:`build_local` runs the same phases in-process —
+:func:`rank_local` for phase 0, one :func:`_fragment_kernel` pass,
+:func:`merge_local` (the merge kernel after the shuffle's sort) and
+:func:`finalize_local` — and writes the same tables with pyarrow
+(:func:`write_table`).  Both finalizers share :func:`_commit` (lineage,
+N/avgdl, meta) and :func:`idf_of`.  Checkpoint and resume builds always
+run on Spark.
 """
 
 from __future__ import annotations
@@ -53,11 +64,16 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..config import BM25_B, BM25_K1, BuildConfig
 from ..textproc import analyze_text
 from .codec import stream_byte_offsets, varbyte_decode, varbyte_encode
+
+
+def _cols(ddl: str) -> list[str]:
+    return [f.split()[0] for f in ddl.split(",")]
+
 
 # term IS NULL rows are doclen fragments: doc_blob=delta(doc_ids),
 # dl_blob=varbyte(dls), n=doc count, sum_dl=Σdl (for avgdl).
@@ -65,7 +81,11 @@ FRAGMENTS_SCHEMA = (
     "term string, group int, n int, min_doc long, sum_dl long, "
     "doc_blob binary, tf_blob binary, pos_blob binary, dl_blob binary"
 )
-FRAGMENT_COLS = [f.split()[0] for f in FRAGMENTS_SCHEMA.split(",")]
+FRAGMENT_COLS = _cols(FRAGMENTS_SCHEMA)
+# a checkpoint group's fragment files (``group`` is their directory)
+_FRAGMENT_FILE_SCHEMA = ", ".join(
+    f.strip() for f in FRAGMENTS_SCHEMA.split(",") if f.split()[0] != "group"
+)
 # Format v5: posting blocks carry the per-posting doclen stream
 # (dl_blob) INLINE — scoring needs each candidate doc's length, and
 # serving it from the side doclen table forced every query (and every
@@ -83,6 +103,11 @@ BLOCKS_SCHEMA = (
 # block at ANY avgdl — the bound is computed at query time, which lets the
 # merge run without a corpus-stats pre-pass (single fused build job).
 DOCLEN_SCHEMA = "group int, n_docs long, sum_dl long, doc_blob binary, dl_blob binary"
+CONVS_SCHEMA = "conv_id string, conv_rank long, group int"
+IDF_SCHEMA = "term string, df long, idf double"
+# the bucket-partitioned tables as read back (partition column last)
+POSTINGS_SCHEMA = BLOCKS_SCHEMA + ", bucket int"
+IDF_READ_SCHEMA = IDF_SCHEMA + ", bucket int"
 
 NUM_BUCKETS = 64  # term-hash partitions of the postings/idf tables
 
@@ -96,6 +121,98 @@ TURN_MASK = (1 << TURN_BITS) - 1
 
 def _dir(base: str, name: str) -> str:
     return os.path.join(base, name)
+
+
+# ------------------------------------------------ driver-written tables
+
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "double": pa.float64(), "binary": pa.binary(),
+}
+_BLOB_COLS = {"doc_blob", "tf_blob", "pos_blob", "dl_blob"}
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema Spark writes for a DDL string of this module's
+    types (an all-null column keeps its declared type)."""
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in ddl.split(","))])
+
+
+def _write_parquet(table: pa.Table, path: str) -> None:
+    """One parquet file with Spark's column types and none of pyarrow's
+    extras that grow it: no Arrow schema blob, and no dictionary pages
+    or statistics on the blob columns (whose values are all distinct)."""
+    import pyarrow.parquet as pq
+
+    plain = [c for c in table.column_names if c not in _BLOB_COLS]
+    pq.write_table(table, path, store_schema=False, use_dictionary=plain, write_statistics=plain)
+
+
+def write_table(pdf: pd.DataFrame, ddl: str | None, table_dir: str, partition: str | None = None) -> None:
+    """``pdf`` as a parquet table directory written on the driver, laid
+    out as a Spark write lays it out: one file (also when empty), or
+    with ``partition`` one file per ``{partition}=N`` directory (none
+    when empty); ``ddl`` gives the schema (None: inferred from pandas)."""
+    os.makedirs(table_dir, exist_ok=True)
+    table = pa.Table.from_pandas(
+        pdf if partition is None else pdf.drop(columns=partition),
+        schema=None if ddl is None else arrow_schema(ddl), preserve_index=False,
+    )
+    name = "part-00000.snappy.parquet"
+    if partition is None:
+        _write_parquet(table, os.path.join(table_dir, name))
+    else:
+        keys = pdf[partition].to_numpy()
+        order = np.argsort(keys, kind="stable")
+        keys, table = keys[order], table.take(order)
+        cuts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]]) if len(keys) else []
+        for lo, hi in zip(cuts, np.append(cuts[1:], len(keys))):
+            d = os.path.join(table_dir, f"{partition}={keys[lo]}")
+            os.makedirs(d)
+            _write_parquet(table.slice(lo, hi - lo), os.path.join(d, name))
+
+
+def _read_frame(table_dir: str, ddl: str) -> pd.DataFrame:
+    """A local parquet table (partition dirs included) as pandas, read
+    on the driver; only ``ddl``'s file columns."""
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(table_dir)
+        for f in sorted(names)
+        if not f.startswith(("_", "."))
+    ]
+    schema = arrow_schema(ddl)
+    if not files:
+        return schema.empty_table().to_pandas()
+    return pq.read_table(files, columns=schema.names, schema=schema).to_pandas()
+
+
+def driver_rows(transcripts: DataFrame) -> pd.DataFrame | None:
+    """``transcripts``' (conv_id, turn_idx, text) rows on the driver when
+    the input is small enough to index in-process, else None (the
+    unchanged Spark plan runs).
+
+    The choice is the input's size against
+    :data:`reader.LOCAL_BUDGET_BYTES`: first Catalyst's estimate of the
+    plan (no job; a Spark-scale input is never collected), then the
+    collected rows' Arrow bytes, because a local relation is estimated
+    at 20 B per string.  Collecting a local relation launches no job, a
+    scan one.  A null conv_id keeps the Spark plan (its conv table ranks
+    a null conversation)."""
+    from . import reader
+
+    budget = reader.LOCAL_BUDGET_BYTES
+    df = transcripts.select("conv_id", "turn_idx", "text")
+    if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > budget:
+        return None
+    pdf = pd.DataFrame(df.collect(), columns=["conv_id", "turn_idx", "text"])
+    table = pa.Table.from_pandas(pdf, schema=arrow_schema("conv_id string, turn_idx int, text string"),
+                                 preserve_index=False)
+    if table.nbytes > budget or pdf.empty or pdf["conv_id"].isna().any():
+        return None
+    return pdf
 
 
 @dataclass
@@ -153,7 +270,7 @@ def conv_ranks(
     # between the two jobs (persist() alone recomputes on eviction).
     if scratch_dir is not None:
         t.write.mode("overwrite").parquet(scratch_dir)
-        t = transcripts.sparkSession.read.parquet(scratch_dir)
+        t = transcripts.sparkSession.read.schema("conv_id string, _pid int").parquet(scratch_dir)
     else:
         t = t.persist(StorageLevel.MEMORY_AND_DISK)
     counts = {r["_pid"]: r["c"] for r in t.groupBy("_pid").agg(F.count("*").alias("c")).collect()}
@@ -310,10 +427,7 @@ def _fragment_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 # ---------------------------------------------------------------- phase 3
 
 
-_BLOCK_COLS = [
-    "term", "group", "block_id", "n", "first_doc", "last_doc",
-    "doc_blob", "tf_blob", "pos_blob", "dl_blob", "max_tf", "min_dl",
-]
+_BLOCK_COLS = _cols(BLOCKS_SCHEMA)
 def _binary(stream: bytes, offsets: np.ndarray, valid: np.ndarray) -> np.ndarray:
     """Row slices ``stream[offsets[i]:offsets[i + 1]]``, None where not
     ``valid``, as an object array of bytes (sliced by Arrow, not by a
@@ -494,6 +608,10 @@ def _doclen_concat_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _bucket_col(term: Column) -> Column:
+    return F.pmod(F.xxhash64(term), F.lit(NUM_BUCKETS)).cast("int")
+
+
 def write_blocks(
     frags: DataFrame, paths: IndexPaths, shuffle_partitions: int, block_size: int
 ) -> None:
@@ -510,55 +628,52 @@ def write_blocks(
     blocks = clustered.mapInPandas(_make_merge_mapper(block_size), schema=BLOCKS_SCHEMA)
     blocks = blocks.withColumn(
         "bucket",
-        F.when(F.col("term").isNull(), F.lit(-1))
-        .otherwise(F.pmod(F.xxhash64("term"), F.lit(NUM_BUCKETS)))
-        .cast("int"),
+        F.when(F.col("term").isNull(), F.lit(-1)).otherwise(_bucket_col(F.col("term"))),
     )
     # one file per bucket dir: queries list/schedule O(query buckets)
-    # files instead of O(write tasks × buckets); the kernel stage above
-    # still ran at full parallelism — only this write stage is 65-way
-    blocks.repartition(NUM_BUCKETS + 1, "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(paths.postings)
+    # files instead of O(write tasks × buckets).  The hash key IS the
+    # bucket, so each bucket lands in one write task however many tasks
+    # adaptive execution sizes the stage to; the kernel stage above
+    # still ran at full parallelism
+    blocks.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(
+        paths.postings
+    )
 
 
-def finalize_index(
-    spark: SparkSession,
-    paths: IndexPaths,
-    num_groups: int,
-    block_size: int,
-    extra_meta: dict | None = None,
-    tokenize_metrics: list[dict] | None = None,
+def merge_local(frags: pd.DataFrame, block_size: int) -> pd.DataFrame:
+    """:func:`write_blocks` on the driver: fragment rows sorted as the
+    merge shuffle sorts them, the same merge kernel, and the bucket
+    column (``term_bucket``, the writer's xxhash64)."""
+    from .xxhash import term_bucket
+
+    frags = frags.sort_values(
+        ["term", "group", "min_doc"], na_position="first", kind="mergesort", ignore_index=True
+    )
+    out = list(_make_merge_mapper(block_size)(iter([frags])))
+    blocks = pd.concat(out, ignore_index=True) if out else pd.DataFrame(columns=_BLOCK_COLS)
+    terms = blocks["term"]
+    bucket = {t: term_bucket(t, NUM_BUCKETS) for t in terms.dropna().unique()}
+    blocks["bucket"] = terms.map(bucket).fillna(-1).astype(np.int32)
+    return blocks
+
+
+def idf_of(n_docs: int, df, log):
+    """``ln((1+N)/(1+df)) + 1`` (IndexerService.java:966) over a Spark
+    Column (``log=F.log``) or a numpy array (``log=np.log``)."""
+    return log((1.0 + n_docs) / (1.0 + df)) + 1.0
+
+
+def _commit(
+    paths: IndexPaths, stats: list, tokenize_metrics: list[dict] | None, started: float | None,
+    write_idf, num_groups: int, block_size: int, extra_meta: dict | None,
 ) -> dict:
-    """Doclen table, idf table, lineage, meta — all from the postings table.
-
-    Returns the meta dict (n_docs, avgdl, ...).
-    """
-    blocks = spark.read.parquet(paths.postings)
-
-    dl_blocks = blocks.filter(F.col("bucket") == -1).select(
-        "group", "block_id", "doc_blob", "tf_blob"
-    )
-    doclen = dl_blocks.groupBy("group").applyInPandas(
-        _doclen_concat_kernel, schema=DOCLEN_SCHEMA
-    )
-    doclen.write.mode("overwrite").parquet(paths.doclen)
-    doclen = spark.read.parquet(paths.doclen)
-
-    post_stats = (
-        blocks.filter(F.col("bucket") >= 0)
-        .groupBy("group")
-        .agg(
-            F.sum("n").alias("n_postings"),
-            F.sum(F.octet_length("pos_blob")).alias("pos_bytes"),
-            F.sum(
-                F.octet_length("doc_blob")
-                + F.octet_length("tf_blob")
-                + F.octet_length("pos_blob")
-            ).alias("bytes"),
-        )
-    )
-    lineage_rows = [
+    """The finalize steps both paths share, from the per-group rows
+    ``stats`` (group, n_docs, sum_dl, n_postings, pos_bytes, bytes;
+    None counts 0): lineage (with the build's wall seconds so far, from
+    ``started``), N and avgdl, then ``write_idf(N)``, then ``meta.json``
+    — written last, it commits the index."""
+    wall_s = round(time.perf_counter() - started, 3) if started is not None else 0.0
+    build_rows = [
         {
             "group": int(r["group"]),
             "phase": "build",
@@ -567,37 +682,15 @@ def finalize_index(
             "n_posting_rows": int(r["n_postings"] or 0),
             "pos_bytes": int(r["pos_bytes"] or 0),
             "bytes": int(r["bytes"] or 0),
-            "wall_s": 0.0,
+            "wall_s": wall_s,
             "status": "complete",
         }
-        for r in doclen.select("group", "n_docs", "sum_dl")
-        .join(post_stats, "group", "left")
-        .collect()
+        for r in stats
     ]
-    all_lineage = (tokenize_metrics or []) + lineage_rows
-    spark.createDataFrame(pd.DataFrame(all_lineage)).write.mode("overwrite").parquet(
-        paths.lineage
-    )
-
-    r = doclen.agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("tok")).collect()[0]
-    n_docs = int(r["n"] or 0)
-    avgdl = (int(r["tok"] or 0) / n_docs) if n_docs else 0.0
-
-    idf = (
-        blocks.filter(F.col("bucket") >= 0)
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"))
-        .withColumn(
-            "idf",
-            F.log((F.lit(1.0) + F.lit(float(n_docs))) / (F.lit(1.0) + F.col("df")))
-            + F.lit(1.0),
-        )
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(NUM_BUCKETS)).cast("int"))
-    )
-    idf.repartition(NUM_BUCKETS, "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(paths.idf)
-
+    write_table(pd.DataFrame((tokenize_metrics or []) + build_rows), None, paths.lineage)
+    n_docs = sum(r["n_docs"] for r in build_rows)
+    avgdl = (sum(r["n_tokens"] for r in build_rows) / n_docs) if n_docs else 0.0
+    write_idf(n_docs)
     meta = {
         "n_docs": n_docs,
         "avgdl": avgdl,
@@ -614,6 +707,137 @@ def finalize_index(
     with open(paths.meta, "w") as f:
         json.dump(meta, f, indent=2)
     return meta
+
+
+def finalize_index(
+    spark: SparkSession,
+    paths: IndexPaths,
+    num_groups: int,
+    block_size: int,
+    extra_meta: dict | None = None,
+    tokenize_metrics: list[dict] | None = None,
+    started: float | None = None,
+) -> dict:
+    """Doclen table, idf table, lineage, meta — all from the postings table.
+
+    Returns the meta dict (n_docs, avgdl, ...).  ``started`` is the
+    ``time.perf_counter()`` the build began at (lineage ``wall_s``).
+    """
+    blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(paths.postings)
+
+    dl_blocks = blocks.filter(F.col("bucket") == -1).select(
+        "group", "block_id", "doc_blob", "tf_blob"
+    )
+    doclen = dl_blocks.groupBy("group").applyInPandas(
+        _doclen_concat_kernel, schema=DOCLEN_SCHEMA
+    )
+    doclen.write.mode("overwrite").parquet(paths.doclen)
+    doclen = spark.read.schema(DOCLEN_SCHEMA).parquet(paths.doclen)
+
+    post_stats = (
+        blocks.filter(F.col("bucket") >= 0)
+        .groupBy("group")
+        .agg(
+            F.sum("n").alias("n_postings"),
+            F.sum(F.octet_length("pos_blob")).alias("pos_bytes"),
+            F.sum(
+                F.octet_length("doc_blob")
+                + F.octet_length("tf_blob")
+                + F.octet_length("pos_blob")
+            ).alias("bytes"),
+        )
+    )
+    stats = doclen.select("group", "n_docs", "sum_dl").join(post_stats, "group", "left").collect()
+
+    def write_idf(n_docs: int) -> None:
+        idf = (
+            blocks.filter(F.col("bucket") >= 0)
+            .groupBy("term")
+            .agg(F.sum("n").alias("df"))
+            .withColumn("idf", idf_of(n_docs, F.col("df"), F.log))
+            .withColumn("bucket", _bucket_col(F.col("term")))
+        )
+        idf.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(paths.idf)
+
+    return _commit(paths, stats, tokenize_metrics, started, write_idf, num_groups, block_size, extra_meta)
+
+
+def finalize_local(
+    paths: IndexPaths,
+    blocks: pd.DataFrame,
+    num_groups: int,
+    block_size: int,
+    extra_meta: dict | None = None,
+    started: float | None = None,
+) -> dict:
+    """:func:`finalize_index` on the driver, over the block rows of
+    :func:`merge_local`: the postings, doclen and idf tables are written
+    with pyarrow, and the lineage and meta are the same."""
+    write_table(blocks, BLOCKS_SCHEMA, paths.postings, partition="bucket")
+    is_dl = blocks["term"].isna()
+    parts = [_doclen_concat_kernel((g,), gdf) for g, gdf in blocks[is_dl].groupby("group", sort=True)]
+    doclen = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=_cols(DOCLEN_SCHEMA))
+    write_table(doclen, DOCLEN_SCHEMA, paths.doclen)
+
+    post = blocks[~is_dl]
+
+    def size(c: str) -> np.ndarray:
+        return post[c].map(len).to_numpy(np.int64)
+
+    post_stats = pd.DataFrame({
+        "group": post["group"].to_numpy(np.int64),
+        "n_postings": post["n"].to_numpy(np.int64),
+        "pos_bytes": size("pos_blob"),
+        "bytes": size("doc_blob") + size("tf_blob") + size("pos_blob"),
+    }).groupby("group").sum()
+    stats = (
+        doclen[["group", "n_docs", "sum_dl"]].join(post_stats, on="group").fillna(0).to_dict("records")
+    )
+
+    def write_idf(n_docs: int) -> None:
+        df = post.groupby("term")["n"].sum()
+        idf = pd.DataFrame({
+            "term": df.index.to_numpy(object),
+            "df": df.to_numpy(np.int64),
+            "idf": idf_of(n_docs, df.to_numpy(np.float64), np.log),
+        })
+        bucket = dict(zip(post["term"], post["bucket"]))
+        idf["bucket"] = idf["term"].map(bucket)
+        write_table(idf, IDF_SCHEMA, paths.idf, partition="bucket")
+
+    return _commit(paths, stats, None, started, write_idf, num_groups, block_size, extra_meta)
+
+
+def rank_local(conv_ids: pd.Series, num_groups: int) -> pd.DataFrame:
+    """:func:`conv_ranks` on the driver: the sorted distinct conv_ids
+    ranked 0..n-1, ``group`` by the same xxhash64 (``term_bucket``)."""
+    from .xxhash import term_bucket
+
+    ids = np.sort(conv_ids.unique().astype(object))
+    groups = np.fromiter((term_bucket(c, num_groups) for c in ids), dtype=np.int32, count=len(ids))
+    return pd.DataFrame({"conv_id": ids, "conv_rank": np.arange(len(ids), dtype=np.int64), "group": groups})
+
+
+def build_local(rows: pd.DataFrame, paths: IndexPaths, config: BuildConfig, started: float) -> dict:
+    """A whole build on the driver, from :func:`driver_rows`: conv ranks
+    over the sorted distinct conv_ids and ``group`` by the same xxhash64
+    as :func:`conv_ranks`, one :func:`_fragment_kernel` pass, then
+    :func:`merge_local` and :func:`finalize_local`.  The tables equal
+    the Spark plan's row for row (idf within an ulp: numpy's log, not
+    the JVM's)."""
+    convs = rank_local(rows["conv_id"], config.num_groups)
+    write_table(convs, CONVS_SCHEMA, paths.convs)
+    rank = pd.Index(convs["conv_id"]).get_indexer(rows["conv_id"]).astype(np.int64)
+    staged = pd.DataFrame({
+        "group": convs["group"].to_numpy()[rank],
+        "doc_id": (rank << TURN_BITS) + rows["turn_idx"].to_numpy(np.int64),
+        "text": rows["text"].to_numpy(object),
+    })
+    frags = pd.concat(list(_fragment_kernel(iter([staged]))), ignore_index=True)
+    return finalize_local(
+        paths, merge_local(frags, config.block_size), config.num_groups, config.block_size,
+        started=started,
+    )
 
 
 # ---------------------------------------------------------------- driver
@@ -651,7 +875,7 @@ class IndexBuilder:
             f.write("ok")
 
     def _convs(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.convs)
+        return self.spark.read.schema(CONVS_SCHEMA).parquet(self.paths.convs)
 
     def groups_done(self) -> set[int]:
         return {
@@ -700,7 +924,9 @@ class IndexBuilder:
         frags = staged.mapInPandas(_fragment_kernel, schema=FRAGMENTS_SCHEMA).drop("group")
         gdir = os.path.join(self.paths.tokens, f"group={group}")
         frags.write.mode("overwrite").parquet(gdir)
-        out = self.spark.read.parquet(gdir).withColumn("group", F.lit(group))
+        out = self.spark.read.schema(_FRAGMENT_FILE_SCHEMA).parquet(gdir).withColumn(
+            "group", F.lit(group)
+        )
         lineage = self._lineage_rows(out, round(time.time() - t0, 3))[0]
         with open(_group_done_marker(self.paths, group), "w") as f:
             json.dump(lineage, f)
@@ -734,7 +960,9 @@ class IndexBuilder:
         write_blocks(frags, self.paths, self.config.shuffle_partitions, self.config.block_size)
 
     def _tokens(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.paths.tokens).parquet(
+        return self.spark.read.schema(_FRAGMENT_FILE_SCHEMA + ", group int").option(
+            "basePath", self.paths.tokens
+        ).parquet(
             *[
                 os.path.join(self.paths.tokens, f"group={g}")
                 for g in range(self.config.num_groups)
@@ -765,6 +993,10 @@ class IndexBuilder:
     # -- entry point -------------------------------------------------
 
     def build(self, transcripts: DataFrame, resume: bool = False) -> IndexPaths:
+        """Every phase, on the driver when the input is small
+        (:func:`driver_rows`; never for checkpoint or resume builds,
+        whose unit is a Spark job per group), else as Spark jobs."""
+        started = time.perf_counter()
         if self.config.html_clean:
             # reference cleanHTML parity (PreIndexer.java:48-75): a pure
             # JVM regexp chain fused into the scan projection — zero
@@ -774,10 +1006,14 @@ class IndexBuilder:
             from ..textproc.htmlclean import clean_html_col
 
             transcripts = transcripts.withColumn("text", clean_html_col("text"))
+        rows = None if resume or self.config.checkpoint else driver_rows(transcripts)
         if not resume:
             if os.path.exists(self.paths.root):
                 shutil.rmtree(self.paths.root)
             os.makedirs(self.paths.root, exist_ok=True)
+        if rows is not None:
+            build_local(rows, self.paths, self.config, started)
+            return self.paths
         if not resume or not os.path.exists(os.path.join(self.paths.root, "_STAGED_SUCCESS")):
             self.stage(transcripts)
         if resume or self.config.checkpoint:
@@ -797,6 +1033,7 @@ class IndexBuilder:
             self.config.num_groups,
             self.config.block_size,
             tokenize_metrics=self.metrics,
+            started=started,
         )
         return self.paths
 

@@ -48,12 +48,19 @@ its own LSM segment with a SHADOW sidecar naming the superseded docs —
 O(delta) work, read through ``MultiIndex`` which excludes shadowed docs
 and corrects N/Σdl/df exactly.  A collision under the default
 ``updates=False`` still FAILS LOUDLY.
+
+``compact_segments`` folds on the driver when the segments' postings,
+doclen and convs files total at most ``reader.LOCAL_BUDGET_BYTES``
+(:func:`_compact_local`: the same checks and kernels over tables read
+with pyarrow, written by ``build.write_table``); ``extend_index`` always
+runs the Spark plan.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -62,8 +69,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import BuildConfig
 from .build import (
+    BLOCKS_SCHEMA,
+    CONVS_SCHEMA,
+    DOCLEN_SCHEMA,
     FRAGMENT_COLS,
     FRAGMENTS_SCHEMA,
+    POSTINGS_SCHEMA,
     TURN_BITS,
     TURN_MASK,
     IndexBuilder,
@@ -72,11 +83,17 @@ from .build import (
     build_index,
     conv_ranks,
     finalize_index,
+    finalize_local,
     load_layout,
+    merge_local,
+    rank_local,
     with_doc_ids,
     write_blocks,
+    write_table,
     _fragment_kernel,
+    _read_frame,
 )
+from . import reader
 from .codec import varbyte_decode
 
 _DOC_EXPLODE_SCHEMA = "conv_rank long, max_turn long"
@@ -117,7 +134,7 @@ def _assert_no_turn_overlap(
     strictly greater than that conversation's max indexed turn —
     anything else is an update/delete, which extend does not do."""
     max_turns = (
-        spark.read.parquet(old_paths.doclen)
+        spark.read.schema(DOCLEN_SCHEMA).parquet(old_paths.doclen)
         .select("doc_blob")
         .mapInPandas(_doclen_max_turn_kernel, schema=_DOC_EXPLODE_SCHEMA)
         .groupBy("conv_rank")
@@ -319,6 +336,7 @@ def compact_segments(
     Fully-deleted conversations keep a rank in the conv table (harmless:
     no posting references them).
     """
+    started = time.perf_counter()
     if not roots:
         raise ValueError("compact_segments needs at least one segment root")
     metas = [load_layout(r) for r in roots]
@@ -340,6 +358,10 @@ def compact_segments(
     os.makedirs(out_dir)
     paths = IndexPaths(out_dir)
     seg_paths = [IndexPaths(r) for r in roots]
+    extra_meta = {
+        "docid_order_isomorphic": True,
+        "compacted_from": [os.path.abspath(r) for r in roots],
+    }
 
     # shadow sidecars: segment j's shadow keys supersede every earlier
     # occurrence — compaction is where supersession becomes physical
@@ -352,13 +374,18 @@ def compact_segments(
             s.update(shadow_keys[j])
         shadow_for.append(sorted(s))
 
+    if _fold_bytes(seg_paths) <= reader.LOCAL_BUDGET_BYTES:
+        _compact_local(seg_paths, shadow_for, tombstones, paths, num_groups, block_size,
+                       extra_meta, started)
+        return paths
+
     # -- disjointness: a (conv_id, turn) indexed twice is corruption —
     # unless a later segment's sidecar shadows the earlier occurrence
     turns = None
     for p, dead in zip(seg_paths, shadow_for):
-        segc = spark.read.parquet(p.convs).select("conv_id", "conv_rank")
+        segc = spark.read.schema(CONVS_SCHEMA).parquet(p.convs).select("conv_id", "conv_rank")
         t = (
-            spark.read.parquet(p.doclen)
+            spark.read.schema(DOCLEN_SCHEMA).parquet(p.doclen)
             .select("doc_blob")
             .mapInPandas(_doclen_turns_kernel, schema=_TURNS_SCHEMA)
             .join(segc, "conv_rank")
@@ -381,55 +408,112 @@ def compact_segments(
         .collect()
     )
     if dup:
-        shown = ", ".join(f"({r.conv_id}, {r.turn_idx})" for r in dup)
-        raise ValueError(
-            f"compact_segments: segments overlap on indexed turns (e.g. {shown})"
-            " — segments must hold disjoint documents"
-        )
+        raise _overlap_error([(r.conv_id, r.turn_idx) for r in dup])
 
     # -- one global rank space over the union of conversations
     all_convs = None
     for p in seg_paths:
-        c = spark.read.parquet(p.convs).select("conv_id")
+        c = spark.read.schema(CONVS_SCHEMA).parquet(p.convs).select("conv_id")
         all_convs = c if all_convs is None else all_convs.unionByName(c)
     scratch = os.path.join(out_dir, "_convs_scratch")
     merged = conv_ranks(all_convs.distinct(), num_groups, scratch_dir=scratch)
     merged.write.mode("overwrite").parquet(paths.convs)
     shutil.rmtree(scratch, ignore_errors=True)
-    merged = spark.read.parquet(paths.convs)
+    merged = spark.read.schema(CONVS_SCHEMA).parquet(paths.convs)
 
     # -- remap every segment's blocks into fragments, one merge shuffle
-    from .reader import resolve_tombstones
-
     frags = None
     for p, dead in zip(seg_paths, shadow_for):
-        seg_convs = spark.read.parquet(p.convs)
+        seg_convs = spark.read.schema(CONVS_SCHEMA).parquet(p.convs)
         items = list(tombstones or []) + [tuple(k) for k in dead]
-        tomb = resolve_tombstones(seg_convs, items) if items else None
+        tomb = reader.resolve_tombstones(seg_convs, items) if items else None
         segc = seg_convs.select("conv_id", F.col("conv_rank").alias("old_rank"))
         mapping = segc.join(merged, "conv_id").select(
             "group", "old_rank", F.col("conv_rank").alias("new_rank")
         )
         f = (
-            spark.read.parquet(p.postings)
+            spark.read.schema(POSTINGS_SCHEMA).parquet(p.postings)
             .groupBy("group")
             .cogroup(mapping.groupBy("group"))
             .applyInPandas(_make_remap_kernel(tomb), schema=FRAGMENTS_SCHEMA)
         )
         frags = f if frags is None else frags.unionByName(f)
     write_blocks(frags, paths, shuffle_partitions, block_size)
-    finalize_index(
-        spark,
-        paths,
-        num_groups,
-        block_size,
-        extra_meta={
-            "docid_order_isomorphic": True,
-            "compacted_from": [os.path.abspath(r) for r in roots],
-        },
-        tokenize_metrics=None,
-    )
+    finalize_index(spark, paths, num_groups, block_size, extra_meta=extra_meta, started=started)
     return paths
+
+
+def _overlap_error(sample: list[tuple[str, int]]) -> ValueError:
+    shown = ", ".join(f"({c}, {t})" for c, t in sample)
+    return ValueError(
+        f"compact_segments: segments overlap on indexed turns (e.g. {shown})"
+        " — segments must hold disjoint documents"
+    )
+
+
+def _fold_bytes(seg_paths: list[IndexPaths]) -> int:
+    """Bytes of the postings, doclen and convs files a fold reads,
+    listed on the driver."""
+    return sum(
+        n
+        for p in seg_paths
+        for files in [
+            *reader._bucket_files(p.postings).values(),
+            reader._data_files(p.doclen),
+            reader._data_files(p.convs),
+        ]
+        for _, n in files
+    )
+
+
+def _compact_local(
+    seg_paths: list[IndexPaths],
+    shadow_for: list[list[tuple[str, int]]],
+    tombstones: list | None,
+    paths: IndexPaths,
+    num_groups: int,
+    block_size: int,
+    extra_meta: dict,
+    started: float,
+) -> None:
+    """:func:`compact_segments` on the driver: the segments' convs,
+    doclen and postings read with pyarrow, the same disjointness check
+    (shadowed occurrences exempt), global ranks, tombstone resolution
+    and remap kernel per group, then ``merge_local``/``finalize_local``."""
+    convs = [_read_frame(p.convs, CONVS_SCHEMA) for p in seg_paths]
+
+    turns = []
+    for c, p, dead in zip(convs, seg_paths, shadow_for):
+        t = pd.concat(list(_doclen_turns_kernel(iter([_read_frame(p.doclen, DOCLEN_SCHEMA)]))))
+        t = t.merge(c[["conv_id", "conv_rank"]], on="conv_rank")[["conv_id", "turn_idx"]]
+        if dead:
+            t = t[~pd.MultiIndex.from_frame(t).isin(dead)]
+        turns.append(t)
+    turns = pd.concat(turns, ignore_index=True)
+    dup = turns[turns.duplicated(keep=False)].drop_duplicates().head(5)
+    if len(dup):
+        raise _overlap_error(list(dup.itertuples(index=False, name=None)))
+
+    merged = rank_local(pd.concat([c["conv_id"] for c in convs]), num_groups)
+    write_table(merged, CONVS_SCHEMA, paths.convs)
+    merged = merged.rename(columns={"conv_rank": "new_rank"})
+
+    frags = []
+    for c, p, dead in zip(convs, seg_paths, shadow_for):
+        items = list(tombstones or []) + [tuple(k) for k in dead]
+        rank = dict(zip(c["conv_id"], c["conv_rank"].astype(int)))
+        tomb = reader._tombstones(items, lambda need: {k: rank[k] for k in need if k in rank}) if items else None
+        mapping = c.rename(columns={"conv_rank": "old_rank"})[["conv_id", "old_rank"]].merge(
+            merged, on="conv_id"
+        )
+        by_group = dict(tuple(mapping.groupby("group")))
+        none = mapping.iloc[:0]
+        kernel = _make_remap_kernel(tomb)
+        blocks = _read_frame(p.postings, BLOCKS_SCHEMA)
+        for g, gdf in blocks.groupby("group", sort=True):
+            frags.append(kernel((g,), gdf, by_group.get(g, none)))
+    frags = pd.concat(frags, ignore_index=True) if frags else pd.DataFrame(columns=FRAGMENT_COLS)
+    finalize_local(paths, merge_local(frags, block_size), num_groups, block_size, extra_meta, started)
 
 
 def _resolve_update_collisions(
@@ -450,7 +534,7 @@ def _resolve_update_collisions(
 
     groups = [int(r.group) for r in known.select("group").distinct().collect()]
     indexed = (
-        spark.read.parquet(old_paths.doclen)
+        spark.read.schema(DOCLEN_SCHEMA).parquet(old_paths.doclen)
         .filter(F.col("group").isin(groups))
         .select("doc_blob")
         .mapInPandas(_doclen_turns_kernel, schema=_TURNS_SCHEMA)
@@ -517,7 +601,8 @@ def extend_index(
     os.makedirs(out_dir)
     paths = IndexPaths(out_dir)
 
-    old_convs = spark.read.parquet(old_paths.convs)
+    started = time.perf_counter()
+    old_convs = spark.read.schema(CONVS_SCHEMA).parquet(old_paths.convs)
     # the delta's distinct conv set feeds ~5 downstream jobs (overlap
     # check, rank counts, rank assignment, the tokenize join) — persist
     # it once instead of re-scanning the delta per consumer
@@ -548,7 +633,7 @@ def extend_index(
     merged_convs.write.mode("overwrite").parquet(paths.convs)
     if n_new:
         shutil.rmtree(scratch, ignore_errors=True)
-    merged_convs = spark.read.parquet(paths.convs)
+    merged_convs = spark.read.schema(CONVS_SCHEMA).parquet(paths.convs)
 
     # -- append-only contract: no delta turn may already be indexed —
     # unless updates=True, where collisions become block-level drops
@@ -573,7 +658,7 @@ def extend_index(
     touched_convs = merged_convs.join(F.broadcast(delta_convs), "conv_id")
     staged = builder._parallelize_input(with_doc_ids(delta, touched_convs))
     delta_frags = staged.mapInPandas(_fragment_kernel, schema=FRAGMENTS_SCHEMA)
-    old_blocks = spark.read.parquet(old_paths.postings)
+    old_blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(old_paths.postings)
     if tomb is not None and touched_groups:
         old_frags = _blocks_as_fragments(
             old_blocks.filter(~F.col("group").isin(touched_groups))
@@ -602,7 +687,7 @@ def extend_index(
             "extended_from": os.path.abspath(index_root),
             "n_docs_before_extend": int(meta["n_docs"]),
         },
-        tokenize_metrics=None,
+        started=started,
     )
     return paths
 
@@ -689,7 +774,7 @@ def ingest_update_segment(
     hits = None
     for root, dead in zip(existing_roots, per_root_live):
         p = IndexPaths(root)
-        convs = spark.read.parquet(p.convs)
+        convs = spark.read.schema(CONVS_SCHEMA).parquet(p.convs)
         known = (
             delta_keys.select("conv_id")
             .distinct()
@@ -700,7 +785,7 @@ def ingest_update_segment(
             continue
         groups = [int(r.group) for r in known.select("group").distinct().collect()]
         seg_turns = (
-            spark.read.parquet(p.doclen)
+            spark.read.schema(DOCLEN_SCHEMA).parquet(p.doclen)
             .filter(F.col("group").isin(groups))
             .select("doc_blob", "dl_blob")
             .mapInPandas(_doclen_turns_dl_kernel, schema=_TURNS_DL_SCHEMA)

@@ -79,7 +79,7 @@ from ..oracle import (
     wildcard_to_like,
 )
 from ..textproc import analyze_query, analyze_text
-from .build import TURN_BITS, TURN_MASK, IndexPaths, load_layout
+from .build import IDF_READ_SCHEMA, POSTINGS_SCHEMA, TURN_BITS, TURN_MASK, IndexPaths, load_layout
 from .codec import varbyte_decode
 from .kernels import (
     TermPostings,
@@ -749,15 +749,11 @@ class Segment:
     def _postings(self) -> DataFrame:
         # explicit schemas: an index over an all-stopword corpus has an
         # EMPTY idf table, which schema inference cannot read
-        from .build import BLOCKS_SCHEMA
-
-        return self.spark.read.schema(BLOCKS_SCHEMA + ", bucket int").parquet(self.paths.postings)
+        return self.spark.read.schema(POSTINGS_SCHEMA).parquet(self.paths.postings)
 
     @cached_property
     def _idf(self) -> DataFrame:
-        return self.spark.read.schema("term string, df long, idf double, bucket int").parquet(
-            self.paths.idf
-        )
+        return self.spark.read.schema(IDF_READ_SCHEMA).parquet(self.paths.idf)
 
     def _buckets(self, terms: list[str]) -> list[int]:
         # driver-side XXH64 — identical to the writer's Spark xxhash64,
@@ -1591,8 +1587,9 @@ class IndexReader:
         Exact: each (seg, group) scores all candidates and collapses to
         its local top-k conversations (convs never span the groups of
         one segment — the group key is a conv_id hash), so at most
-        S·G·k rows reach the global TakeOrdered.  A conversation CAN
-        span segments (a later delta adds turns), so a window
+        S·G·k rows reach the global TakeOrdered, and on one segment the
+        kernels' collapse is final.  A conversation CAN span segments
+        (a later delta adds turns), so over several a window
         re-collapses per conv_id before the global cut; a conv whose
         best turn was cut by a segment-local top-k cannot belong to the
         global top-k (that segment already holds k better convs).
@@ -1621,15 +1618,11 @@ class IndexReader:
             exclude=self._resolve_tomb(tombstones), scoped=scope is not None,
             after=self._resolve_after(search_after),
         )
-        w = Window.partitionBy("conv_id").orderBy(F.desc("score"), F.asc("turn_idx"))
-        return (
-            self._label(self._grouped(kernel, fetch_terms, scope, RESULT_SCHEMA))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
-            .limit(k)
-        )
+        best = self._label(self._grouped(kernel, fetch_terms, scope, RESULT_SCHEMA))
+        if len(self.segments) > 1:
+            w = Window.partitionBy("conv_id").orderBy(F.desc("score"), F.asc("turn_idx"))
+            best = best.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+        return best.orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx")).limit(k)
 
     def match_count(
         self,

@@ -13,7 +13,12 @@ Spark-native extensions a transcript pipeline needs:
   at-least-once delivery).  The index is LIVE the moment the batch
   commits, queryable through ``MultiIndex`` with exact merged global
   stats, and folded by ``compact_segments`` when the segment count
-  grows.  Per-batch cost is a full small build (a few jobs).
+  grows.  A micro-batch within ``reader.LOCAL_BUDGET_BYTES`` is built,
+  and segments within it are folded, on the driver with the same
+  kernels (``build.driver_rows``, ``extend._compact_local``): a batch
+  Spark holds as a local relation commits with no Spark job, a
+  file-backed one with two (the emptiness probe and the collect).
+  Larger ones run the Spark plan.
 
 * :func:`windowed_event_counts` — watermarked tumbling-window
   aggregation over an event stream (late data handled by the
@@ -128,7 +133,7 @@ class SegmentStreamIndexer:
         if self._covered(batch_id):
             return  # replayed micro-batch (direct or folded)
         seg = self._seg_dir(batch_id)
-        if batch_df.limit(1).count() == 0:
+        if batch_df.isEmpty():  # no job on a driver-held (local) batch
             return
         tmp = seg + ".tmp"
         _sh.rmtree(tmp, ignore_errors=True)

@@ -9,19 +9,25 @@ import pytest
 
 from search_engine_spark.config import BuildConfig
 from search_engine_spark.corpus import REFERENCE_QUERIES
+from search_engine_spark.index import reader
 from search_engine_spark.index.build import build_index
 from search_engine_spark.index.reader import CompressedIndex
 
 
 @pytest.fixture(scope="module")
 def salted_and_unsalted(spark, sm_parquet, tmp_path_factory):
+    """The salted merge is the Spark plan's shuffle, so both builds are
+    forced onto it (the sm input would otherwise be indexed on the
+    driver, see tests/test_local_build.py)."""
     base = tmp_path_factory.mktemp("salt")
     tr = spark.read.parquet(sm_parquet)
     out = {}
-    for g in (1, 8):
-        d = str(base / f"g{g}")
-        build_index(spark, tr, d, BuildConfig(num_groups=g))
-        out[g] = CompressedIndex(spark, d)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(reader, "LOCAL_BUDGET_BYTES", -1)
+        for g in (1, 8):
+            d = str(base / f"g{g}")
+            build_index(spark, tr, d, BuildConfig(num_groups=g))
+            out[g] = CompressedIndex(spark, d)
     return out
 
 
